@@ -69,18 +69,17 @@ object Dedup {
     * unique=[k1,k2], a row whose k1 already exists in the destination would
     * still win the k2 dedup and wrongly shadow a later row sharing only k2.
     *
-    * Shape per column: anti-join against the destination's (trimmed) key
-    * set, then the first-wins window — both hash-partitioned on the key;
-    * small destinations broadcast.
+    * Shape per column: [[AntiDestination.dropExisting]] against the
+    * destination's trimmed key column, then the first-wins window over the
+    * survivors. The window costs one hash exchange on the key. The
+    * destination keys are broadcast; when they are too large to broadcast,
+    * the join shuffles both sides on the trimmed key and the window reuses
+    * that partitioning.
     */
   def firstWinsAnyWithDestination(df: DataFrame, keys: Seq[String],
                                   order: Seq[Column],
                                   dest: DataFrame): DataFrame =
     keys.foldLeft(df) { (d, k) =>
-      val destKeys = dest
-        .select(normKey(dest, k).as("__graft_dest_key")).distinct()
-      val kept = d.join(destKeys,
-        normKey(d, k) === col("__graft_dest_key"), "left_anti")
-      firstWins(kept, k, order)
+      firstWins(AntiDestination.dropExisting(d, dest, k), k, order)
     }
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   * The reference runs this tuple-at-a-time with a network round-trip per row
   * (cursor read, per-row exists probe, buffered batch insert). Here the
   * entire task is a single Catalyst-planned job; the per-row boundary
-  * crossings become at most two exchanges (dedup window + anti-join), both
-  * hash-partitioned on the key columns.
+  * crossings become one hash exchange per unique column, for its first-wins
+  * window. The destination's key column is broadcast to the anti joins, or
+  * shuffled by the join itself when it is too large to broadcast.
   */
 object ETLPipeline {
 

@@ -68,6 +68,24 @@ class DedupSpec extends SparkSpec {
     assert(out2.toSeq === Seq.empty)
   }
 
+  test("destination probe: duplicate, trim-variant and null destination " +
+    "keys drop each matching row once; null-keyed rows pass the probe") {
+    val src = Seq[(Int, String)]((1, "x"), (2, " x "), (3, "y"), (4, null),
+      (5, "y "), (6, null), (7, "z")).toDF("ord", "k")
+    val dst = Seq[String]("x", " x", "x ", "x", null, null, "z")
+      .toDF("k")
+    // the anti join alone: every row whose trimmed key is in dst is gone,
+    // every other row — null keys included — comes through exactly once
+    val probed = AntiDestination(src, dst, Seq("k"))
+      .collect().map(_.getInt(0)).sorted
+    assert(probed.toSeq === Seq(3, 4, 5, 6))
+    // folded into first-wins: the survivors dedup on the trimmed key, and
+    // the null keys form one group whose first row wins
+    val out = Dedup.firstWinsAnyWithDestination(src, Seq("k"),
+      Seq(col("ord")), dst).collect().map(_.getInt(0)).sorted
+    assert(out.toSeq === Seq(3, 4))
+  }
+
   test("anti-destination drops rows whose key exists in dst (trimmed)") {
     val src = Seq((1, "a "), (2, "b"), (3, "c")).toDF("id", "k")
     val dst = Seq(" a", "zz").toDF("k")

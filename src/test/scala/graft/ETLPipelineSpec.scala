@@ -50,6 +50,29 @@ class ETLPipelineSpec extends SparkSpec {
     assert(second.toMap.apply("dim_supplier") === 0L)
   }
 
+  test("re-run plan: the destination probe adds no aggregate and no " +
+    "exchange of its own — one hash exchange per unique column's window") {
+    val tmp = Files.createTempDirectory("graft_etl_plan").toString
+    val flow = PipelineSpec.parse(
+      """{"tables":[{"flow":"customer -> dim_customer",
+        |  "columns":["c_custkey","c_name","c_mktsegment"],
+        |  "unique":["c_custkey","c_name"]}]}""".stripMargin).flows.head
+    val customer = Tables.load(spark, sf, "customer")
+    Sinks.appendParquet(ETLPipeline.transform(
+      customer.filter("c_custkey <= 100"), flow, None,
+      orderCol = Some("c_custkey")), tmp)
+
+    val rerun = ETLPipeline.transform(customer, flow,
+      Some(spark.read.parquet(tmp)), orderCol = Some("c_custkey"))
+    val plan = rerun.queryExecution.executedPlan.toString
+    assert(plan.contains("LeftAnti"), s"expected anti joins:\n$plan")
+    assert(!plan.contains("HashAggregate"),
+      s"the destination keys must not be aggregated:\n$plan")
+    val n = "Exchange hashpartitioning".r.findAllIn(plan).size
+    assert(n === 2, s"expected one hash exchange per window, got $n:\n$plan")
+    assert(rerun.count() === customer.filter("c_custkey > 100").count())
+  }
+
   test("query list form: operator strings parse reference-style, coerce " +
     "string-bound values to the column type, AND-join") {
     val spec = PipelineSpec.parse(
