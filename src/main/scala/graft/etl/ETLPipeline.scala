@@ -77,18 +77,4 @@ object ETLPipeline {
     if (survived.columns.contains(orderName)) survived.drop(orderName)
     else survived
   }
-
-  /** Run every flow of a parsed config against a table-loading function,
-    * appending to parquet destinations. Flows run sequentially like the
-    * reference (sdk/etl.php:91-150); each flow is internally fully parallel.
-    */
-  def run(spec: PipelineSpec,
-          loadTable: String => DataFrame,
-          loadDestination: String => Option[DataFrame],
-          writeDestination: (String, DataFrame) => Long): Seq[(String, Long)] =
-    spec.flows.map { flow =>
-      val out = transform(loadTable(flow.from), flow,
-        loadDestination(flow.to))
-      flow.to -> writeDestination(flow.to, out)
-    }
 }

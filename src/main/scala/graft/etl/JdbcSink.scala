@@ -1,29 +1,37 @@
 package graft.etl
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{BatchUpdateException, Connection, DriverManager,
+  PreparedStatement, SQLException, Statement}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.util.LongAccumulator
 
-/** Real-database mutation sinks: batched UPDATE-else-INSERT (upsert), batched
-  * DELETE, and delete-then-insert — the destination-mutating half of the
-  * reference that plain bulk-append writers can't express (reference:
+/** Real-database mutation sinks: batched UPDATE-else-INSERT (upsert),
+  * MySQL's single-statement `INSERT … ON DUPLICATE KEY UPDATE` upsert,
+  * batched DELETE, and delete-then-insert — the destination-mutating half
+  * of the reference that plain bulk-append writers can't express
+  * (reference: sdk/lib/db.php:250-274 batched statements,
   * sdk/lib/db.php:285-319 `db_update`/`db_execute`,
   * sdk/migrate_assures.php:185-236 update-vs-insert branch and
   * delete-then-reinsert of child rows).
   *
-  * Where the reference probed and mutated ONE ROW PER ROUND-TRIP, these
-  * sinks run per-partition over the DataFrame with JDBC statement batching:
-  * each executor partition opens one connection (with the reference's
-  * retry/backoff), binds `batchSize` rows into a prepared statement, and
-  * commits per batch. The update-vs-insert branch is decided from
-  * `executeBatch`'s per-row update counts — rows whose UPDATE matched
-  * nothing are re-batched as INSERTs — so the semantics are exactly the
-  * reference's "update if present else insert" without needing a
-  * dialect-specific MERGE.
+  * Where the reference probed and mutated ONE ROW PER ROUND-TRIP, every
+  * mutation here runs through one per-partition loop ([[eachBatch]]): each
+  * executor partition opens one connection (with the reference's
+  * retry/backoff) with autocommit off, prepares its statements once, and
+  * binds, executes and commits `batchSize` rows per transaction. The
+  * upserts add the reference's failed-row contract
+  * (sdk/migrate_assures.php:419-456) through one poison-row replay
+  * ([[replaying]]): a batch that fails with a DATA error rolls back and
+  * replays row by row, each row its own transaction; rows that still fail
+  * are skipped, counted, and sampled (≤ 20 per partition). Any other
+  * failure propagates to Spark's task retry, and so does every DELETE
+  * failure.
   *
   * Identifiers are quoted with `quote` (default `"` — matches how Spark's
   * JDBC writer creates tables on Derby/Postgres; pass "`" for MySQL).
@@ -51,8 +59,9 @@ object JdbcSink {
   /** Retry policy shared by every plan-time/executor-side connection path:
     * up to `attempts`, `delayMs` apart (the reference retried everything;
     * here PERMANENT failures fail fast — SQLState class 42 (syntax /
-    * missing object) and 28 (bad credentials) can never succeed on retry,
-    * and interruption propagates instead of being slept through).
+    * missing object) or 28 (bad credentials) anywhere in the failure can
+    * never succeed on retry, and interruption propagates instead of being
+    * slept through).
     */
   private[graft] def withRetry[T](attempts: Int, delayMs: Long)(f: => T): T = {
     var last: Throwable = null
@@ -60,9 +69,7 @@ object JdbcSink {
     while (i < attempts) {
       try return f
       catch {
-        case t: InterruptedException => throw t
-        case t: Throwable if !isRetryable(t) => throw t
-        case t: Throwable =>
+        case t: Throwable if isRetryable(t) =>
           last = t
           i += 1
           if (i < attempts) Thread.sleep(delayMs)
@@ -73,18 +80,9 @@ object JdbcSink {
   }
 
   private def isRetryable(t: Throwable): Boolean = {
-    var cur = t
-    while (cur != null) {
-      cur match {
-        case _: InterruptedException => return false
-        case s: java.sql.SQLException =>
-          val state = Option(s.getSQLState).getOrElse("")
-          return !(state.startsWith("42") || state.startsWith("28"))
-        case _ => ()
-      }
-      cur = if (cur.getCause ne cur) cur.getCause else null
-    }
-    true // unknown failure → retry, like the reference did
+    val classes = sqlStateClasses(t)
+    !classes.contains("42") && !classes.contains("28") &&
+      !causes(t).exists(_.isInstanceOf[InterruptedException])
   }
 
   /** True when the failure (anywhere in the cause chain) is the database
@@ -107,31 +105,28 @@ object JdbcSink {
       classes.contains("23")
   }
 
-  /** Every SQLState class reachable through BOTH the cause chain and the
-    * SQLException `getNextException` chain — drivers wrap batch failures
-    * in a generic-state exception (Derby: class XJ) with the real
-    * constraint violation chained behind it.
+  private def sqlStateClasses(t: Throwable): Set[String] =
+    causes(t).collect { case s: SQLException => s.getSQLState }
+      .filter(st => st != null && st.length >= 2).map(_.take(2)).toSet
+
+  /** Every throwable reachable from `t` through BOTH the cause chain and
+    * the SQLException `getNextException` chain (at most 32) — drivers wrap
+    * batch failures in a generic-state exception (Derby: class XJ) with
+    * the real constraint violation chained behind it.
     */
-  private def sqlStateClasses(t: Throwable): Set[String] = {
-    val seen = scala.collection.mutable.Set[String]()
-    var frontier: List[Throwable] = List(t)
-    var budget = 32
-    while (frontier.nonEmpty && budget > 0) {
-      budget -= 1
+  private def causes(t: Throwable): Seq[Throwable] = {
+    val seen = new ArrayBuffer[Throwable]()
+    var frontier = List(t)
+    while (frontier.nonEmpty && seen.length < 32) {
       val cur = frontier.head
-      frontier = frontier.tail
-      cur match {
-        case s: java.sql.SQLException =>
-          Option(s.getSQLState).filter(_.length >= 2)
-            .foreach(st => seen += st.substring(0, 2))
-          if (s.getNextException != null && (s.getNextException ne s))
-            frontier ::= s.getNextException
-        case _ => ()
+      seen += cur
+      val next = cur match {
+        case s: SQLException => List(s.getCause, s.getNextException)
+        case _ => List(cur.getCause)
       }
-      if (cur != null && cur.getCause != null && (cur.getCause ne cur))
-        frontier ::= cur.getCause
+      frontier = next.filter(n => n != null && (n ne cur)) ++ frontier.tail
     }
-    seen.toSet
+    seen.toSeq
   }
 
   /** Outcome of a resilient upsert: rows applied, rows that failed even
@@ -150,21 +145,20 @@ object JdbcSink {
     upsertReport(df, url, table, keys, options, batchSize, quote).applied
 
   /** [[upsert]] with poison-row isolation, the reference's failed-row
-    * semantics (sdk/migrate_assures.php:419-456: collect failures, retry
-    * them individually, log what still fails and move on): when a BATCH
-    * fails, the transaction rolls back and the batch replays row by row —
-    * rows that fail alone are skipped, counted, and sampled into
-    * `errors` (≤20 per partition) instead of sinking the whole write.
+    * semantics (see [[replaying]]): rows that fail alone are skipped,
+    * counted, and sampled into `errors` (≤20 per partition) instead of
+    * sinking the whole write. The update-vs-insert branch is decided from
+    * the batched UPDATE's per-row counts — rows whose UPDATE matched
+    * nothing are re-batched as INSERTs — so the semantics are exactly the
+    * reference's "update if present else insert" without needing a
+    * dialect-specific MERGE.
     */
   def upsertReport(df: DataFrame, url: String, table: String,
                    keys: Seq[String],
                    options: Map[String, String] = Map.empty,
                    batchSize: Int = 1000,
                    quote: String = "\""): UpsertReport = {
-    val cols = df.columns.toSeq
-    val nonKeys = cols.filterNot(keys.contains)
-    require(keys.nonEmpty && nonKeys.nonEmpty,
-      s"upsert needs key and non-key columns, got keys=$keys of $cols")
+    val (cols, nonKeys) = upsertColumns(df, keys)
     // Column identifiers are quoted (Spark's JDBC writer creates them
     // quoted); the TABLE name passes through raw, exactly as Spark's own
     // writer emits it in CREATE/INSERT — quoting it here would miss tables
@@ -173,96 +167,37 @@ object JdbcSink {
     val updateSql = s"UPDATE $table SET " +
       nonKeys.map(c => s"${q(c)} = ?").mkString(", ") +
       " WHERE " + keys.map(c => s"${q(c)} = ?").mkString(" AND ")
-    val insertSql = s"INSERT INTO $table (${cols.map(q).mkString(", ")})" +
-      s" VALUES (${cols.map(_ => "?").mkString(", ")})"
     val schema = df.schema
     val updateOrder = nonKeys ++ keys
-    val driver = options.get("driver")
-    val sc = df.sparkSession.sparkContext
-    val acc = sc.longAccumulator("graft_upsert")
-    val failAcc = sc.longAccumulator("graft_upsert_failed")
-    val errAcc = sc.collectionAccumulator[String]("graft_upsert_errors")
-    df.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) withConnection(url, driver) { conn =>
-        val up = conn.prepareStatement(updateSql)
-        val upOne = conn.prepareStatement(updateSql)
-        val ins = conn.prepareStatement(insertSql)
-        val insOne = conn.prepareStatement(insertSql)
-        var errSampled = 0
-        try {
-          val buffer = new ArrayBuffer[Row](batchSize)
-          // one row, its own transaction — the poison-isolation path.
-          // Only DATA errors are swallowed; transient failures propagate
-          // to Spark's task retry.
-          def applyOne(r: Row): Boolean =
-            try {
-              bind(upOne, r, updateOrder, schema)
-              if (upOne.executeUpdate() == 0) {
-                bind(insOne, r, cols, schema)
-                insOne.executeUpdate()
-              }
-              conn.commit()
-              true
-            } catch {
-              case e: java.sql.SQLException if isDataError(e) =>
-                conn.rollback()
-                failAcc.add(1)
-                if (errSampled < 20) { errAcc.add(e.getMessage); errSampled += 1 }
-                false
-            }
-          def flush(): Unit = if (buffer.nonEmpty) {
-            try {
-              buffer.foreach { r => bind(up, r, updateOrder, schema); up.addBatch() }
-              val counts = up.executeBatch()
-              val misses = new ArrayBuffer[Row]()
-              var applied = 0L
-              var j = 0
-              while (j < counts.length) {
-                counts(j) match {
-                  case 0 => misses += buffer(j) // UPDATE matched nothing
-                  case java.sql.Statement.SUCCESS_NO_INFO =>
-                    // driver doesn't report per-row counts (Oracle, MySQL
-                    // rewriteBatchedStatements): re-run this row's UPDATE
-                    // individually to learn whether it matched — the
-                    // correctness of update-vs-insert can't ride on -2.
-                    bind(upOne, buffer(j), updateOrder, schema)
-                    if (upOne.executeUpdate() == 0) misses += buffer(j)
-                    else applied += 1
-                  case n if n < 0 =>
-                    throw new java.sql.BatchUpdateException(
-                      s"batched UPDATE failed with status $n", counts)
-                  case _ => applied += 1
-                }
-                j += 1
-              }
-              misses.foreach { r => bind(ins, r, cols, schema); ins.addBatch() }
-              if (misses.nonEmpty) { ins.executeBatch(); applied += misses.length }
-              conn.commit()
-              acc.add(applied)
-            } catch {
-              case e: java.sql.SQLException if isDataError(e) =>
-                // batch poisoned by a data error: clear any pending batch
-                // entries (a mid-bind failure leaves them staged), roll
-                // back, replay row by row so one bad row can't sink its
-                // batch-mates. Transient errors (deadlock, connection) are
-                // NOT caught — Spark's task retry re-applies the partition.
-                up.clearBatch()
-                ins.clearBatch()
-                conn.rollback()
-                acc.add(buffer.count(applyOne))
-            }
-            buffer.clear()
-          }
-          it.foreach { r =>
-            buffer += r
-            if (buffer.length >= batchSize) flush()
-          }
-          flush()
-        } finally { up.close(); upOne.close(); ins.close(); insOne.close() }
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    UpsertReport(acc.value, failAcc.value, errAcc.value.asScala.toSeq)
+    replaying(df, url, options, batchSize, "graft_upsert",
+      Seq(updateSql, insertSql(table, cols, q)))(
+      batch = { case (Seq(up, ins), rows) =>
+        rows.foreach { r => bind(up, r, updateOrder, schema); up.addBatch() }
+        val counts = up.executeBatch()
+        val misses = rows.zip(counts).filter {
+          case (_, 0) => true
+          case (r, Statement.SUCCESS_NO_INFO) =>
+            // the driver hides per-row counts (Oracle, Connector/J's
+            // rewriteBatchedStatements): re-run this row's UPDATE alone —
+            // the correctness of update-vs-insert can't ride on -2.
+            bind(up, r, updateOrder, schema)
+            up.executeUpdate() == 0
+          case (_, n) if n < 0 =>
+            throw new BatchUpdateException(
+              s"batched UPDATE failed with status $n", counts)
+          case _ => false
+        }.map(_._1)
+        misses.foreach { r => bind(ins, r, cols, schema); ins.addBatch() }
+        if (misses.nonEmpty) ins.executeBatch()
+        rows.length
+      },
+      one = { case (Seq(up, ins), r) =>
+        bind(up, r, updateOrder, schema)
+        if (up.executeUpdate() == 0) {
+          bind(ins, r, cols, schema)
+          ins.executeUpdate()
+        }
+      })
   }
 
   /** MySQL-dialect single-statement upsert: `INSERT … ON DUPLICATE KEY
@@ -273,80 +208,32 @@ object JdbcSink {
     * multi-value statement because the update clause holds no `?`).
     * Semantics match [[upsert]] when the table's PRIMARY KEY equals
     * `keys`: the source row wholly replaces the matched row's non-key
-    * columns. Poison isolation follows the same contract — a failed
-    * batch rolls back and replays row by row, data-error rows are
-    * skipped and counted. Requires the target dialect to support ODKU
-    * (MySQL/MariaDB; gated against [[MiniMySql]], which also pins the
-    * 1-inserted/2-changed/1-unchanged affected counts this method
-    * deliberately does NOT ride on).
+    * columns, and poison rows are isolated the same way. Requires the
+    * target dialect to support ODKU (MySQL/MariaDB; gated against
+    * [[MiniMySql]], which also pins the 1-inserted/2-changed/1-unchanged
+    * affected counts this method deliberately does NOT ride on — applied
+    * counts rows PROCESSED, the same meaning as [[upsert]]'s).
     */
   def upsertOnDuplicateKey(df: DataFrame, url: String, table: String,
                            keys: Seq[String],
                            options: Map[String, String] = Map.empty,
                            batchSize: Int = 1000,
                            quote: String = "`"): UpsertReport = {
-    val cols = df.columns.toSeq
-    val nonKeys = cols.filterNot(keys.contains)
-    require(keys.nonEmpty && nonKeys.nonEmpty,
-      s"upsert needs key and non-key columns, got keys=$keys of $cols")
+    val (cols, nonKeys) = upsertColumns(df, keys)
     def q(n: String) = quote + n + quote
-    val sql = s"INSERT INTO $table (${cols.map(q).mkString(", ")})" +
-      s" VALUES (${cols.map(_ => "?").mkString(", ")})" +
-      " ON DUPLICATE KEY UPDATE " +
+    val sql = insertSql(table, cols, q) + " ON DUPLICATE KEY UPDATE " +
       nonKeys.map(c => s"${q(c)} = VALUES(${q(c)})").mkString(", ")
     val schema = df.schema
-    val driver = options.get("driver")
-    val sc = df.sparkSession.sparkContext
-    val acc = sc.longAccumulator("graft_odku_upsert")
-    val failAcc = sc.longAccumulator("graft_odku_failed")
-    val errAcc = sc.collectionAccumulator[String]("graft_odku_errors")
-    df.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) withConnection(url, driver) { conn =>
-        val ins = conn.prepareStatement(sql)
-        val insOne = conn.prepareStatement(sql)
-        var errSampled = 0
-        try {
-          val buffer = new ArrayBuffer[Row](batchSize)
-          def applyOne(r: Row): Boolean =
-            try {
-              bind(insOne, r, cols, schema)
-              insOne.executeUpdate()
-              conn.commit()
-              true
-            } catch {
-              case e: java.sql.SQLException if isDataError(e) =>
-                conn.rollback()
-                failAcc.add(1)
-                if (errSampled < 20) { errAcc.add(e.getMessage); errSampled += 1 }
-                false
-            }
-          def flush(): Unit = if (buffer.nonEmpty) {
-            try {
-              buffer.foreach { r => bind(ins, r, cols, schema); ins.addBatch() }
-              ins.executeBatch()
-              conn.commit()
-              // ODKU counts conflate insert/update/no-change (1/2/1) and
-              // SUCCESS_NO_INFO hides them entirely under the rewrite —
-              // applied = rows PROCESSED, same meaning as upsert()'s
-              acc.add(buffer.length)
-            } catch {
-              case e: java.sql.SQLException if isDataError(e) =>
-                ins.clearBatch()
-                conn.rollback()
-                acc.add(buffer.count(applyOne))
-            }
-            buffer.clear()
-          }
-          it.foreach { r =>
-            buffer += r
-            if (buffer.length >= batchSize) flush()
-          }
-          flush()
-        } finally { ins.close(); insOne.close() }
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    UpsertReport(acc.value, failAcc.value, errAcc.value.asScala.toSeq)
+    replaying(df, url, options, batchSize, "graft_odku", Seq(sql))(
+      batch = { case (Seq(ins), rows) =>
+        rows.foreach { r => bind(ins, r, cols, schema); ins.addBatch() }
+        ins.executeBatch()
+        rows.length
+      },
+      one = { case (Seq(ins), r) =>
+        bind(ins, r, cols, schema)
+        ins.executeUpdate()
+      })
   }
 
   /** Delete every `table` row whose key tuple appears in `df` (distinct on
@@ -362,28 +249,12 @@ object JdbcSink {
       keys.map(c => s"${q(c)} = ?").mkString(" AND ")
     val tuples = df.select(keys.map(col): _*).distinct()
     val schema = tuples.schema
-    val driver = options.get("driver")
     val acc = df.sparkSession.sparkContext.longAccumulator("graft_delete")
-    tuples.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) withConnection(url, driver) { conn =>
-        val st = conn.prepareStatement(sql)
-        try {
-          var inBatch = 0
-          def flush(): Unit = if (inBatch > 0) {
-            acc.add(st.executeBatch().collect { case n if n > 0 => n.toLong }.sum)
-            conn.commit()
-            inBatch = 0
-          }
-          it.foreach { r =>
-            bind(st, r, keys, schema)
-            st.addBatch()
-            inBatch += 1
-            if (inBatch >= batchSize) flush()
-          }
-          flush()
-        } finally st.close()
-      }
-    }
+    eachBatch(tuples, url, options.get("driver"), batchSize, Seq(sql), acc)(
+      { case (Seq(st), rows) =>
+        rows.foreach { r => bind(st, r, keys, schema); st.addBatch() }
+        st.executeBatch().collect { case n if n > 0 => n.toLong }.sum
+      }, noRecovery)
     acc.value
   }
 
@@ -400,12 +271,101 @@ object JdbcSink {
     Sinks.jdbc(df, url, table, options)
   }
 
-  private def withConnection(url: String, driver: Option[String])
-                            (body: Connection => Unit): Unit = {
-    val conn = connect(url, driver)
-    try { conn.setAutoCommit(false); body(conn) }
-    finally conn.close()
+  /** Applies one batch on the partition's prepared statements (in `sqls`
+    * order) and returns the rows it applied; it does not commit.
+    */
+  private type BatchStep = (Seq[PreparedStatement], Seq[Row]) => Long
+
+  /** Per partition, what to do when a batch or its commit throws: given
+    * the connection and statements, a handler per batch that returns the
+    * rows it applied instead. Unhandled failures propagate.
+    */
+  private type Recovery = (Connection, Seq[PreparedStatement]) =>
+    Seq[Row] => PartialFunction[Throwable, Long]
+
+  private val noRecovery: Recovery = (_, _) => _ => PartialFunction.empty
+
+  /** The one per-partition mutation loop: one connection with autocommit
+    * off, `sqls` prepared once, then each `batchSize` rows run through
+    * `batch` and commit as one transaction, adding the rows applied to
+    * `applied`. Empty partitions open no connection.
+    */
+  private def eachBatch(df: DataFrame, url: String, driver: Option[String],
+                        batchSize: Int, sqls: Seq[String],
+                        applied: LongAccumulator)
+                       (batch: BatchStep, recover: Recovery): Unit =
+    df.foreachPartition { (it: Iterator[Row]) =>
+      if (it.hasNext) {
+        val conn = connect(url, driver)
+        try {
+          conn.setAutoCommit(false)
+          val st = sqls.map(conn.prepareStatement)
+          try {
+            val onError = recover(conn, st)
+            it.grouped(batchSize).foreach { rows =>
+              applied.add(
+                try { val n = batch(st, rows); conn.commit(); n }
+                catch onError(rows))
+            }
+          } finally st.foreach(_.close())
+        } finally conn.close()
+      }
+    }
+
+  /** [[eachBatch]] with poison-row isolation (reference
+    * sdk/migrate_assures.php:419-456: collect failures, retry them
+    * individually, log what still fails and move on). When a batch fails
+    * with a data error ([[isDataError]]), the staged batches are cleared,
+    * the transaction rolls back, and the batch replays through `one`, each
+    * row in its own transaction; a row that fails alone with a data error
+    * is rolled back, counted as failed and sampled (≤ 20 per partition).
+    */
+  private def replaying(df: DataFrame, url: String,
+                        options: Map[String, String], batchSize: Int,
+                        name: String, sqls: Seq[String])
+                       (batch: BatchStep,
+                        one: (Seq[PreparedStatement], Row) => Unit)
+      : UpsertReport = {
+    val sc = df.sparkSession.sparkContext
+    val applied = sc.longAccumulator(name)
+    val failed = sc.longAccumulator(s"${name}_failed")
+    val errors = sc.collectionAccumulator[String](s"${name}_errors")
+    eachBatch(df, url, options.get("driver"), batchSize, sqls, applied)(
+      batch, { (conn, st) =>
+        var sampled = 0
+        def alone(r: Row): Boolean =
+          try { one(st, r); conn.commit(); true }
+          catch {
+            case e: SQLException if isDataError(e) =>
+              conn.rollback()
+              failed.add(1)
+              if (sampled < 20) { errors.add(e.getMessage); sampled += 1 }
+              false
+          }
+        rows => {
+          case e: SQLException if isDataError(e) =>
+            // a mid-bind failure leaves entries staged
+            st.foreach(_.clearBatch())
+            conn.rollback()
+            rows.count(alone)
+        }
+      })
+    UpsertReport(applied.value, failed.value, errors.value.asScala.toSeq)
   }
+
+  private def upsertColumns(df: DataFrame,
+                            keys: Seq[String]): (Seq[String], Seq[String]) = {
+    val cols = df.columns.toSeq
+    val nonKeys = cols.filterNot(keys.contains)
+    require(keys.nonEmpty && nonKeys.nonEmpty,
+      s"upsert needs key and non-key columns, got keys=$keys of $cols")
+    (cols, nonKeys)
+  }
+
+  private def insertSql(table: String, cols: Seq[String],
+                        q: String => String): String =
+    s"INSERT INTO $table (${cols.map(q).mkString(", ")})" +
+      s" VALUES (${cols.map(_ => "?").mkString(", ")})"
 
   private def bind(st: PreparedStatement, row: Row, order: Seq[String],
                    schema: StructType): Unit = {

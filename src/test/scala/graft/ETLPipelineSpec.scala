@@ -1,8 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.DataFrame
-import graft.etl.{ETLPipeline, PipelineSpec, Sinks}
+import graft.etl.{ColumnMapping, ETLPipeline, PipelineSpec, Sinks}
 
 /** End-to-end config-driven run: JSON → flows → parquet destinations,
   * replicating the reference's `php etl.php config.json` entry point
@@ -24,19 +23,11 @@ class ETLPipelineSpec extends SparkSpec {
         |  "unique":["s_suppkey"]}
         |]}""".stripMargin)
 
-    def loadDest(name: String): Option[DataFrame] = {
-      val p = s"$tmp/$name"
-      if (Files.exists(java.nio.file.Paths.get(p)))
-        Some(spark.read.parquet(p))
-      else None
-    }
-
-    def runOnce(): Seq[(String, Long)] = ETLPipeline.run(
-      spec,
-      loadTable = name => Tables.load(spark, sf, name),
-      loadDestination = loadDest,
-      writeDestination = (name, df) =>
-        Sinks.appendParquet(df, s"$tmp/$name"))
+    // the CLI's per-flow path: <table>.parquet under sf, destinations
+    // appended under tmp
+    val runTs = ColumnMapping.runTimestamp()
+    def runOnce(): Seq[(String, Long)] =
+      spec.flows.map(Main.runFlow(spark, spec, _, sf, tmp, runTs))
 
     val first = runOnce()
     assert(first.toMap.apply("dim_segment") === 5L) // 5 distinct segments

@@ -93,17 +93,17 @@ class JdbcSpec extends SparkSpec {
     assert(ids() === Seq(20, 21))
   }
 
-  test("upsert isolates poison rows: rollback + row-replay, report, heal") {
-    // table with constraints the batch will violate exactly once
+  /** A table with a NOT NULL column for poison rows to violate. */
+  private def guardTable(name: String): Unit = {
     val conn = graft.etl.JdbcSink.connect(url,
       Some("org.apache.derby.jdbc.EmbeddedDriver"))
-    try {
-      val st = conn.createStatement()
-      st.execute("""CREATE TABLE t_guard ("id" INT PRIMARY KEY,
-        "name" VARCHAR(20) NOT NULL, "amount" DOUBLE)""")
-      st.close()
-    } finally conn.close()
+    try conn.createStatement().execute(s"""CREATE TABLE $name ("id" INT
+      PRIMARY KEY, "name" VARCHAR(20) NOT NULL, "amount" DOUBLE)""")
+    finally conn.close()
+  }
 
+  test("upsert isolates poison rows: rollback + row-replay, report, heal") {
+    guardTable("t_guard")
     val batch = Seq((1, "ok", 1.0), (2, null.asInstanceOf[String], 2.0),
       (3, "fine", 3.0)).toDF("id", "name", "amount")
     val report = graft.etl.JdbcSink.upsertReport(batch, url, "t_guard",
@@ -130,5 +130,53 @@ class JdbcSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("Too many attempt"))
     assert((System.nanoTime() - t0) / 1e6 >= 40) // 2 sleeps of 20ms happened
+
+    // the class decides wherever it sits in the chain: a permanent 42
+    // behind a wrapper with another state fails on the first attempt, a
+    // transient 08 behind the same wrapper is retried every attempt
+    def attemptsUntilThrow(inner: String): (Int, Throwable) = {
+      var n = 0
+      val e = intercept[Throwable] {
+        graft.etl.JdbcSink.withRetry(attempts = 3, delayMs = 20) {
+          n += 1
+          throw new java.sql.SQLException("wrap", "XJ001",
+            new java.sql.SQLException("inner", inner))
+        }
+      }
+      (n, e)
+    }
+    val (permanent, e42) = attemptsUntilThrow("42X05")
+    assert(permanent === 1)
+    assert(graft.etl.JdbcSink.isMissingRelation(e42))
+    val (transient, e08) = attemptsUntilThrow("08001")
+    assert(transient === 3)
+    assert(e08.getMessage.contains("Too many attempt"))
+  }
+
+  test("poison row after a committed batch: its batch replays, the " +
+    "batches before and after it land") {
+    guardTable("t_cross")
+    // one partition, batches {1,2} {3,null} {5}
+    val rows = Seq[(Int, String, Double)]((1, "a", 1.0), (2, "b", 2.0),
+      (3, "c", 3.0), (4, null, 4.0), (5, "e", 5.0))
+      .toDF("id", "name", "amount").coalesce(1)
+    val report = graft.etl.JdbcSink.upsertReport(rows, url, "t_cross",
+      Seq("id"), opts, batchSize = 2)
+    assert(report.applied === 4L)
+    assert(report.failed === 1L)
+    assert(Sources.jdbc(spark, url, "t_cross", opts).collect()
+      .map(_.getAs[Int]("id")).sorted.toSeq === Seq(1, 2, 3, 5))
+  }
+
+  test("error samples are capped at 20 per partition; every failure " +
+    "is still counted") {
+    guardTable("t_cap")
+    val rows = (1 to 25).map(i => (i, null.asInstanceOf[String], i.toDouble))
+      .toDF("id", "name", "amount").coalesce(1)
+    val report = graft.etl.JdbcSink.upsertReport(rows, url, "t_cap",
+      Seq("id"), opts)
+    assert(report.applied === 0L)
+    assert(report.failed === 25L)
+    assert(report.errors.size === 20)
   }
 }

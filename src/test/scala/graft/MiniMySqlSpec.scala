@@ -66,10 +66,15 @@ class MiniMySqlSpec extends SparkSpec {
     "sees it") {
     val (_, url, opts) = freshDb()
     val df = Seq((1L, "a")).toDF("id", "v")
-    val e = intercept[org.apache.spark.SparkException] {
-      JdbcSink.upsert(df, url, "missing_tbl", Seq("id"), opts, quote = "`")
+    // both upserts propagate it instead of counting the rows as failed
+    for (upsert <- Seq[() => Any](
+        () => JdbcSink.upsert(df, url, "missing_tbl", Seq("id"), opts,
+          quote = "`"),
+        () => JdbcSink.upsertOnDuplicateKey(df, url, "missing_tbl",
+          Seq("id"), opts))) {
+      val e = intercept[org.apache.spark.SparkException](upsert())
+      assert(JdbcSink.isMissingRelation(e))
     }
-    assert(JdbcSink.isMissingRelation(e))
   }
 
   test("poison rows carry MySQL 1048/23000 and are isolated, not fatal: " +
@@ -84,6 +89,20 @@ class MiniMySqlSpec extends SparkSpec {
     assert(rpt.errors.exists(_.contains("cannot be null")))
     assert(scan(db).orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (3L, "c")))
+  }
+
+  test("ODKU poison row after a committed batch: its batch replays, the " +
+    "batches before and after it land") {
+    val (db, url, opts) = freshDb()
+    // one partition, batches {1,2} {3,null} {5}
+    val rows = Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b"),
+      (3L, "c"), (4L, null), (5L, "e")).toDF("id", "v").coalesce(1)
+    val rpt = JdbcSink.upsertOnDuplicateKey(rows, url, "t", Seq("id"), opts,
+      batchSize = 2)
+    assert(rpt.applied === 4L)
+    assert(rpt.failed === 1L)
+    assert(scan(db).select("id").as[Long].collect().sorted.toSeq ===
+      Seq(1L, 2L, 3L, 5L))
   }
 
   test("delete and replaceChildren shapes parse under the dialect") {
