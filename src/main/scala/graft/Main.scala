@@ -73,14 +73,16 @@ object Main {
       }
       val progress = Progress.attach(spark,
         label = s"stage ${i + 1}", target = targets.map(_._2).sum)
-      val t0 = System.nanoTime()
+      // Each flow is timed inside its own closure: the flows of a stage
+      // run concurrently, so the stage's wall time is no one flow's time.
       val counts =
         try Orchestrator.runStages(Seq(stage.map { flow => () =>
-          runFlow(spark, spec, flow, sourceDir, destDir, runTs)
+          val t0 = System.nanoTime()
+          val (dest, n) = runFlow(spark, spec, flow, sourceDir, destDir, runTs)
+          (dest, n, (System.nanoTime() - t0) / 1e9)
         }))
         finally progress.close()
-      val secs = (System.nanoTime() - t0) / 1e9
-      counts.head.foreach { case (dest, n) =>
+      counts.head.foreach { case (dest, n, secs) =>
         val rate = if (secs > 0) f"${n / secs}%.0f rows/s" else "n/a"
         println(f"[graft]   $dest: appended $n rows in $secs%.1f s ($rate)")
       }

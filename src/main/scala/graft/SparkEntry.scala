@@ -7025,8 +7025,13 @@ object SparkEntry {
       | GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }
 
-  private val MinHashScoredCtes: String =
-    """WITH RECURSIVE toks AS (
+  /** The oracle's mirror of MinHashDedup's shingles, signature (m = 16)
+    * and bands (4 of 4 rows): `toks`, `shs`, `sig` (doc_id, sh, sig) and
+    * `bands` (doc_id, band). Every MinHash query builds on this one copy of
+    * the hash family; it is the CTE list's body, without `WITH`.
+    */
+  private val MinHashBandCtes: String =
+    """toks AS (
       |  SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS tk FROM documents),
       | shs AS (
       |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
@@ -7043,7 +7048,10 @@ object SparkEntry {
       |  SELECT doc_id, unnest(list_transform(range(0, 4),
       |    b -> md5(CAST(b AS VARCHAR) || '#' ||
       |      array_to_string(list_slice(sig, b*4 + 1, b*4 + 4), ',')))) AS band
-      |  FROM sig),
+      |  FROM sig)""".stripMargin
+
+  private val MinHashScoredCtes: String = "WITH RECURSIVE " + MinHashBandCtes +
+    """,
       | bands_f AS (
       |  SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY band) <= 1000),
       | pairs AS (
@@ -11065,30 +11073,13 @@ object SparkEntry {
         |      AND bit_count(xor(s.simhash, b.simhash)) <= 3)
         | ORDER BY doc_id""".stripMargin),
 
-    // Incremental admission mirror: the same toks/shs/sig/bands derivation
-    // as the minhash CTEs (no degenerate-bucket QUALIFY — that guard
+    // Incremental admission mirror: the shared toks/shs/sig/bands CTEs
+    // (no degenerate-bucket QUALIFY — that guard
     // belongs to the corpus index build), increment docs dropped on a
     // verified corpus collision or as the higher id of a within-increment
     // pair. Shingle-less increment docs have no bands and sail through.
-    "d9_incremental_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS tk FROM documents),
-        | shs AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-        |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS sh
-        |  FROM toks WHERE len(tk) >= 3),
-        | sig AS (
-        |  SELECT doc_id, sh, list_transform(range(0, 16),
-        |    j -> list_min(list_transform(sh,
-        |      s -> ((2*j + 1) *
-        |            (CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647)
-        |            + 7919*j + 13) % 2147483647))) AS sig
-        |  FROM shs WHERE len(sh) > 0),
-        | bands AS (
-        |  SELECT doc_id, unnest(list_transform(range(0, 4),
-        |    b -> md5(CAST(b AS VARCHAR) || '#' ||
-        |      array_to_string(list_slice(sig, b*4 + 1, b*4 + 4), ',')))) AS band
-        |  FROM sig),
+    "d9_incremental_dedup" -> ("WITH " + MinHashBandCtes +
+      """,
         | cross_drop AS (
         |  SELECT DISTINCT p.inc_id FROM (
         |    SELECT DISTINCT i.doc_id AS inc_id, c.doc_id AS corp_id
@@ -11114,7 +11105,7 @@ object SparkEntry {
         | WHERE doc_id % 10 = 0
         |  AND doc_id NOT IN (SELECT inc_id FROM cross_drop)
         |  AND doc_id NOT IN (SELECT id_b FROM inc_drop)
-        | ORDER BY doc_id""".stripMargin,
+        | ORDER BY doc_id""".stripMargin),
 
     // The five stages in SQL, CTE per stage — quality band, segment
     // first-wins + reassembly, 4-gram decontamination, domain cap on
@@ -12561,25 +12552,8 @@ object SparkEntry {
         |   AND quality >= 0.5
         | ORDER BY doc_id""".stripMargin,
 
-    "c2_neardup_dedup" ->
-      """WITH toks AS (
-        |  SELECT doc_id, regexp_extract_all(lower(text), '\S+') AS tk FROM documents),
-        | shs AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(tk) - 1),
-        |    i -> array_to_string(list_slice(tk, i, i + 2), ' '))) AS sh
-        |  FROM toks WHERE len(tk) >= 3),
-        | sig AS (
-        |  SELECT doc_id, sh, list_transform(range(0, 16),
-        |    j -> list_min(list_transform(sh,
-        |      s -> ((2*j + 1) *
-        |            (CAST(('0x' || substr(md5(s), 1, 15)) AS BIGINT) % 2147483647)
-        |            + 7919*j + 13) % 2147483647))) AS sig
-        |  FROM shs WHERE len(sh) > 0),
-        | bands AS (
-        |  SELECT doc_id, unnest(list_transform(range(0, 4),
-        |    b -> md5(CAST(b AS VARCHAR) || '#' ||
-        |      array_to_string(list_slice(sig, b*4 + 1, b*4 + 4), ',')))) AS band
-        |  FROM sig),
+    "c2_neardup_dedup" -> ("WITH " + MinHashBandCtes +
+      """,
         | bands_f AS (
         |  SELECT * FROM bands QUALIFY count(*) OVER (PARTITION BY band) <= 1000),
         | pairs AS (
@@ -12597,7 +12571,7 @@ object SparkEntry {
         |  SELECT DISTINCT id_b AS doc_id FROM scored WHERE jaccard >= 0.5)
         | SELECT lang, count(*) AS n_docs FROM documents
         |  WHERE doc_id NOT IN (SELECT doc_id FROM losers)
-        |  GROUP BY lang ORDER BY lang""".stripMargin,
+        |  GROUP BY lang ORDER BY lang""".stripMargin),
 
     "st1_stream_hourly" ->
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S')

@@ -31,19 +31,24 @@ object Orchestrator {
     }
 
   /** Convenience: run one config's flows as a single parallel stage per
-    * contiguous group of independent destinations (flows writing the same
-    * destination stay ordered).
+    * contiguous group of independent flows. A flow starts a new stage when
+    * the stage already reads or writes its destination, or writes its
+    * source: flows sharing a table run in config order, as the reference's
+    * shell sequence does, while two readers of one table stay concurrent.
     */
   def stagesByDestination(spec: PipelineSpec): Seq[Seq[FlowSpec]] = {
-    val seen = scala.collection.mutable.Set[String]()
+    val reads = scala.collection.mutable.Set[String]()
+    val writes = scala.collection.mutable.Set[String]()
     val stages = scala.collection.mutable.ArrayBuffer(
       scala.collection.mutable.ArrayBuffer[FlowSpec]())
     spec.flows.foreach { f =>
-      if (seen.contains(f.to) || seen.contains(f.from)) {
+      if (reads(f.to) || writes(f.to) || writes(f.from)) {
         stages += scala.collection.mutable.ArrayBuffer(f)
-        seen.clear()
+        reads.clear()
+        writes.clear()
       } else stages.last += f
-      seen += f.to
+      reads += f.from
+      writes += f.to
     }
     stages.map(_.toSeq).toSeq
   }

@@ -1,25 +1,36 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** MinHash + LSH near-duplicate detection:
-  * shingle → minhash signature → band → bucket-join → verify.
+/** Shingle-set similarity joins: MinHash + LSH near-duplicates, blocked and
+  * prefix-filtered exact n-gram joins, incremental admission, and exact
+  * duplicates. Every operator is built from the same steps, each written
+  * once below:
   *
-  * Hashing scheme: ONE md5 per shingle, reduced to a 60-bit integer mod
-  * 2^31-1 (`baseHash`); the m signature components derive arithmetically
-  * via the universal-hash family ((2j+1)·h + 7919j + 13) mod p
-  * (`signatureOfHashes`) — engine-portable, so the DuckDB oracle reproduces
-  * identical signatures. (A seed-prefixed md5 per component was measured
-  * 16× more hashing and abandoned.) md5 is slower than xxhash but the
-  * signature step is a narrow projection; the cost that matters at scale is
-  * the candidate join, which this reduces from O(n²) to same-bucket pairs.
+  *  - [[shingled]]: spread a too-narrow input, take the word k-shingle set
+  *    `sh`, drop shingle-less documents. The operator adds its own columns
+  *    and caches the result once.
+  *  - Signature and bands (the LSH operators): ONE md5 per shingle, reduced
+  *    to a 60-bit integer mod 2^31-1 ([[baseHash]]); the m components derive
+  *    arithmetically via the universal-hash family ((2j+1)·h + 7919j + 13)
+  *    mod p ([[signatureOfHashes]], run natively by [[signatureFused]]) —
+  *    engine-portable, so the DuckDB oracle reproduces identical signatures.
+  *    (A seed-prefixed md5 per component was measured 16× more hashing and
+  *    abandoned.) [[bandKeys]] hashes each band to a bucket key.
+  *  - [[bandPairs]]: the band self-join to distinct (id_a, id_b) pairs.
+  *  - Exact verification: [[jaccard]] over two shingle arrays, or
+  *    [[countJaccard]] from an intersection count `c` and the set sizes,
+  *    which [[overlapCounts]] produces from an inverted-index join of
+  *    [[shingleRows]].
   *
-  * Scale design: the only shuffle is the band-bucket self-join, partitioned
-  * on the band key. Skewed buckets (a band key shared by thousands of docs)
-  * are the classic hazard; AQE skew-join handles moderate skew, and
-  * `maxBucket` drops degenerate buckets outright (standard practice — a
-  * bucket with k docs yields k²/2 candidate pairs and catches only boilerplate).
+  * Scale design: the cost that matters is the candidate join, which banding
+  * reduces from O(n²) to same-bucket pairs, partitioned on the band key.
+  * Skewed buckets (a band key shared by thousands of docs) are the classic
+  * hazard; AQE skew-join handles moderate skew, and `maxBucket` drops
+  * degenerate buckets outright (standard practice — a bucket with k docs
+  * yields k²/2 candidate pairs and catches only boilerplate).
   */
 object MinHashDedup {
 
@@ -38,13 +49,9 @@ object MinHashDedup {
         i => concat_ws(" ", slice(toks, i, lit(k)))))
 
   /** Modulus for the universal-hash family (2^31 - 1, prime). */
-  val HashMod = 2147483647L
+  val HashMod: Long = graft.functions.MinHashSig.Mod
 
-  /** 60-bit base hash of one shingle, reduced mod `HashMod`. ONE md5 per
-    * shingle — the m signature components derive from it arithmetically
-    * (seeded md5 per component was measured 16× more hashing and dominated
-    * the whole pipeline at bench scale).
-    */
+  /** 60-bit base hash of one shingle, reduced mod `HashMod`. */
   def baseHash(s: Column): Column =
     conv(substring(md5(s), 1, 15), 16, 10).cast("long") % HashMod
 
@@ -60,7 +67,7 @@ object MinHashDedup {
 
   /** Convenience: signature straight from the shingle array — composable
     * interpreted form; semantically identical to [[signatureFused]], which
-    * the hot path uses.
+    * the operators use.
     */
   def signature(sh: Column, m: Int): Column =
     signatureOfHashes(transform(sh, baseHash(_)), m)
@@ -84,63 +91,119 @@ object MinHashDedup {
           slice(sig, b * lit(rowsPerBand) + 1, lit(rowsPerBand)),
           x => x.cast("string"))))))
 
-  /** Full near-dup pipeline over (idCol, textCol). Returns candidate pairs
-    * with estimated (signature-agreement) and exact (shingle-set) Jaccard,
-    * filtered to exact jaccard >= threshold.
-    */
-  /** Shingle + signature + band preparation shared by [[nearDuplicates]]
-    * and [[lshCandidatePairs]].
+  /** (idCol, keep…, sh) for every document with at least one shingle.
     *
-    * Spread: a small parquet file arrives as ONE partition, serializing
-    * all signature computation onto one core; repartitioning by id costs
-    * one narrow-row shuffle and buys full parallelism (at 100 TB the
-    * input already has enough partitions and this coalesces nothing).
-    * Shingles and signature via the fused codegen expressions
-    * (TextAnalysis.wordShingles + signatureFused — profiling showed the
-    * interpreted slice/concat shingling and the per-component lambda mins
-    * dominating this whole pipeline; an explode + m min-aggregates
-    * variant measured SLOWER still, adding a groupBy shuffle plus a join
-    * back). Cache: the frame is consumed multiple times (band explode +
-    * both sides of the verify join); at 100 TB persist to storage
-    * instead.
+    * Spread: a small parquet file arrives as ONE partition, serializing all
+    * shingling onto one core; repartitioning by id costs one narrow-row
+    * shuffle and buys full parallelism (at 100 TB the input already has
+    * enough partitions and this coalesces nothing). Shingles come from the
+    * fused codegen expression: profiling showed the interpreted
+    * slice/concat form dominating the whole LSH pipeline.
     */
-  private def prepareSignatures(docs: DataFrame, idCol: String,
-                                textCol: String, k: Int, m: Int,
-                                nBands: Int): DataFrame = {
-    val rowsPerBand = m / nBands
+  private def shingled(docs: DataFrame, idCol: String, textCol: String,
+                       k: Int, keep: Column*): DataFrame = {
     val par = docs.sparkSession.sparkContext.defaultParallelism
     val spread =
       if (docs.rdd.getNumPartitions < par) docs.repartition(par, col(idCol))
       else docs
     spread
-      .select(col(idCol), TextAnalysis.wordShingles(col(textCol), k).as("sh"))
+      .select((col(idCol) +: keep :+
+        TextAnalysis.wordShingles(col(textCol), k).as("sh")): _*)
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", signatureFused(col("sh"), m))
-      .withColumn("bands", bandKeys(col("sig"), rowsPerBand, nBands))
-      .cache()
   }
 
-  /** Distinct band-collision candidate pairs from a prepared signature
-    * frame — the UNVERIFIED output of the banding scheme.
+  /** Shingles + signature + bands, cached: the frame is consumed by the
+    * band explode and by both sides of the verify join (an explode + m
+    * min-aggregates variant of the signature measured slower, adding a
+    * groupBy shuffle plus a join back). At 100 TB persist to storage.
     */
-  private def candidatesFrom(prepared: DataFrame, idCol: String,
-                             maxBucket: Int): DataFrame = {
-    val exploded = prepared.select(col(idCol), explode(col("bands")).as("band"))
-    // Degenerate-bucket guard: quadratic pair blowup protection at scale.
-    val bucketed = exploded
-      .withColumn("bucket_n",
-        count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"))))
-      .filter(col("bucket_n") <= maxBucket)
-      .drop("bucket_n")
+  private def prepareSignatures(docs: DataFrame, idCol: String,
+                                textCol: String, k: Int, m: Int,
+                                nBands: Int): DataFrame =
+    shingled(docs, idCol, textCol, k)
+      .withColumn("sig", signatureFused(col("sh"), m))
+      .withColumn("bands", bandKeys(col("sig"), m / nBands, nBands))
+      .cache()
+
+  /** Distinct (id_a, id_b) pairs, id_a < id_b, of the ids in an (id, band)
+    * frame that share a band key.
+    */
+  private def bandPairs(bands: DataFrame, id: String,
+                        band: String): DataFrame = {
     // Alias the join key on each side: both frames share lineage, and an
     // un-renamed col("band") === col("band") resolves to the same attribute
     // (trivially true) — silently degrading the bucket join to a cross join.
-    val left = bucketed.select(col(idCol).as("id_a"), col("band").as("band_a"))
-    val right = bucketed.select(col(idCol).as("id_b"), col("band").as("band_b"))
+    val left = bands.select(col(id).as("id_a"), col(band).as("band_a"))
+    val right = bands.select(col(id).as("id_b"), col(band).as("band_b"))
     left.join(right,
         col("band_a") === col("band_b") && col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
+  }
+
+  /** Distinct band-collision candidate pairs from a prepared signature
+    * frame — the UNVERIFIED output of the banding scheme — after the
+    * degenerate-bucket guard.
+    */
+  private def candidatesFrom(prepared: DataFrame, idCol: String,
+                             maxBucket: Int): DataFrame = {
+    val bucketed = prepared
+      .select(col(idCol), explode(col("bands")).as("band"))
+      .withColumn("bucket_n", count(lit(1)).over(Window.partitionBy("band")))
+      .filter(col("bucket_n") <= maxBucket)
+      .drop("bucket_n")
+    bandPairs(bucketed, idCol, "band")
+  }
+
+  /** An (id_a, id_b) pair frame with `cols` of each side attached as
+    * `<col>_a` from `a` and `<col>_b` from `b`.
+    */
+  private def withSides(pairs: DataFrame, a: DataFrame, b: DataFrame,
+                        idCol: String, cols: String*): DataFrame = {
+    def side(df: DataFrame, s: String): DataFrame =
+      df.select((col(idCol).as(s"id_$s") +:
+        cols.map(c => col(c).as(s"${c}_$s"))): _*)
+    pairs.join(side(a, "a"), "id_a").join(side(b, "b"), "id_b")
+  }
+
+  /** Exact Jaccard of two shingle arrays. */
+  private def jaccard(a: Column, b: Column): Column =
+    size(array_intersect(a, b)).cast("double") /
+      size(array_union(a, b)).cast("double")
+
+  /** Exact Jaccard from an intersection count `c` and set sizes `sz_a`,
+    * `sz_b`: |A∪B| = |A| + |B| − |A∩B|.
+    */
+  private def countJaccard: Column = col("c").cast("double") /
+    (col("sz_a") + col("sz_b") - col("c")).cast("double")
+
+  /** One row per (document, shingle): (id_<s>, keep…, sz_<s>, s) — one side
+    * of an inverted-index pair join.
+    */
+  private def shingleRows(prepared: DataFrame, idCol: String, s: String,
+                          keep: String*): DataFrame =
+    prepared.select((col(idCol).as(s"id_$s") +: keep.map(col) :+
+      size(col("sh")).as(s"sz_$s") :+ explode(col("sh")).as("s")): _*)
+
+  /** Shared-shingle count `c` per pair of a joined [[shingleRows]] frame:
+    * (id_a, id_b, sz_a, sz_b, c). Only rows in an intersection reach the
+    * count, so pairs sharing no shingle never materialize.
+    */
+  private def overlapCounts(joined: DataFrame): DataFrame =
+    joined.groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
+      .agg(count(lit(1)).as("c"))
+
+  /** (id_a, id_b, sz_a, sz_b, c) for document pairs of one block sharing a
+    * shingle, from one equality join on (block, shingle) instead of a
+    * per-pair array_intersect over the quadratic pair space. At 100 TB the
+    * skew hazard is a shingle common to a whole block (stop-shingle) —
+    * prune those upstream if blocks are huge.
+    */
+  private def blockedOverlaps(docs: DataFrame, idCol: String, textCol: String,
+                              blockCol: String, k: Int): DataFrame = {
+    val prepared = shingled(docs, idCol, textCol, k, col(blockCol)).cache()
+    overlapCounts(shingleRows(prepared, idCol, "a", blockCol)
+      .join(shingleRows(prepared, idCol, "b", blockCol), Seq(blockCol, "s"))
+      .filter(col("id_a") < col("id_b")))
   }
 
   /** The banding scheme's raw candidate pairs (no exact verification) —
@@ -154,70 +217,37 @@ object MinHashDedup {
     candidatesFrom(prepareSignatures(docs, idCol, textCol, k, m, nBands),
       idCol, maxBucket)
 
+  /** Full near-dup pipeline over (idCol, textCol): band-collision candidate
+    * pairs with estimated (signature-agreement) and exact (shingle-set)
+    * Jaccard, filtered to exact jaccard >= threshold.
+    */
   def nearDuplicates(docs: DataFrame, idCol: String, textCol: String,
                      k: Int = 3, m: Int = 16, nBands: Int = 4,
                      threshold: Double = 0.5,
                      maxBucket: Int = 1000): DataFrame = {
     val prepared = prepareSignatures(docs, idCol, textCol, k, m, nBands)
-    val pairs = candidatesFrom(prepared, idCol, maxBucket)
-
-    val withSets = pairs
-      .join(prepared.select(col(idCol).as("id_a"), col("sh").as("sh_a"),
-        col("sig").as("sig_a")), "id_a")
-      .join(prepared.select(col(idCol).as("id_b"), col("sh").as("sh_b"),
-        col("sig").as("sig_b")), "id_b")
-
-    withSets
+    withSides(candidatesFrom(prepared, idCol, maxBucket), prepared, prepared,
+        idCol, "sh", "sig")
       .withColumn("est_jaccard",
         size(filter(zip_with(col("sig_a"), col("sig_b"), (x, y) => x === y),
           b => b)).cast("double") / m)
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "est_jaccard", "jaccard")
   }
 
   /** Direct n-gram Jaccard similarity between document pairs sharing a
     * blocking key (e.g. source, language, length band). The blocking column
-    * bounds the quadratic pair space — the equality join is the only
-    * shuffle. For unblocked discovery use `nearDuplicates` (LSH) instead.
+    * bounds the quadratic pair space. For unblocked discovery use
+    * `nearDuplicates` (LSH) instead.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
                         blockCol: String, k: Int = 3,
-                        threshold: Double = 0.3): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par, col(idCol))
-      else docs
-    // Cache: consumed by both sides of the blocked pair join. Shingling via
-    // the fused codegen expression (one generated pass per row).
-    val prepared = spread
-      .select(col(idCol), col(blockCol),
-        TextAnalysis.wordShingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
-    // Sparse-join intersection counting: explode the shingle sets and join
-    // on (block, shingle), then count matches per pair. |A∪B| follows from
-    // the sizes. This replaces per-pair array_intersect over the full
-    // quadratic pair space with one shuffle on the shingle key — pairs
-    // sharing no shingle never materialize at all (they can't pass any
-    // threshold > 0). The classic inverted-index shape; at 100 TB the
-    // skew hazard is a shingle common to a whole block (stop-shingle) —
-    // prune those upstream if blocks are huge.
-    val ea = prepared.select(col(idCol).as("id_a"), col(blockCol),
-      size(col("sh")).as("sz_a"), explode(col("sh")).as("s"))
-    val eb = prepared.select(col(idCol).as("id_b"), col(blockCol),
-      size(col("sh")).as("sz_b"), explode(col("sh")).as("s"))
-    ea.join(eb, Seq(blockCol, "s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard", col("c").cast("double") /
-        (col("sz_a") + col("sz_b") - col("c")).cast("double"))
+                        threshold: Double = 0.3): DataFrame =
+    blockedOverlaps(docs, idCol, textCol, blockCol, k)
+      .withColumn("jaccard", countJaccard)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** PREFIX-FILTERED set-similarity join (the AllPairs/PPJoin candidate
     * rule, Bayardo 2007 / Xiao 2008) — the algorithmic upgrade over
@@ -233,31 +263,22 @@ object MinHashDedup {
     *
     * Shape: one df aggregation (token-keyed), one per-doc rank window
     * (doc-keyed sort), the prefix-prefix equality join, then exact
-    * verification of the candidates only (array intersect over the two
-    * full sets — candidate count ≈ true-pair count by design). The
-    * matched set is IDENTICAL to the naive all-pairs join — the lemma
-    * moves cost, never answers — which is what the oracle replays.
+    * verification of the candidates only (candidate count ≈ true-pair
+    * count by design). The matched set is IDENTICAL to the naive all-pairs
+    * join — the lemma moves cost, never answers — which is what the oracle
+    * replays.
     */
   def prefixFilterJaccardPairs(docs: DataFrame, idCol: String,
                                textCol: String, k: Int = 3,
                                threshold: Double = 0.3): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par, col(idCol))
-      else docs
-    val prepared = spread
-      .select(col(idCol), TextAnalysis.wordShingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
+    val prepared = shingled(docs, idCol, textCol, k).cache()
     val dfreq = prepared.select(explode(col("sh")).as("s"))
       .groupBy("s").agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(idCol).orderBy(col("df"), col("s"))
-    // Cache: consumed by BOTH prefix-join sides; the initial d22 plan
-    // carried two full copies of the rank-window + df-join subtree —
-    // the cache guarantees one compute instead of relying on runtime
-    // exchange reuse across differing projections (guide §2.4). Prefix
-    // volume is Σ(1−t)|s|, the small end of the pipeline; at 100 TB
+    val w = Window.partitionBy(idCol).orderBy(col("df"), col("s"))
+    // Cache: consumed by BOTH prefix-join sides; the cache guarantees one
+    // compute of the rank-window + df-join subtree instead of relying on
+    // runtime exchange reuse across differing projections (guide §2.4).
+    // Prefix volume is Σ(1−t)|s|, the small end of the pipeline; at 100 TB
     // persist to storage. Only (id, s) is cached — the consumers never
     // read sz/df/rn, and a cache is a pruning barrier: InMemoryRelation
     // stores every column it was built with (guide §2.3).
@@ -274,22 +295,13 @@ object MinHashDedup {
     val pb = prefixes.select(col(idCol).as("id_b"), col("s"))
     val cand = pa.join(pb, "s").filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    // Exact verification COUNT-BASED, restricted to candidates: carrying
-    // full shingle ARRAYS per pair (array_intersect) was measured 19×
-    // slower at 10× on the clone corpus — 300-element arrays shuffled
-    // per pair plus interpreted array ops; the exploded equality join +
-    // codegen count agg below is d4's verify shape, paying only for
-    // rows that are IN the intersection of a candidate pair.
-    val ea = prepared.select(col(idCol).as("id_a"),
-      size(col("sh")).cast("long").as("sz_a"), explode(col("sh")).as("s"))
-    val eb = prepared.select(col(idCol).as("id_b"),
-      size(col("sh")).cast("long").as("sz_b"), explode(col("sh")).as("s"))
-    ea.join(cand, "id_a")
-      .join(eb, Seq("id_b", "s"))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(count(lit(1)).as("c"))
-      .withColumn("jaccard", col("c").cast("double") /
-        (col("sz_a") + col("sz_b") - col("c")).cast("double"))
+    // Verification counts, restricted to candidates: carrying full shingle
+    // ARRAYS per pair (array_intersect) was measured 19× slower at 10× on
+    // the clone corpus — 300-element arrays shuffled per pair plus
+    // interpreted array ops.
+    overlapCounts(shingleRows(prepared, idCol, "a").join(cand, "id_a")
+        .join(shingleRows(prepared, idCol, "b"), Seq("id_b", "s")))
+      .withColumn("jaccard", countJaccard)
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -314,45 +326,25 @@ object MinHashDedup {
                                 idCol: String, textCol: String,
                                 k: Int = 3, m: Int = 16, nBands: Int = 4,
                                 threshold: Double = 0.5): DataFrame = {
-    val rowsPerBand = m / nBands
-    def prep(df: DataFrame): DataFrame = {
-      val par = df.sparkSession.sparkContext.defaultParallelism
-      val spread =
-        if (df.rdd.getNumPartitions < par) df.repartition(par, col(idCol))
-        else df
-      spread
-        .select(col(idCol), TextAnalysis.wordShingles(col(textCol), k).as("sh"))
-        .filter(size(col("sh")) > 0)
-        .withColumn("bands",
-          bandKeys(signatureFused(col("sh"), m), rowsPerBand, nBands))
-        .cache()
-    }
-    def jaccard(a: Column, b: Column): Column =
-      size(array_intersect(a, b)).cast("double") /
-        size(array_union(a, b)).cast("double")
+    def prep(df: DataFrame): DataFrame = shingled(df, idCol, textCol, k)
+      .withColumn("bands",
+        bandKeys(signatureFused(col("sh"), m), m / nBands, nBands))
+      .cache()
     val inc = prep(increment)
     val corp = prep(corpus)
+    // pairs (id_a from the increment, id_b from `other`) at the threshold
+    def verified(pairs: DataFrame, other: DataFrame): DataFrame =
+      withSides(pairs, inc, other, idCol, "sh")
+        .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
     val incBands = inc.select(col(idCol).as("id_i"),
       explode(col("bands")).as("band_i"))
     val corpBands = corp.select(col(idCol).as("id_c"),
       explode(col("bands")).as("band_c"))
-    // corpus collision → exact verify → increment id is dropped
-    val crossDrop = incBands
-      .join(corpBands, col("band_i") === col("band_c"))
-      .select("id_i", "id_c").distinct()
-      .join(inc.select(col(idCol).as("id_i"), col("sh").as("sh_i")), "id_i")
-      .join(corp.select(col(idCol).as("id_c"), col("sh").as("sh_c")), "id_c")
-      .filter(jaccard(col("sh_i"), col("sh_c")) >= threshold)
-      .select(col("id_i").as(idCol)).distinct()
-    // within-increment pairs: canonical keeper (lower id) survives
-    val li = incBands.select(col("id_i").as("id_a"), col("band_i").as("band_a"))
-    val ri = incBands.select(col("id_i").as("id_b"), col("band_i").as("band_b"))
-    val incDrop = li.join(ri,
-        col("band_a") === col("band_b") && col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .join(inc.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(inc.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-      .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
+    val crossDrop = verified(incBands
+        .join(corpBands, col("band_i") === col("band_c"))
+        .select(col("id_i").as("id_a"), col("id_c").as("id_b")).distinct(),
+      corp).select(col("id_a").as(idCol)).distinct()
+    val incDrop = verified(bandPairs(incBands, "id_i", "band_i"), inc)
       .select(col("id_b").as(idCol)).distinct()
     increment
       .join(crossDrop, Seq(idCol), "left_anti")
@@ -363,39 +355,20 @@ object MinHashDedup {
     * companion to [[ngramJaccardPairs]]: `containment(A in B) =
     * |A∩B| / |A|`. Jaccard misses subset duplication (a paragraph pasted
     * into a much longer document scores a low union ratio); containment
-    * flags it from either side. Same inverted-index sparse join — one
-    * shuffle on (block, shingle), pairs sharing no shingle never
-    * materialize — with both direction ratios computed from the one
-    * intersection count. Pairs qualify when EITHER direction clears the
-    * threshold.
+    * flags it from either side. Same blocked intersection counts, with
+    * both direction ratios computed from the one count. Pairs qualify when
+    * EITHER direction clears the threshold.
     */
   def ngramContainmentPairs(docs: DataFrame, idCol: String, textCol: String,
                             blockCol: String, k: Int = 3,
-                            threshold: Double = 0.5): DataFrame = {
-    val par = docs.sparkSession.sparkContext.defaultParallelism
-    val spread =
-      if (docs.rdd.getNumPartitions < par) docs.repartition(par, col(idCol))
-      else docs
-    val prepared = spread
-      .select(col(idCol), col(blockCol),
-        TextAnalysis.wordShingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .cache()
-    val ea = prepared.select(col(idCol).as("id_a"), col(blockCol),
-      size(col("sh")).as("sz_a"), explode(col("sh")).as("s"))
-    val eb = prepared.select(col(idCol).as("id_b"), col(blockCol),
-      size(col("sh")).as("sz_b"), explode(col("sh")).as("s"))
-    ea.join(eb, Seq(blockCol, "s"))
-      .filter(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"), col("sz_a"), col("sz_b"))
-      .agg(count(lit(1)).as("c"))
+                            threshold: Double = 0.5): DataFrame =
+    blockedOverlaps(docs, idCol, textCol, blockCol, k)
       .withColumn("cont_a_in_b",
         col("c").cast("double") / col("sz_a").cast("double"))
       .withColumn("cont_b_in_a",
         col("c").cast("double") / col("sz_b").cast("double"))
       .filter(greatest(col("cont_a_in_b"), col("cont_b_in_a")) >= threshold)
       .select("id_a", "id_b", "cont_a_in_b", "cont_b_in_a")
-  }
 
   /** Exact duplicate groups by full-content hash — the cheap first pass of
     * any dedup stack (hash-groupBy, one shuffle on the digest).

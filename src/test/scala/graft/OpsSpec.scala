@@ -90,6 +90,44 @@ class MinHashDedupSpec extends SparkSpec {
     assert(pairs.head.getDouble(3) > 0.7)
   }
 
+  test("nearDuplicates computes shingles and signatures once, under one " +
+    "cache, with three hash exchanges above it") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object walk extends AdaptiveSparkPlanHelper
+    def hasSig(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.MinHashSig]))
+    def hashExchanges(p: SparkPlan): Int = walk.collect(p) {
+      case e: ShuffleExchangeExec
+          if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }.size
+    // three rows arrive as three partitions, fewer than the four cores,
+    // so the input is spread by id before shingling
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog again today"),
+      (2L, "the quick brown fox jumps over the lazy dog again tonight"),
+      (3L, "completely different words about spark query engines here now")
+    ).toDF("doc_id", "text")
+    val near = MinHashDedup.nearDuplicates(docs, "doc_id", "text")
+    assert(near.collect().map(r => (r.getLong(0), r.getLong(1))) ===
+      Array((1L, 2L)))
+    val plan = near.queryExecution.executedPlan
+    val caches = walk.collect(plan) { case s: InMemoryTableScanExec =>
+      s.relation.cacheBuilder }.distinct
+    assert(caches.size === 1, s"expected one cached relation:\n$plan")
+    val cached = caches.head.cachedPlan
+    assert(walk.collect(cached) { case p if hasSig(p) => p }.size === 1,
+      s"expected one minhash_sig projection in the cache:\n$cached")
+    assert(walk.find(plan)(hasSig).isEmpty,
+      s"minhash_sig computed outside the cache:\n$plan")
+    assert(hashExchanges(cached) === 1, s"expected the spread:\n$cached")
+    // the band window (one per join side) and the pair distinct
+    assert(hashExchanges(plan) === 3, s"unexpected shuffles:\n$plan")
+  }
+
   test("exact duplicates group by content hash") {
     val docs = Seq((1L, "same text"), (2L, "same text"), (3L, "other"))
       .toDF("doc_id", "text")

@@ -38,4 +38,17 @@ class OrchestratorSpec extends SparkSpec {
     assert(stages(0).map(_.to) === Seq("x", "y"))
     assert(stages(1).map(_.to) === Seq("x", "z"))
   }
+
+  test("a flow writing a table an earlier flow of the stage reads waits") {
+    val stages = Orchestrator.stagesByDestination(PipelineSpec.parse(
+      """{"tables":[{"flow":"x -> y"}, {"flow":"z -> x"}]}"""))
+    assert(stages.map(_.map(f => s"${f.from}->${f.to}")) ===
+      Seq(Seq("x->y"), Seq("z->x")))
+  }
+
+  test("flows reading the same source share a stage") {
+    val stages = Orchestrator.stagesByDestination(PipelineSpec.parse(
+      """{"tables":[{"flow":"a -> b"}, {"flow":"a -> c"}]}"""))
+    assert(stages.map(_.map(_.to)) === Seq(Seq("b", "c")))
+  }
 }
