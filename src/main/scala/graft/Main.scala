@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.etl.{ETLPipeline, Orchestrator, PipelineSpec, Sinks}
+import graft.etl.{ETLPipeline, JdbcSink, Orchestrator, PipelineSpec, Sinks}
+import graft.etl.JdbcSink.UpsertReport
 
 /** CLI entry point — parity with the reference's `php etl.php <config.json>`
   * (reference: sdk/etl.php:161, CLI parse sdk/lib/console.php:13-56).
@@ -17,7 +18,8 @@ import graft.etl.{ETLPipeline, Orchestrator, PipelineSpec, Sinks}
   * on first write). Flows run in dependency stages (sequential between
   * stages, parallel within — the shell-orchestration parity of
   * `etl/Orchestrator`), and each flow reports its appended row count like
-  * the reference's progress output.
+  * the reference's progress output, plus its failed rows and up to three of
+  * their errors when a database destination rejected some.
   */
 object Main {
 
@@ -78,13 +80,16 @@ object Main {
       val counts =
         try Orchestrator.runStages(Seq(stage.map { flow => () =>
           val t0 = System.nanoTime()
-          val (dest, n) = runFlow(spark, spec, flow, sourceDir, destDir, runTs)
-          (dest, n, (System.nanoTime() - t0) / 1e9)
+          val (dest, r) = runFlow(spark, spec, flow, sourceDir, destDir, runTs)
+          (dest, r, (System.nanoTime() - t0) / 1e9)
         }))
         finally progress.close()
-      counts.head.foreach { case (dest, n, secs) =>
-        val rate = if (secs > 0) f"${n / secs}%.0f rows/s" else "n/a"
-        println(f"[graft]   $dest: appended $n rows in $secs%.1f s ($rate)")
+      counts.head.foreach { case (dest, r, secs) =>
+        val rate = if (secs > 0) f"${r.applied / secs}%.0f rows/s" else "n/a"
+        val failed = if (r.failed == 0) "" else
+          s"; ${r.failed} failed: ${r.errors.take(3).mkString(" | ")}"
+        println(f"[graft]   $dest: appended ${r.applied} rows in $secs%.1f s" +
+          s" ($rate)$failed")
       }
     }
     spark.stop()
@@ -121,7 +126,7 @@ object Main {
           val df = etl.Sources.jdbc(spark, conn.url, flow.to, conn.options)
           Some(df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*))
         } catch {
-          case t: Throwable if etl.JdbcSink.isMissingRelation(t) => None
+          case t: Throwable if JdbcSink.isMissingRelation(t) => None
         }
       case None =>
         val p = s"$destDir/${flow.to}"
@@ -150,21 +155,23 @@ object Main {
     }
 
   /** Transform one flow and append to its destination — the database named
-    * by the config's `to` connection (reference: every task's `add_many`
-    * insert ran against the destination PDO, sdk/etl.php:128-150), or a
-    * parquet directory under destDir otherwise.
+    * by the config's `to` connection through [[JdbcSink.append]], where a
+    * row the database rejects is skipped and reported (reference: every
+    * task's `add_many` insert ran against the destination PDO,
+    * sdk/etl.php:128-150, and replayed failed rows one by one,
+    * sdk/migrate_assures.php:419-456), or a parquet directory under destDir
+    * otherwise, which reports no failures.
     */
   private[graft] def runFlow(spark: SparkSession, spec: etl.PipelineSpec,
                              flow: etl.FlowSpec, sourceDir: String,
                              destDir: String,
-                             runTs: String): (String, Long) = {
+                             runTs: String): (String, UpsertReport) = {
     val out = ETLPipeline.transform(loadTable(spark, spec, flow, sourceDir),
       flow, loadDest(spark, spec, flow, destDir), runTs = runTs)
-    spec.destinationConnection(flow) match {
-      case Some(conn) =>
-        flow.to -> Sinks.jdbc(out, conn.url, flow.to, conn.options)
+    flow.to -> (spec.destinationConnection(flow) match {
+      case Some(conn) => JdbcSink.append(out, conn.url, flow.to, conn.options)
       case None =>
-        flow.to -> Sinks.appendParquet(out, s"$destDir/${flow.to}")
-    }
+        UpsertReport(Sinks.appendParquet(out, s"$destDir/${flow.to}"), 0, Nil)
+    })
   }
 }

@@ -131,7 +131,7 @@ object SparkEntry {
       val url = s"jdbc:derby:$tmp/db;create=true"
       val opts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
       val cust = t(s, dir, "customer")
-      Sinks.jdbc(cust.filter(col("c_custkey") <= 100)
+      JdbcSink.append(cust.filter(col("c_custkey") <= 100)
         .select(col("c_custkey").as("cust_id"), col("c_name").as("name")),
         url, "t_cust", opts)
       JdbcSink.upsert(

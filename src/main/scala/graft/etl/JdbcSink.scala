@@ -1,45 +1,55 @@
 package graft.etl
 
 import java.sql.{BatchUpdateException, Connection, DriverManager,
-  PreparedStatement, SQLException, Statement}
+  PreparedStatement, SQLException, Savepoint, Statement}
+import java.util.Properties
 
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite,
+  JdbcUtils}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
 import org.apache.spark.util.LongAccumulator
 
-/** Real-database mutation sinks: batched UPDATE-else-INSERT (upsert),
-  * MySQL's single-statement `INSERT … ON DUPLICATE KEY UPDATE` upsert,
-  * batched DELETE, and delete-then-insert — the destination-mutating half
-  * of the reference that plain bulk-append writers can't express
-  * (reference: sdk/lib/db.php:250-274 batched statements,
+/** Every JDBC row write: batched append (the reference's `add_many`),
+  * batched UPDATE-else-INSERT (upsert), MySQL's single-statement
+  * `INSERT … ON DUPLICATE KEY UPDATE` upsert, batched DELETE, and
+  * delete-then-insert (reference: sdk/lib/db.php:250-274 batched statements,
   * sdk/lib/db.php:285-319 `db_update`/`db_execute`,
   * sdk/migrate_assures.php:185-236 update-vs-insert branch and
   * delete-then-reinsert of child rows).
   *
   * Where the reference probed and mutated ONE ROW PER ROUND-TRIP, every
-  * mutation here runs through one per-partition loop ([[eachBatch]]): each
+  * write here runs through one per-partition loop ([[eachBatch]]): each
   * executor partition opens one connection (with the reference's
   * retry/backoff) with autocommit off, prepares its statements once, and
-  * binds, executes and commits `batchSize` rows per transaction. The
-  * upserts add the reference's failed-row contract
-  * (sdk/migrate_assures.php:419-456) through one poison-row replay
-  * ([[replaying]]): a batch that fails with a DATA error rolls back and
-  * replays row by row, each row its own transaction; rows that still fail
-  * are skipped, counted, and sampled (≤ 20 per partition). Any other
-  * failure propagates to Spark's task retry, and so does every DELETE
-  * failure.
+  * binds and executes `batchSize` rows at a time. A mutation commits each
+  * batch as its own transaction; the append holds the whole partition in
+  * one transaction, as Spark's JDBC writer does, with a savepoint per
+  * batch. The append and the upserts add the reference's failed-row
+  * contract (sdk/migrate_assures.php:419-456) through one poison-row replay
+  * ([[replaying]]): a batch that fails with a DATA error rolls back (the
+  * append: to its savepoint) and replays row by row, each row on its own;
+  * rows that still fail are skipped, counted, and sampled (≤ 20 per
+  * partition). Any other failure rolls back what the partition has not
+  * committed and propagates to Spark's task retry, and so does every
+  * DELETE failure. The append and the ODKU upsert share one
+  * single-statement step ([[singleStatement]]).
   *
-  * Identifiers are quoted with `quote` (default `"` — matches how Spark's
-  * JDBC writer creates tables on Derby/Postgres; pass "`" for MySQL).
+  * The mutations quote identifiers with `quote` (default `"` — matches how
+  * Spark's JDBC writer creates tables on Derby/Postgres; pass "`" for
+  * MySQL); the append quotes through Spark's dialect for `url`.
   *
   * Counts come from an accumulator, so they are reporting-grade (a retried
-  * task adds twice); the STATEMENTS are idempotent — re-running an upsert
-  * leaves the table unchanged — which is the property that matters for
-  * at-least-once execution.
+  * task adds twice). The mutations' STATEMENTS are idempotent — re-running
+  * an upsert leaves the table unchanged — which is the property that
+  * matters for at-least-once execution. An append is not, so it commits a
+  * partition only at its end: a task that fails before then leaves no
+  * rows, and its retry inserts each row once.
   *
   * Duplicate keys within `df` are applied in partition order, which is not
   * deterministic across runs — dedup first (`Dedup`/`Upsert` handle this)
@@ -48,12 +58,17 @@ import org.apache.spark.util.LongAccumulator
 object JdbcSink {
 
   /** Open a connection with retry/backoff (reference sdk/lib/db.php:327-346:
-    * up to 7 attempts, 3 s apart).
+    * up to 7 attempts, 3 s apart). `options` are the ones Spark's JDBC
+    * reader takes: `driver` names the class to load, and every other entry
+    * reaches the driver as a connection property (`user`, `password`, ...;
+    * drivers ignore the keys they do not know, such as Spark's own).
     */
-  def connect(url: String, driver: Option[String] = None, attempts: Int = 7,
-              delayMs: Long = 3000): Connection = {
-    driver.foreach(Class.forName)
-    withRetry(attempts, delayMs)(DriverManager.getConnection(url))
+  def connect(url: String, options: Map[String, String] = Map.empty,
+              attempts: Int = 7, delayMs: Long = 3000): Connection = {
+    options.get("driver").foreach(Class.forName)
+    val props = new Properties()
+    (options - "driver").foreach { case (k, v) => props.setProperty(k, v) }
+    withRetry(attempts, delayMs)(DriverManager.getConnection(url, props))
   }
 
   /** Retry policy shared by every plan-time/executor-side connection path:
@@ -170,7 +185,7 @@ object JdbcSink {
     val schema = df.schema
     val updateOrder = nonKeys ++ keys
     replaying(df, url, options, batchSize, "graft_upsert",
-      Seq(updateSql, insertSql(table, cols, q)))(
+      Seq(updateSql, insertSql(table, cols, q)), wholePartition = false)(
       batch = { case (Seq(up, ins), rows) =>
         rows.foreach { r => bind(up, r, updateOrder, schema); up.addBatch() }
         val counts = up.executeBatch()
@@ -221,19 +236,38 @@ object JdbcSink {
                            quote: String = "`"): UpsertReport = {
     val (cols, nonKeys) = upsertColumns(df, keys)
     def q(n: String) = quote + n + quote
-    val sql = insertSql(table, cols, q) + " ON DUPLICATE KEY UPDATE " +
-      nonKeys.map(c => s"${q(c)} = VALUES(${q(c)})").mkString(", ")
-    val schema = df.schema
-    replaying(df, url, options, batchSize, "graft_odku", Seq(sql))(
-      batch = { case (Seq(ins), rows) =>
-        rows.foreach { r => bind(ins, r, cols, schema); ins.addBatch() }
-        ins.executeBatch()
-        rows.length
-      },
-      one = { case (Seq(ins), r) =>
-        bind(ins, r, cols, schema)
-        ins.executeUpdate()
-      })
+    singleStatement(df, url, options, batchSize, "graft_odku",
+      insertSql(table, cols, q) + " ON DUPLICATE KEY UPDATE " +
+        nonKeys.map(c => s"${q(c)} = VALUES(${q(c)})").mkString(", "),
+      wholePartition = false)
+  }
+
+  /** Append every row of `df` to `table`, creating the table when it does
+    * not exist — the reference's `add_many` batch insert
+    * (sdk/lib/db.php:250-274) with its failed-row replay (see
+    * [[replaying]]): a row that fails alone is skipped, counted and sampled
+    * instead of aborting the write. Set-up runs on the driver over one
+    * connection, through Spark's own JDBC helpers, so the table and the
+    * INSERT are the ones Spark's JDBC writer makes: a missing table is
+    * created with the dialect's type mapping and the
+    * `createTableColumnTypes`/`createTableOptions` options, identifiers are
+    * quoted by the dialect, and column names resolve against an existing
+    * table's own names (case-insensitively unless `spark.sql.caseSensitive`).
+    * Rows then go through [[singleStatement]] in 1,000-row batches, one
+    * transaction per partition (see the header).
+    */
+  def append(df: DataFrame, url: String, table: String,
+             options: Map[String, String] = Map.empty): UpsertReport = {
+    val caseSensitive = df.sparkSession.sessionState.conf.caseSensitiveAnalysis
+    val write = new JdbcOptionsInWrite(url, table, options)
+    val conn = connect(url, options)
+    val tableSchema = try JdbcUtils.getSchemaOption(conn, write).orElse {
+      JdbcUtils.createTable(conn, table, df.schema, caseSensitive, write)
+      Some(df.schema)
+    } finally conn.close()
+    singleStatement(df, url, options, 1000, "graft_append",
+      JdbcUtils.getInsertStatement(table, df.schema, tableSchema,
+        caseSensitive, JdbcDialects.get(url)), wholePartition = true)
   }
 
   /** Delete every `table` row whose key tuple appears in `df` (distinct on
@@ -250,7 +284,8 @@ object JdbcSink {
     val tuples = df.select(keys.map(col): _*).distinct()
     val schema = tuples.schema
     val acc = df.sparkSession.sparkContext.longAccumulator("graft_delete")
-    eachBatch(tuples, url, options.get("driver"), batchSize, Seq(sql), acc)(
+    eachBatch(tuples, url, options, batchSize, Seq(sql), acc,
+      wholePartition = false)(
       { case (Seq(st), rows) =>
         rows.foreach { r => bind(st, r, keys, schema); st.addBatch() }
         st.executeBatch().collect { case n if n > 0 => n.toLong }.sum
@@ -260,7 +295,8 @@ object JdbcSink {
 
   /** Delete-then-insert children against a live table (reference:
     * sdk/migrate_assures.php:205-227): remove every row whose PARENT key
-    * appears in the recomputed set, then append the recomputed rows.
+    * appears in the recomputed set, then [[append]] the recomputed rows
+    * through the shared single-statement step; returns the rows appended.
     * Idempotent by construction — a second run deletes what the first
     * inserted and re-inserts the same rows.
     */
@@ -268,7 +304,7 @@ object JdbcSink {
                       parentKeys: Seq[String],
                       options: Map[String, String] = Map.empty): Long = {
     delete(df, url, table, parentKeys, options)
-    Sinks.jdbc(df, url, table, options)
+    append(df, url, table, options).applied
   }
 
   /** Applies one batch on the partition's prepared statements (in `sqls`
@@ -277,37 +313,63 @@ object JdbcSink {
   private type BatchStep = (Seq[PreparedStatement], Seq[Row]) => Long
 
   /** Per partition, what to do when a batch or its commit throws: given
-    * the connection and statements, a handler per batch that returns the
-    * rows it applied instead. Unhandled failures propagate.
+    * the partition's [[Tx]] and statements, a handler per batch that
+    * returns the rows it applied instead. Unhandled failures propagate.
     */
-  private type Recovery = (Connection, Seq[PreparedStatement]) =>
+  private type Recovery = (Tx, Seq[PreparedStatement]) =>
     Seq[Row] => PartialFunction[Throwable, Long]
 
   private val noRecovery: Recovery = (_, _) => _ => PartialFunction.empty
 
+  /** A partition's unit of work. Per batch (the mutations), `done` commits
+    * the work and `undo` rolls it back. Over the whole partition (the
+    * append), `done` moves a savepoint past the work and `undo` rolls back
+    * to that savepoint; the partition commits once, at its end.
+    */
+  private final class Tx(conn: Connection, wholePartition: Boolean) {
+    private var mark: Savepoint =
+      if (wholePartition) conn.setSavepoint() else null
+    def done(): Unit =
+      if (mark == null) conn.commit()
+      else { conn.releaseSavepoint(mark); mark = conn.setSavepoint() }
+    def undo(): Unit =
+      if (mark == null) conn.rollback() else conn.rollback(mark)
+  }
+
   /** The one per-partition mutation loop: one connection with autocommit
     * off, `sqls` prepared once, then each `batchSize` rows run through
-    * `batch` and commit as one transaction, adding the rows applied to
-    * `applied`. Empty partitions open no connection.
+    * `batch` and end one [[Tx]] unit, adding the rows applied to `applied`;
+    * the partition commits at its end. A failure rolls back what the
+    * partition has not committed — with `wholePartition`, all of it — so a
+    * task retry starts from a clean slate. Empty partitions open no
+    * connection.
     */
-  private def eachBatch(df: DataFrame, url: String, driver: Option[String],
-                        batchSize: Int, sqls: Seq[String],
-                        applied: LongAccumulator)
+  private def eachBatch(df: DataFrame, url: String,
+                        options: Map[String, String], batchSize: Int,
+                        sqls: Seq[String], applied: LongAccumulator,
+                        wholePartition: Boolean)
                        (batch: BatchStep, recover: Recovery): Unit =
     df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
-        val conn = connect(url, driver)
+        val conn = connect(url, options)
         try {
           conn.setAutoCommit(false)
           val st = sqls.map(conn.prepareStatement)
           try {
-            val onError = recover(conn, st)
+            val tx = new Tx(conn, wholePartition)
+            val onError = recover(tx, st)
             it.grouped(batchSize).foreach { rows =>
               applied.add(
-                try { val n = batch(st, rows); conn.commit(); n }
+                try { val n = batch(st, rows); tx.done(); n }
                 catch onError(rows))
             }
+            conn.commit()
           } finally st.foreach(_.close())
+        } catch {
+          case t: Throwable =>
+            try conn.rollback()
+            catch { case e: SQLException => t.addSuppressed(e) }
+            throw t
         } finally conn.close()
       }
     }
@@ -316,13 +378,14 @@ object JdbcSink {
     * sdk/migrate_assures.php:419-456: collect failures, retry them
     * individually, log what still fails and move on). When a batch fails
     * with a data error ([[isDataError]]), the staged batches are cleared,
-    * the transaction rolls back, and the batch replays through `one`, each
-    * row in its own transaction; a row that fails alone with a data error
-    * is rolled back, counted as failed and sampled (≤ 20 per partition).
+    * the batch's [[Tx]] unit is undone, and the batch replays through
+    * `one`, each row its own unit; a row that fails alone with a data error
+    * is undone, counted as failed and sampled (≤ 20 per partition).
     */
   private def replaying(df: DataFrame, url: String,
                         options: Map[String, String], batchSize: Int,
-                        name: String, sqls: Seq[String])
+                        name: String, sqls: Seq[String],
+                        wholePartition: Boolean)
                        (batch: BatchStep,
                         one: (Seq[PreparedStatement], Row) => Unit)
       : UpsertReport = {
@@ -330,14 +393,14 @@ object JdbcSink {
     val applied = sc.longAccumulator(name)
     val failed = sc.longAccumulator(s"${name}_failed")
     val errors = sc.collectionAccumulator[String](s"${name}_errors")
-    eachBatch(df, url, options.get("driver"), batchSize, sqls, applied)(
-      batch, { (conn, st) =>
+    eachBatch(df, url, options, batchSize, sqls, applied, wholePartition)(
+      batch, { (tx, st) =>
         var sampled = 0
         def alone(r: Row): Boolean =
-          try { one(st, r); conn.commit(); true }
+          try { one(st, r); tx.done(); true }
           catch {
             case e: SQLException if isDataError(e) =>
-              conn.rollback()
+              tx.undo()
               failed.add(1)
               if (sampled < 20) { errors.add(e.getMessage); sampled += 1 }
               false
@@ -346,11 +409,33 @@ object JdbcSink {
           case e: SQLException if isDataError(e) =>
             // a mid-bind failure leaves entries staged
             st.foreach(_.clearBatch())
-            conn.rollback()
+            tx.undo()
             rows.count(alone)
         }
       })
     UpsertReport(applied.value, failed.value, errors.value.asScala.toSeq)
+  }
+
+  /** The one single-statement step, shared by [[append]] and
+    * [[upsertOnDuplicateKey]]: `sql` takes every column of `df` in order; a
+    * batch binds each row and executes once, a replayed row executes alone.
+    */
+  private def singleStatement(df: DataFrame, url: String,
+                              options: Map[String, String], batchSize: Int,
+                              name: String, sql: String,
+                              wholePartition: Boolean): UpsertReport = {
+    val cols = df.columns.toSeq
+    val schema = df.schema
+    replaying(df, url, options, batchSize, name, Seq(sql), wholePartition)(
+      batch = { case (Seq(st), rows) =>
+        rows.foreach { r => bind(st, r, cols, schema); st.addBatch() }
+        st.executeBatch()
+        rows.length
+      },
+      one = { case (Seq(st), r) =>
+        bind(st, r, cols, schema)
+        st.executeUpdate()
+      })
   }
 
   private def upsertColumns(df: DataFrame,

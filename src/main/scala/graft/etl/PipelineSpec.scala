@@ -37,8 +37,8 @@ final case class FlowSpec(
 /** A named JDBC endpoint from the config's `connections` block
   * (reference: sdk/etl.php:128-132 — per-table connection override falls
   * back to the global `from`/`to` pair; sdk/src/SQLConnectionFactory.php
-  * builds the DSN). `options` feeds `Sources.jdbc`/`Sinks.jdbc` verbatim
-  * (driver, user, password, ...).
+  * builds the DSN). `options` feeds `Sources.jdbc` and `JdbcSink`
+  * verbatim (driver, user, password, ...).
   */
 final case class ConnectionSpec(url: String, options: Map[String, String])
 

@@ -3,14 +3,17 @@ package graft.etl
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** Sink writers — set-based replacements for the reference's row/batch
-  * INSERT paths (reference: sdk/lib/db.php:220-274 — single-row named-param
-  * INSERT and one multi-row batched INSERT per task; sdk/src/SQLTable.php:28-36).
+/** File and table sink writers — set-based replacements for the
+  * reference's row/batch INSERT paths (reference: sdk/lib/db.php:220-274 —
+  * single-row named-param INSERT and one multi-row batched INSERT per task;
+  * sdk/src/SQLTable.php:28-36).
   *
-  * Spark has no row-at-a-time write; every sink is a partitioned bulk write
-  * with the job-commit protocol supplying the atomicity the reference got
-  * from transactions (sdk/migrate_employeur.php:196-219). Returns the row
-  * count, mirroring the reference's affected-row reporting.
+  * Every sink here is a partitioned bulk write with the job-commit protocol
+  * supplying the atomicity the reference got from transactions
+  * (sdk/migrate_employeur.php:196-219). Returns the row count, mirroring
+  * the reference's affected-row reporting. Database writes go through
+  * [[JdbcSink]] instead: row batches with the reference's failed-row
+  * replay.
   */
 object Sinks {
 
@@ -77,17 +80,6 @@ object Sinks {
     */
   def json(df: DataFrame, path: String): Long =
     counted(df)(_.write.mode("overwrite").json(path))
-
-  /** JDBC append — `batchsize` replaces the reference's hand-rolled
-    * multi-row INSERT batching (sdk/lib/db.php:250-274).
-    */
-  def jdbc(df: DataFrame, url: String, table: String,
-           options: Map[String, String] = Map.empty): Long =
-    counted(df) { d =>
-      d.write.format("jdbc").mode("append")
-        .option("url", url).option("dbtable", table)
-        .option("batchsize", "10000").options(options).save()
-    }
 
   /** Small-file compaction: rewrite a parquet directory into files of
     * roughly `targetFileMB` each. Streaming/append pipelines accumulate

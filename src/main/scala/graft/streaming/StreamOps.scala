@@ -1339,8 +1339,9 @@ object StreamOps {
     * Replay idempotence comes from the upsert itself (update-else-insert).
     *
     * The serving table is created empty with the key column typed VARCHAR:
-    * Spark's JDBC writer maps StringType to CLOB on Derby, and CLOB keys
-    * cannot sit in an UPDATE ... WHERE comparison.
+    * Spark's JDBC type mapping (which [[graft.etl.JdbcSink.append]] creates
+    * tables with) maps StringType to CLOB on Derby, and CLOB keys cannot sit
+    * in an UPDATE ... WHERE comparison.
     */
   def streamingJdbcAggUpsert(spark: SparkSession, dir: String, url: String,
                              table: String, options: Map[String, String],
@@ -1353,7 +1354,7 @@ object StreamOps {
       .select(col("event_type"), col("value"))
     ev.repartition(nBatches, col("event_type"))
       .write.mode("overwrite").parquet(src)
-    graft.etl.Sinks.jdbc(
+    graft.etl.JdbcSink.append(
       ev.limit(0).select(col("event_type"),
         lit(0L).as("n"), lit(0L).as("value_cents")),
       url, table,

@@ -28,6 +28,7 @@ class ETLPipelineSpec extends SparkSpec {
     val runTs = ColumnMapping.runTimestamp()
     def runOnce(): Seq[(String, Long)] =
       spec.flows.map(Main.runFlow(spark, spec, _, sf, tmp, runTs))
+        .map { case (dest, report) => dest -> report.applied }
 
     val first = runOnce()
     assert(first.toMap.apply("dim_segment") === 5L) // 5 distinct segments

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import graft.etl._
+import graft.etl.JdbcSink.UpsertReport
 
 /** Full config-driven pipeline with a JDBC SOURCE (embedded Derby): the
   * reference's actual shape — config declares connections, the flow reads a
@@ -36,7 +37,7 @@ class JdbcPipelineSpec extends SparkSpec {
       (3, "Acme", "INACTIVE")).toDF("id", "company", "status")
     // Spark's default StringType mapping is CLOB in Derby, which can't be
     // compared in pushed-down predicates — declare VARCHARs explicitly.
-    Sinks.jdbc(seed, url, "src_companies", opts +
+    JdbcSink.append(seed, url, "src_companies", opts +
       ("createTableColumnTypes" ->
         "company VARCHAR(64), status VARCHAR(16)"))
 
@@ -73,7 +74,7 @@ class JdbcPipelineSpec extends SparkSpec {
     val dbPath = Files.createTempDirectory("graft_derby3").toString + "/db"
     val url = s"jdbc:derby:$dbPath;create=true"
     val opts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    Sinks.jdbc(
+    JdbcSink.append(
       Seq((1, "Acme"), (2, "Beta"), (3, "Acme")).toDF("id", "company"),
       url, "src_companies", opts)
 
@@ -92,17 +93,49 @@ class JdbcPipelineSpec extends SparkSpec {
 
     // first run: destination table doesn't exist → probe yields None,
     // write creates it (the reference's first add_many)
-    val (dest1, n1) = Main.runFlow(spark, spec, flow,
+    val (dest1, UpsertReport(n1, _, _)) = Main.runFlow(spark, spec, flow,
       sourceDir = "/nonexistent", destDir = "/nonexistent",
       runTs = etl.ColumnMapping.runTimestamp())
     assert(dest1 === "dim_companies2" && n1 === 3L)
 
     // second run: every company_id exists in the live destination → the
     // anti-join keeps nothing, zero rows appended (idempotent replay)
-    val (_, n2) = Main.runFlow(spark, spec, flow,
+    val (_, UpsertReport(n2, _, _)) = Main.runFlow(spark, spec, flow,
       sourceDir = "/nonexistent", destDir = "/nonexistent",
       runTs = etl.ColumnMapping.runTimestamp())
     assert(n2 === 0L)
     assert(Sources.jdbc(spark, url, "dim_companies2", opts).count() === 3L)
+  }
+
+  test("config run to a JDBC destination: a row the database rejects " +
+    "costs that row, not the run") {
+    val tmp = Files.createTempDirectory("graft_derby4").toString
+    val url = s"jdbc:derby:$tmp/db;create=true"
+    val opts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
+    val conn = JdbcSink.connect(url, opts)
+    try conn.createStatement().execute(
+      "CREATE TABLE dim_guard (company_id INT, name VARCHAR(20) NOT NULL)")
+    finally conn.close()
+    Seq[(Int, String)]((1, "Acme"), (2, null), (3, "Beta"), (4, "Core"))
+      .toDF("id", "company").write.parquet(s"$tmp/src_guard.parquet")
+
+    val spec = PipelineSpec.parse(
+      s"""{"connections": {
+         |   "to": {"url": "$url",
+         |          "options": {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}}},
+         | "tables": [
+         |  {"flow": "src_guard -> dim_guard",
+         |   "columns": {"company_id": "[id]", "name": "[company]"},
+         |   "unique": ["company_id"]}]}""".stripMargin)
+    val (_, report) = Main.runFlow(spark, spec, spec.flows.head,
+      sourceDir = tmp, destDir = "/nonexistent",
+      runTs = etl.ColumnMapping.runTimestamp())
+    assert(report.applied === 3L)
+    assert(report.failed === 1L)
+    assert(report.errors.exists(e =>
+      e.toUpperCase.contains("NAME") && e.toUpperCase.contains("NULL")),
+      s"expected a NOT NULL violation on NAME, got: ${report.errors}")
+    assert(Sources.jdbc(spark, url, "dim_guard", opts).collect()
+      .map(_.getAs[Int]("COMPANY_ID")).sorted.toSeq === Seq(1, 3, 4))
   }
 }

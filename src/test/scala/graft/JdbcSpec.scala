@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import graft.etl.{Sinks, Sources}
+import java.sql.{DriverManager, SQLException}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.functions.udf
+import graft.etl.{JdbcSink, Sources}
+import graft.etl.JdbcSink.UpsertReport
 
 /** Real JDBC sink + source roundtrip against embedded Derby (ships with
   * Spark) — the actual database path of the reference's batch-insert sink
@@ -17,8 +21,8 @@ class JdbcSpec extends SparkSpec {
   test("batched JDBC append then projected/filtered JDBC scan") {
     val src = Seq((1, "alpha", 10.5), (2, "beta", 20.25), (3, "gamma", 30.0))
       .toDF("id", "name", "amount")
-    val written = Sinks.jdbc(src, url, "t_items", opts)
-    assert(written === 3L)
+    val written = JdbcSink.append(src, url, "t_items", opts)
+    assert(written.applied === 3L)
 
     // full scan back
     val back = Sources.jdbc(spark, url, "t_items", opts)
@@ -37,7 +41,7 @@ class JdbcSpec extends SparkSpec {
       s"JDBC pushdown missing:\n$plan")
 
     // append mode adds rows (the reference's batch-insert semantics)
-    Sinks.jdbc(src.filter($"id" === 1), url, "t_items", opts)
+    JdbcSink.append(src.filter($"id" === 1), url, "t_items", opts)
     assert(Sources.jdbc(spark, url, "t_items", opts).count() === 4L)
   }
 
@@ -50,7 +54,7 @@ class JdbcSpec extends SparkSpec {
   test("upsert: update-else-insert in place, idempotent on re-run") {
     val seed = Seq((1, "alpha", 10.0), (2, "beta", 20.0))
       .toDF("id", "name", "amount")
-    Sinks.jdbc(seed, url, "t_ups", opts)
+    JdbcSink.append(seed, url, "t_ups", opts)
 
     // 2 exists (update), 3 doesn't (insert)
     val batch = Seq((2, "beta2", 25.0), (3, "gamma", 30.0))
@@ -70,7 +74,7 @@ class JdbcSpec extends SparkSpec {
   test("delete by key set; replace-children delete-then-insert, idempotent") {
     val kids = Seq((10, 1, "a", 0.0), (11, 1, "b", 0.0), (12, 2, "c", 0.0))
       .toDF("id", "parent", "name", "amount")
-    Sinks.jdbc(kids, url, "t_kids", opts)
+    JdbcSink.append(kids, url, "t_kids", opts)
 
     // recompute parent 1's children as a fresh set
     val recomputed = Seq((20, 1, "x", 1.0), (21, 1, "y", 1.0))
@@ -95,8 +99,7 @@ class JdbcSpec extends SparkSpec {
 
   /** A table with a NOT NULL column for poison rows to violate. */
   private def guardTable(name: String): Unit = {
-    val conn = graft.etl.JdbcSink.connect(url,
-      Some("org.apache.derby.jdbc.EmbeddedDriver"))
+    val conn = JdbcSink.connect(url, opts)
     try conn.createStatement().execute(s"""CREATE TABLE $name ("id" INT
       PRIMARY KEY, "name" VARCHAR(20) NOT NULL, "amount" DOUBLE)""")
     finally conn.close()
@@ -125,8 +128,7 @@ class JdbcSpec extends SparkSpec {
   test("connect retries then fails with the reference's error") {
     val t0 = System.nanoTime()
     val e = intercept[RuntimeException] {
-      graft.etl.JdbcSink.connect("jdbc:nosuchdb:x", None,
-        attempts = 3, delayMs = 20)
+      JdbcSink.connect("jdbc:nosuchdb:x", attempts = 3, delayMs = 20)
     }
     assert(e.getMessage.contains("Too many attempt"))
     assert((System.nanoTime() - t0) / 1e6 >= 40) // 2 sleeps of 20ms happened
@@ -178,5 +180,79 @@ class JdbcSpec extends SparkSpec {
     assert(report.applied === 0L)
     assert(report.failed === 25L)
     assert(report.errors.size === 20)
+  }
+
+  test("credentials in the options reach the database: upsert and append " +
+    "into a Derby database that requires authentication") {
+    val path = Files.createTempDirectory("graft_derby_auth").toString + "/db"
+    val setup = JdbcSink.connect(s"jdbc:derby:$path;create=true", opts)
+    try Seq("derby.user.etl" -> "secret",
+      "derby.authentication.provider" -> "BUILTIN",
+      "derby.connection.requireAuthentication" -> "true").foreach {
+      case (k, v) => setup.createStatement().execute(
+        s"CALL SYSCS_UTIL.SYSCS_SET_DATABASE_PROPERTY('$k', '$v')")
+    } finally setup.close()
+    // reboot so the properties hold; a clean shutdown reports 08006
+    val down = intercept[SQLException](
+      DriverManager.getConnection(s"jdbc:derby:$path;shutdown=true"))
+    assert(down.getSQLState === "08006")
+    val authUrl = s"jdbc:derby:$path"
+    assert(intercept[SQLException](DriverManager.getConnection(authUrl))
+      .getSQLState === "08004")
+
+    val creds = opts ++ Map("user" -> "etl", "password" -> "secret")
+    val conn = JdbcSink.connect(authUrl, creds)
+    try conn.createStatement().execute(
+      """CREATE TABLE t_auth ("id" INT PRIMARY KEY, "name" VARCHAR(20))""")
+    finally conn.close()
+    val upserted = JdbcSink.upsertReport(
+      Seq((1, "a"), (2, "b")).toDF("id", "name"), authUrl, "t_auth",
+      Seq("id"), creds)
+    assert(upserted === UpsertReport(2L, 0L, Nil))
+    val appended = JdbcSink.append(Seq((3, "c")).toDF("id", "name"),
+      authUrl, "t_auth", creds)
+    assert(appended === UpsertReport(1L, 0L, Nil))
+    assert(Sources.jdbc(spark, authUrl, "t_auth", creds).collect()
+      .map(_.getAs[Int]("id")).sorted.toSeq === Seq(1, 2, 3))
+  }
+
+  test("append matches Spark's JDBC writer on table shapes: an existing " +
+    "table with upper-cased columns, and a table it creates itself") {
+    // created outside graft with unquoted names, which Derby upper-cases:
+    // the data frame's lower-case names resolve against them
+    val conn = JdbcSink.connect(url, opts)
+    try conn.createStatement().execute(
+      "CREATE TABLE t_upper (id INT, name VARCHAR(20))")
+    finally conn.close()
+    val rows = Seq((1, "a"), (2, "b")).toDF("id", "name")
+    assert(JdbcSink.append(rows, url, "t_upper", opts).applied === 2L)
+    assert(Sources.jdbc(spark, url, "t_upper", opts).collect()
+      .map(r => (r.getAs[Int]("ID"), r.getAs[String]("NAME")))
+      .sortBy(_._1).toSeq === Seq((1, "a"), (2, "b")))
+
+    // first run: append creates the table (strings map to CLOB on Derby);
+    // a null lands in the nullable string column
+    val fresh = Seq[(Int, String)]((1, "x"), (2, null)).toDF("id", "name")
+    assert(JdbcSink.append(fresh, url, "t_fresh", opts).applied === 2L)
+    assert(Sources.jdbc(spark, url, "t_fresh", opts).collect()
+      .map(r => (r.getAs[Int]("id"), r.getAs[String]("name")))
+      .sortBy(_._1).toSeq === Seq((1, "x"), (2, null)))
+  }
+
+  test("a failed append attempt leaves no rows behind: the task retry " +
+    "inserts each row once") {
+    // one partition of 1,500 rows; the first attempt fails after its first
+    // 1,000-row batch ran, and the suite's master retries the task once
+    val failFirstAttempt = udf { (id: Long) =>
+      if (id == 1200L && TaskContext.get().attemptNumber() == 0)
+        throw new IllegalStateException("injected failure")
+      id
+    }.asNondeterministic()
+    val rows = spark.range(1, 1501).coalesce(1)
+      .select(failFirstAttempt($"id").as("id"))
+    assert(JdbcSink.append(rows, url, "t_retry", opts).applied === 1500L)
+    val back = Sources.jdbc(spark, url, "t_retry", opts)
+    assert(back.count() === 1500L)
+    assert(back.distinct().count() === 1500L)
   }
 }

@@ -198,8 +198,7 @@ class MiniMySqlOdkuSpec extends SparkSpec {
     val derbyUrl = s"jdbc:derby:$tmp/db;create=true"
     val derbyOpts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     locally {
-      val c = JdbcSink.connect(derbyUrl,
-        Some("org.apache.derby.jdbc.EmbeddedDriver"))
+      val c = JdbcSink.connect(derbyUrl, derbyOpts)
       try c.createStatement().executeUpdate(
         """CREATE TABLE t ("id" BIGINT NOT NULL PRIMARY KEY,
           | "v" VARCHAR(100) NOT NULL)""".stripMargin)

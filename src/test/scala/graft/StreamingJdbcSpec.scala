@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.etl.{Sinks, Sources}
+import graft.etl.{JdbcSink, Sources}
 import graft.streaming.StreamOps
 
 /** Streaming → live-database upsert via foreachBatch: micro-batches of a
@@ -22,7 +22,8 @@ class StreamingJdbcSpec extends SparkSpec {
     val opts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
     // create the serving table (with a pre-existing row the stream never
     // touches — upserts must leave it alone)
-    Sinks.jdbc(Seq((0L, 99L)).toDF("user_id", "n"), url, "t_counts", opts)
+    JdbcSink.append(Seq((0L, 99L)).toDF("user_id", "n"), url, "t_counts",
+      opts)
 
     val input = MemoryStream[(Long, Double)]
     val counts = input.toDF().toDF("user_id", "value")
