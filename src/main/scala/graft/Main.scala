@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.json4s.DefaultFormats
+import org.json4s.jackson.Serialization
 
 import graft.etl.{ETLPipeline, JdbcSink, Orchestrator, PipelineSpec, Sinks}
 import graft.etl.JdbcSink.UpsertReport
@@ -15,13 +18,30 @@ import graft.etl.JdbcSink.UpsertReport
   *
   * Source tables are parquet files named `<table>.parquet` under sourceDir;
   * destinations are parquet directories under destDir (append mode, created
-  * on first write). Flows run in dependency stages (sequential between
-  * stages, parallel within — the shell-orchestration parity of
-  * `etl/Orchestrator`), and each flow reports its appended row count like
-  * the reference's progress output, plus its failed rows and up to three of
-  * their errors when a database destination rejected some.
+  * on first write). Both may be filesystem URIs (`file://`, `hdfs://`, …).
+  * Flows run in dependency stages (sequential between stages, parallel
+  * within — the shell-orchestration parity of `etl/Orchestrator`) through
+  * [[run]], and each flow prints one JSON line, its [[FlowReport]]: the
+  * rows it read and appended, like the reference's per-table count and
+  * progress output, plus its failed rows and up to three of their errors
+  * when a database destination rejected some.
   */
 object Main {
+
+  /** One flow's outcome. `read` counts the source rows that pass the
+    * flow's `query` — the reference's cursor count
+    * (sdk/migrate_assures.php:404-406); `appended` the rows that landed
+    * after dedup and the destination probe; `failed` the rows a database
+    * destination rejected, with up to three of their `errors`. The
+    * milliseconds are wall time for loading the source and destination,
+    * planning the transform and running the write job that gathers every
+    * count.
+    */
+  final case class FlowReport(destination: String, read: Long, appended: Long,
+                              failed: Long, errors: Seq[String], loadMs: Long,
+                              planMs: Long, writeMs: Long) {
+    def json: String = Serialization.write(this)(DefaultFormats)
+  }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 3) {
@@ -46,62 +66,51 @@ object Main {
           sys.exit(2); throw e
       }
 
-    val spark = SparkSession.builder()
+    val builder = SparkSession.builder()
       .master(master)
       .appName("graft-etl")
       .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions",
-        Runtime.getRuntime.availableProcessors().toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // spark-submit hands its --conf values over as system properties
+    shuffleWidth(master, sys.props.get("spark.sql.shuffle.partitions"))
+      .foreach(n => builder.config("spark.sql.shuffle.partitions", n.toLong))
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, spec, sourceDir, destDir, etl.ColumnMapping.runTimestamp())
+      .foreach(r => println(r.json))
+    finally spark.stop()
+  }
 
-    val runTs = etl.ColumnMapping.runTimestamp()
+  /** The shuffle width the CLI sets: a `local` master's cores, unless the
+    * user gave one. A builder option overrides a spark-submit `--conf`, and
+    * on a cluster the driver's cores say nothing about the executors'.
+    */
+  private[graft] def shuffleWidth(master: String,
+                                  userWidth: Option[String]): Option[Int] =
+    if (master.startsWith("local") && userWidth.isEmpty)
+      Some(Runtime.getRuntime.availableProcessors())
+    else None
+
+  /** The migration loop: the config's flows in
+    * [[Orchestrator.stagesByDestination]] stages, one [[FlowReport]] per
+    * flow in config order.
+    */
+  def run(spark: SparkSession, spec: PipelineSpec, sourceDir: String,
+          destDir: String, runTs: String): Seq[FlowReport] = {
     import scala.concurrent.ExecutionContext.Implicits.global
-    val stages = Orchestrator.stagesByDestination(spec)
-    stages.zipWithIndex.foreach { case (stage, i) =>
-      println(s"[graft] stage ${i + 1}/${stages.length}: " +
-        stage.map(f => s"${f.from} -> ${f.to}").mkString(", "))
-      // The reference printed per-table counts before each run
-      // (sdk/migrate_assures.php:404-406 "Migrating a total of %d
-      // records"); here the source counts also give the progress bar its
-      // target. The count is one metadata-cheap pass per source.
-      val targets =
-        stage.map(f => f -> sourceCount(spark, spec, f, sourceDir))
-      targets.foreach { case (f, n) =>
-        println(s"[graft]   ${f.from}: migrating $n source rows")
-      }
-      val progress = Progress.attach(spark,
-        label = s"stage ${i + 1}", target = targets.map(_._2).sum)
-      // Each flow is timed inside its own closure: the flows of a stage
-      // run concurrently, so the stage's wall time is no one flow's time.
-      val counts =
-        try Orchestrator.runStages(Seq(stage.map { flow => () =>
-          val t0 = System.nanoTime()
-          val (dest, r) = runFlow(spark, spec, flow, sourceDir, destDir, runTs)
-          (dest, r, (System.nanoTime() - t0) / 1e9)
-        }))
-        finally progress.close()
-      counts.head.foreach { case (dest, r, secs) =>
-        val rate = if (secs > 0) f"${r.applied / secs}%.0f rows/s" else "n/a"
-        val failed = if (r.failed == 0) "" else
-          s"; ${r.failed} failed: ${r.errors.take(3).mkString(" | ")}"
-        println(f"[graft]   $dest: appended ${r.applied} rows in $secs%.1f s" +
-          s" ($rate)$failed")
-      }
-    }
-    spark.stop()
+    Orchestrator.runStages(Orchestrator.stagesByDestination(spec).map(_.map {
+      flow => () => runFlow(spark, spec, flow, sourceDir, destDir, runTs)
+    })).flatten
   }
 
   /** Source resolution honors the config's connections block: a flow with
     * a resolvable JDBC connection reads from that database; otherwise the
     * table is a parquet file under sourceDir (the staged-file layout).
     */
-  private[graft] def loadTable(spark: SparkSession, spec: etl.PipelineSpec,
-                               flow: etl.FlowSpec,
-                               sourceDir: String): DataFrame =
+  private def loadTable(spark: SparkSession, spec: PipelineSpec,
+                        flow: etl.FlowSpec, sourceDir: String): DataFrame =
     spec.sourceConnection(flow) match {
       case Some(conn) =>
         val df = etl.Sources.jdbc(spark, conn.url, flow.from, conn.options)
@@ -115,11 +124,13 @@ object Main {
     * first run: the write then creates the table, exactly as the
     * reference's first `add_many` did. An unreachable database PROPAGATES
     * (after the source-layer retry): treating it as "no destination" would
-    * silently skip the anti-join and insert duplicate keys.
+    * silently skip the anti-join and insert duplicate keys. A parquet
+    * destination's filesystem is resolved from its path, so a URI destDir
+    * is probed on its own store.
     */
-  private[graft] def loadDest(spark: SparkSession, spec: etl.PipelineSpec,
-                              flow: etl.FlowSpec,
-                              destDir: String): Option[DataFrame] =
+  private def loadDest(spark: SparkSession, spec: PipelineSpec,
+                       flow: etl.FlowSpec,
+                       destDir: String): Option[DataFrame] =
     spec.destinationConnection(flow) match {
       case Some(conn) =>
         try {
@@ -129,29 +140,10 @@ object Main {
           case t: Throwable if JdbcSink.isMissingRelation(t) => None
         }
       case None =>
-        val p = s"$destDir/${flow.to}"
-        if (Files.exists(Paths.get(p))) Some(spark.read.parquet(p)) else None
-    }
-
-  /** Source row count for the progress target. Parquet counts are
-    * metadata-cheap; a JDBC source pushes `SELECT COUNT(*)` server-side as
-    * a dbtable subquery instead of pulling the whole table just to count
-    * it (Spark's JDBC source has no aggregate pushdown).
-    */
-  private[graft] def sourceCount(spark: SparkSession, spec: etl.PipelineSpec,
-                                 flow: etl.FlowSpec,
-                                 sourceDir: String): Long =
-    spec.sourceConnection(flow) match {
-      case Some(conn) =>
-        etl.Sources.jdbc(spark, conn.url,
-          s"(SELECT COUNT(*) AS graft_cnt FROM ${flow.from}) AS graft_c",
-          conn.options)
-          .collect()(0).get(0) match {
-            case n: Number => n.longValue()
-            case other => other.toString.toLong
-          }
-      case None =>
-        spark.read.parquet(s"$sourceDir/${flow.from}.parquet").count()
+        val p = new Path(s"$destDir/${flow.to}")
+        if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+          Some(spark.read.parquet(p.toString))
+        else None
     }
 
   /** Transform one flow and append to its destination — the database named
@@ -160,18 +152,27 @@ object Main {
     * task's `add_many` insert ran against the destination PDO,
     * sdk/etl.php:128-150, and replayed failed rows one by one,
     * sdk/migrate_assures.php:419-456), or a parquet directory under destDir
-    * otherwise, which reports no failures.
+    * otherwise, which reports no failures. `read` is observed inside the
+    * write job, so the report costs no job of its own.
     */
-  private[graft] def runFlow(spark: SparkSession, spec: etl.PipelineSpec,
-                             flow: etl.FlowSpec, sourceDir: String,
-                             destDir: String,
-                             runTs: String): (String, UpsertReport) = {
-    val out = ETLPipeline.transform(loadTable(spark, spec, flow, sourceDir),
-      flow, loadDest(spark, spec, flow, destDir), runTs = runTs)
-    flow.to -> (spec.destinationConnection(flow) match {
+  private def runFlow(spark: SparkSession, spec: PipelineSpec,
+                      flow: etl.FlowSpec, sourceDir: String, destDir: String,
+                      runTs: String): FlowReport = {
+    var t = System.nanoTime()
+    def lap(): Long = { val t0 = t; t = System.nanoTime(); (t - t0) / 1000000 }
+    val (source, dest) = (loadTable(spark, spec, flow, sourceDir),
+      loadDest(spark, spec, flow, destDir))
+    val loadMs = lap()
+    val read = Observation()
+    val out = ETLPipeline.transform(source, flow, dest, observe = Some(read),
+      runTs = runTs)
+    val planMs = lap()
+    val r = spec.destinationConnection(flow) match {
       case Some(conn) => JdbcSink.append(out, conn.url, flow.to, conn.options)
       case None =>
         UpsertReport(Sinks.appendParquet(out, s"$destDir/${flow.to}"), 0, Nil)
-    })
+    }
+    FlowReport(flow.to, read.get("rows").asInstanceOf[Long], r.applied,
+      r.failed, r.errors.take(3), loadMs, planMs, lap())
   }
 }

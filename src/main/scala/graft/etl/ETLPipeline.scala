@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** The reference's whole `ETLTask::run()` (reference:
@@ -20,12 +20,15 @@ object ETLPipeline {
   /** Build the transform for one flow. `orderCol` supplies the cursor order
     * that "first occurrence" refers to; it must exist on the SOURCE frame
     * (before column mapping) or be one of the mapped destination columns.
+    * `observe`, when given, receives `rows`: the source rows that pass the
+    * flow's query, counted by whichever job runs the result.
     */
   def transform(source: DataFrame,
                 flow: FlowSpec,
                 destination: Option[DataFrame],
                 orderCol: Option[String] = None,
-                runTs: String = ColumnMapping.runTimestamp()): DataFrame = {
+                runTs: String = ColumnMapping.runTimestamp(),
+                observe: Option[Observation] = None): DataFrame = {
 
     val filtered0 = flow.query.fold(source)(q => source.filter(expr(q)))
     // operator-string conditions (the reference's SQLTable::exists form,
@@ -34,6 +37,10 @@ object ETLPipeline {
     val filtered =
       if (flow.queryConds.isEmpty) filtered0
       else filtered0.filter(ExistsProbe.predicate(filtered0, flow.queryConds))
+    // Observed above the filters: a CollectMetrics node stops them from
+    // reaching the scan.
+    val read = observe.fold(filtered)(o =>
+      filtered.observe(o, count(lit(1)).as("rows")))
 
     // Carry an explicit ordering column through the mapping so dedup order
     // is well-defined (SURVEY §7.4.1: monotonically_increasing_id is only
@@ -47,9 +54,9 @@ object ETLPipeline {
     val orderName = "__graft_order"
     val mapped = orderCol match {
       case Some(c) if flow.columns.exists(_.dst == c) =>
-        filtered.select(mappedCols: _*)
+        read.select(mappedCols: _*)
       case _ =>
-        filtered.select(mappedCols :+ order.head.alias(orderName): _*)
+        read.select(mappedCols :+ order.head.alias(orderName): _*)
     }
     val orderExpr =
       if (mapped.columns.contains(orderName)) Seq(col(orderName))

@@ -23,12 +23,12 @@ class ETLPipelineSpec extends SparkSpec {
         |  "unique":["s_suppkey"]}
         |]}""".stripMargin)
 
-    // the CLI's per-flow path: <table>.parquet under sf, destinations
-    // appended under tmp
+    // the CLI's loop: <table>.parquet under sf, destinations appended
+    // under tmp
     val runTs = ColumnMapping.runTimestamp()
     def runOnce(): Seq[(String, Long)] =
-      spec.flows.map(Main.runFlow(spark, spec, _, sf, tmp, runTs))
-        .map { case (dest, report) => dest -> report.applied }
+      Main.run(spark, spec, sf, tmp, runTs)
+        .map(r => r.destination -> r.appended)
 
     val first = runOnce()
     assert(first.toMap.apply("dim_segment") === 5L) // 5 distinct segments

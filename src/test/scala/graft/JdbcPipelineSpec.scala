@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import graft.etl._
-import graft.etl.JdbcSink.UpsertReport
 
 /** Full config-driven pipeline with a JDBC SOURCE (embedded Derby): the
   * reference's actual shape — config declares connections, the flow reads a
@@ -93,17 +92,15 @@ class JdbcPipelineSpec extends SparkSpec {
 
     // first run: destination table doesn't exist → probe yields None,
     // write creates it (the reference's first add_many)
-    val (dest1, UpsertReport(n1, _, _)) = Main.runFlow(spark, spec, flow,
-      sourceDir = "/nonexistent", destDir = "/nonexistent",
-      runTs = etl.ColumnMapping.runTimestamp())
-    assert(dest1 === "dim_companies2" && n1 === 3L)
+    val Seq(first) = Main.run(spark, spec, sourceDir = "/nonexistent",
+      destDir = "/nonexistent", runTs = etl.ColumnMapping.runTimestamp())
+    assert(first.destination === "dim_companies2" && first.appended === 3L)
 
     // second run: every company_id exists in the live destination → the
     // anti-join keeps nothing, zero rows appended (idempotent replay)
-    val (_, UpsertReport(n2, _, _)) = Main.runFlow(spark, spec, flow,
-      sourceDir = "/nonexistent", destDir = "/nonexistent",
-      runTs = etl.ColumnMapping.runTimestamp())
-    assert(n2 === 0L)
+    val Seq(second) = Main.run(spark, spec, sourceDir = "/nonexistent",
+      destDir = "/nonexistent", runTs = etl.ColumnMapping.runTimestamp())
+    assert(second.appended === 0L)
     assert(Sources.jdbc(spark, url, "dim_companies2", opts).count() === 3L)
   }
 
@@ -127,10 +124,10 @@ class JdbcPipelineSpec extends SparkSpec {
          |  {"flow": "src_guard -> dim_guard",
          |   "columns": {"company_id": "[id]", "name": "[company]"},
          |   "unique": ["company_id"]}]}""".stripMargin)
-    val (_, report) = Main.runFlow(spark, spec, spec.flows.head,
-      sourceDir = tmp, destDir = "/nonexistent",
-      runTs = etl.ColumnMapping.runTimestamp())
-    assert(report.applied === 3L)
+    val Seq(report) = Main.run(spark, spec, sourceDir = tmp,
+      destDir = "/nonexistent", runTs = etl.ColumnMapping.runTimestamp())
+    assert(report.read === 4L)
+    assert(report.appended === 3L)
     assert(report.failed === 1L)
     assert(report.errors.exists(e =>
       e.toUpperCase.contains("NAME") && e.toUpperCase.contains("NULL")),
