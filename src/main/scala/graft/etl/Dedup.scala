@@ -53,14 +53,11 @@ object Dedup {
   /** Sequential per-column dedup, replicating the reference's cache
     * interaction exactly: a row dropped by an earlier key column never
     * claims values for later key columns, while a row that passes earlier
-    * columns claims those values even if a later column drops it.
-    */
-  def firstWinsAny(df: DataFrame, keys: Seq[String],
-                   order: Seq[Column]): DataFrame =
-    keys.foldLeft(df)((d, k) => firstWins(d, k, order))
-
-  /** Per-column first-wins with the DESTINATION's existing key values folded
-    * into the same pass — the reference interleaves the destination-exists
+    * columns claims those values even if a later column drops it. An
+    * empty key list returns `df` unchanged.
+    *
+    * With a `dest`ination, its existing key values fold into the same
+    * per-column pass — the reference interleaves the destination-exists
     * probe with the run cache inside one per-column loop
     * (sdk/src/ETLTask.php:46: `$this->to->exists(...) || in_array(...)`
     * breaks BEFORE caching), so a row dropped at column k claims the values
@@ -76,10 +73,10 @@ object Dedup {
     * the join shuffles both sides on the trimmed key and the window reuses
     * that partitioning.
     */
-  def firstWinsAnyWithDestination(df: DataFrame, keys: Seq[String],
-                                  order: Seq[Column],
-                                  dest: DataFrame): DataFrame =
+  def firstWinsAny(df: DataFrame, keys: Seq[String], order: Seq[Column],
+                   dest: Option[DataFrame] = None): DataFrame =
     keys.foldLeft(df) { (d, k) =>
-      firstWins(AntiDestination.dropExisting(d, dest, k), k, order)
+      firstWins(dest.fold(d)(AntiDestination.dropExisting(d, _, k)), k,
+        order)
     }
 }

@@ -71,15 +71,9 @@ object ETLPipeline {
         flow.unique.filterNot(k => flow.columns.exists(_.dst == k))
     // With a destination, its existing keys fold INTO each per-column pass
     // (the reference's probe-and-cache interleave — see
-    // Dedup.firstWinsAnyWithDestination); without one, plain first-wins.
-    val survived = (flow.unique.isEmpty, destination) match {
-      case (true, _) => mapped
-      case (false, Some(dst)) =>
-        Dedup.firstWinsAnyWithDestination(mapped, uniqueInColumnOrder,
-          orderExpr, dst)
-      case (false, None) =>
-        Dedup.firstWinsAny(mapped, uniqueInColumnOrder, orderExpr)
-    }
+    // Dedup.firstWinsAny); no unique columns, no dedup.
+    val survived = Dedup.firstWinsAny(mapped, uniqueInColumnOrder,
+      orderExpr, destination)
 
     if (survived.columns.contains(orderName)) survived.drop(orderName)
     else survived

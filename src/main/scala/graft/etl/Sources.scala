@@ -28,12 +28,6 @@ object Sources {
     df
   }
 
-  /** Line-oriented file source (reference: sdk/src/IO/ReadWriter.php:29-76 —
-    * `fopen`-based line iterator; byte-range reads map to `binaryFile`).
-    */
-  def textFile(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
   def csv(spark: SparkSession, path: String,
           header: Boolean = true): DataFrame =
     spark.read.option("header", header.toString).csv(path)

@@ -39,7 +39,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object TableGroup {
 
-  private val RootName = "_tg_root"
+  /** The root is a [[graft.Snapshots]] store of its own: `_tg_root`
+    * (+ `.vN` history) under the table lock name `_vt_lock`.
+    */
+  private val RootLayout = VersionedTable.Layout.copy(manifest = "_tg_root")
   private val MemberLine = "^([A-Za-z][A-Za-z0-9_-]*)=([0-9]+)$".r
   private val NameOk = "^[A-Za-z][A-Za-z0-9_-]*$".r
 
@@ -51,85 +54,39 @@ object TableGroup {
   private def tableDir(groupDir: String, table: String): String =
     groupDir + "/" + table
 
-  /** The live root's raw lines, with the same lost-pointer recovery as
-    * [[VersionedTable]] manifests: the highest `_tg_root.vN` is
-    * byte-identical to what a crashed flip would have published.
-    */
-  private def rootLines(spark: SparkSession,
-                        groupDir: String): Option[List[String]] = {
-    val (fs, root) = VersionedTable.fsOf(spark, groupDir)
-    val p = new org.apache.hadoop.fs.Path(root, RootName)
-    if (fs.exists(p))
-      try return Some(VersionedTable.readLines(fs, p))
-      catch { case _: java.io.FileNotFoundException => () }
-    if (!fs.exists(root)) return None
-    val hist = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(RootName + ".v"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(RootName + ".v").toLong).toOption)
-    if (hist.isEmpty) None
-    else Some(VersionedTable.readLines(fs,
-      new org.apache.hadoop.fs.Path(root, RootName + ".v" + hist.max)))
-  }
+  private def rootStore(spark: SparkSession, groupDir: String) =
+    graft.Snapshots(spark, groupDir, RootLayout)
+
+  private def pinsOf(m: graft.Snapshots.Manifest): Map[String, Long] =
+    m.lines.collect { case MemberLine(t, v) => (t, v.toLong) }.toMap
+
+  private def liveRoot(spark: SparkSession, groupDir: String) =
+    rootStore(spark, groupDir).live.getOrElse(
+      throw new IllegalArgumentException(
+        s"$groupDir is not a table group (no ${RootLayout.manifest}) — " +
+          "init() first"))
 
   /** The live group version, erroring before [[init]]. */
   def version(spark: SparkSession, groupDir: String): Long =
-    rootLines(spark, groupDir).map(_.head.toLong).getOrElse(
-      throw new IllegalArgumentException(
-        s"$groupDir is not a table group (no $RootName) — init() first"))
+    liveRoot(spark, groupDir).version
 
   /** Member table -> pinned table version, as the live root commits it. */
   def members(spark: SparkSession, groupDir: String): Map[String, Long] =
-    rootLines(spark, groupDir).map(_.tail.collect {
-      case MemberLine(t, v) => (t, v.toLong)
-    }.toMap).getOrElse(
-      throw new IllegalArgumentException(
-        s"$groupDir is not a table group (no $RootName) — init() first"))
+    pinsOf(liveRoot(spark, groupDir))
 
-  private def membersAt(spark: SparkSession, groupDir: String,
-                        groupVersion: Long): Map[String, Long] = {
-    val (fs, root) = VersionedTable.fsOf(spark, groupDir)
-    val p = new org.apache.hadoop.fs.Path(root,
-      RootName + ".v" + groupVersion)
-    val committed = rootLines(spark, groupDir)
-      .exists(groupVersion <= _.head.toLong)
-    if (!fs.exists(p) || !committed)
-      throw new IllegalArgumentException(
-        s"group version $groupVersion not retained under $groupDir")
-    VersionedTable.readLines(fs, p).tail.collect {
-      case MemberLine(t, v) => (t, v.toLong)
-    }.toMap
-  }
-
-  /** Atomic root flip: history copy first, then the live pointer (both
-    * temp-then-rename — the [[VersionedTable]] commit discipline), then
-    * a count-based history prune (the root references no data files, so
-    * plain version-window retention suffices).
+  /** Atomic root flip (the snapshot store's publish: history copy, then
+    * the live pointer), then a count-based history prune — the root
+    * references no data files, so a plain version window suffices.
     */
   private def flipRoot(spark: SparkSession, groupDir: String,
                        groupVersion: Long, pins: Map[String, Long],
                        retain: Option[Long]): Unit = {
-    val (fs, root) = VersionedTable.fsOf(spark, groupDir)
-    val body = (groupVersion.toString +:
+    val root = rootStore(spark, groupDir)
+    root.publish(groupVersion,
       pins.toSeq.sortBy(_._1).map { case (t, v) => s"$t=$v" })
-      .mkString("\n")
-    VersionedTable.writeAtomic(fs,
-      new org.apache.hadoop.fs.Path(root, RootName + ".v" + groupVersion),
-      body)
-    VersionedTable.writeAtomic(fs,
-      new org.apache.hadoop.fs.Path(root, RootName), body)
-    val keepFrom = groupVersion - retain
-      .map(math.max(0L, _))
-      .getOrElse(spark.conf.getOption(VersionedTable.RetainVersionsConf)
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .map(math.max(0L, _)).getOrElse(2L))
-    fs.listStatus(root).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(RootName + ".v"))
-        scala.util.Try(n.stripPrefix(RootName + ".v").toLong).foreach { v =>
-          if (v < keepFrom || v > groupVersion)
-            fs.delete(st.getPath, false)
-        }
+    val keepFrom = groupVersion - VersionedTable.effRetain(spark, retain)
+    root.history.foreach { case (v, p) =>
+      if (v < keepFrom || v > groupVersion) root.fs.delete(p, false)
     }
   }
 
@@ -144,8 +101,8 @@ object TableGroup {
            tables: Seq[(String, DataFrame)],
            partitionBy: Map[String, Seq[String]] = Map.empty,
            retain: Option[Long] = None): Long =
-    VersionedTable.withLock(spark, groupDir, "group-init") {
-      require(rootLines(spark, groupDir).isEmpty,
+    rootStore(spark, groupDir).withLock("group-init") {
+      require(rootStore(spark, groupDir).live.isEmpty,
         s"$groupDir is already a table group")
       val pins = tables.map { case (t, df) =>
         requireName(t)
@@ -184,7 +141,7 @@ object TableGroup {
   def commit(spark: SparkSession, groupDir: String,
              ops: Seq[(String, String => Long)],
              retain: Option[Long] = None): Long =
-    VersionedTable.withLock(spark, groupDir, "group-commit") {
+    rootStore(spark, groupDir).withLock("group-commit") {
       val pinned = members(spark, groupDir)
       // heal members a crashed commit advanced past their pins — by
       // CONTENT, not version number, so a heal interrupted after its
@@ -192,17 +149,12 @@ object TableGroup {
       // stacking restores
       pinned.foreach { case (t, pin) =>
         val dir = tableDir(groupDir, t)
-        val (liveV, liveFiles) =
-          VersionedTable.readManifest(spark, dir).getOrElse(
-            throw new IllegalStateException(s"group member $t lost"))
-        if (liveV != pin) {
-          val (fs, root) = VersionedTable.fsOf(spark, dir)
-          val pinFiles = VersionedTable.readLines(fs,
-            new org.apache.hadoop.fs.Path(root, VersionedTable.ManifestName + ".v" + pin))
-            .drop(1).filterNot(_.startsWith("#"))
-          if (liveFiles.toSet != pinFiles.toSet)
-            VersionedTable.restore(spark, dir, pin, retain)
-        }
+        val member = VersionedTable.store(spark, dir)
+        val live = member.live.getOrElse(
+          throw new IllegalStateException(s"group member $t lost"))
+        if (live.version != pin &&
+            live.files.toSet != member.snapshot(pin).files.toSet)
+          VersionedTable.restore(spark, dir, pin, retain)
       }
       val healed = pinned.map { case (t, _) =>
         t -> VersionedTable.currentVersion(spark, tableDir(groupDir, t))
@@ -236,7 +188,7 @@ object TableGroup {
   def readAt(spark: SparkSession, groupDir: String, table: String,
              groupVersion: Long): DataFrame =
     VersionedTable.readAt(spark, tableDir(groupDir, table),
-      membersAt(spark, groupDir, groupVersion).getOrElse(table,
-        throw new IllegalArgumentException(
+      pinsOf(rootStore(spark, groupDir).snapshot(groupVersion))
+        .getOrElse(table, throw new IllegalArgumentException(
           s"$table is not a member of $groupDir at v$groupVersion")))
 }

@@ -11,46 +11,18 @@ import org.apache.spark.sql.functions._
   * before a run; `sdk/migrate_assures.php:205-227` delete-then-inserts
   * children inside a transaction). Plain parquet directories give an
   * ETL pipeline neither isolation (a reader mid-overwrite sees a torn
-  * table) nor history (yesterday's state is gone) — this layer is the
-  * r12-verdict generalization of the ANN index's snapshot machinery
-  * ([[graft.ops.Similarity]] `_graft_manifest`, r11/r12) to ARBITRARY
-  * destination tables, built on the same three primitives every table
-  * format (Iceberg, Delta) rests on:
-  *
-  *   1. a LIVE-FILE MANIFEST (`_vt_manifest`: version + the exact
-  *      relative data-file list) committed by write-temp-then-atomic-
-  *      rename — readers pin a whole version, never a directory
-  *      listing mid-swap; new data files are written BEFORE the commit
-  *      so a crash leaves the old version serving and the new files as
-  *      sweepable orphans;
-  *   2. per-version HISTORY manifests (`_vt_manifest.vN`) retained for
-  *      `spark.graft.tableRetainVersions` commits → [[readAt]] time
-  *      travel, with an AVAILABILITY-BASED prune (below);
-  *   3. version-stamped DEFERRED DELETES (`_vt_pending`,
-  *      `<dueAtVersion>:<relPath>`): a commit retires replaced files
-  *      into the calendar instead of deleting them, so readers pinned
-  *      on any retained version never lose a file however many commits
-  *      land meanwhile; entries fall due when the live version reaches
-  *      their stamp and are replayed at the start of every later
-  *      mutation (and by [[vacuum]]).
-  *
-  * RETENTION-CONF CHANGE SAFETY (the r12 ADVICE finding, fixed here by
-  * construction and back-ported to Similarity): history manifests are
-  * pruned by AVAILABILITY, not by the retention conf in force at prune
-  * time — `.vN` stays exactly as long as EVERY file it references is
-  * either live or still awaiting a scheduled delete (`dueAt` beyond the
-  * current version), and is dropped the moment any referenced file is
-  * gone or due. Raising the retention conf between ops therefore cannot
-  * resurrect a version whose data was already deleted under the earlier
-  * smaller window ([[readAt]] fails fast, never mid-scan), and lowering
-  * it cannot break the window PROMISED at retirement time (the stamps,
-  * frozen at retirement, keep both the files and their manifests alive
-  * until due). Under a constant conf the rule reproduces the fixed
-  * `version - retain` boundary exactly.
-  *
-  * WRITER SERIALIZATION uses the same two-layer maintenance lock as the
-  * index (in-JVM monitor + create-no-overwrite `_vt_lock` with lease
-  * steal); readers never lock — [[read]]/[[readAt]] are manifest loads.
+  * table) nor history (yesterday's state is gone). A versioned table is
+  * a [[graft.Snapshots]] store — the same live-file manifest, `.vN`
+  * history, stamped pending-delete calendar, availability prune and
+  * two-layer writer lock the ANN index commits through (protocol:
+  * that module's header) — under its own names: `_vt_manifest`,
+  * `_vt_pending`, `_vt_lock`. On top of it this layer adds the `#`
+  * manifest headers (per-stream epochs, the committed schema, per-file
+  * stats), per-commit staging, and time travel ([[readAt]],
+  * [[changesBetween]], [[restore]]) across the
+  * `spark.graft.tableRetainVersions` window. Every mutation replays the
+  * due calendar on entry; the orphan sweep runs only in [[vacuum]].
+  * Readers never lock — [[read]]/[[readAt]] are manifest loads.
   *
   * SCALE SHAPE: [[merge]], [[deleteWhere]] and [[replaceChildren]] are
   * FILE-PRUNED rewrites (the Delta/Iceberg MERGE strategy): one
@@ -65,18 +37,19 @@ import org.apache.spark.sql.functions._
 object VersionedTable {
 
   /** Session conf: how many PREVIOUS versions stay fully readable
-    * alongside the latest (see retention notes above). Default 2 —
+    * alongside the latest (retention rules: [[graft.Snapshots]]). Default 2 —
     * destination tables exist to be audited; `0` restores
     * delete-at-next-commit.
     */
   val RetainVersionsConf = "spark.graft.tableRetainVersions"
 
-  private[etl] val ManifestName = "_vt_manifest"
-  private val PendingName = "_vt_pending"
-  private val LockName = "_vt_lock"
+  private[etl] val Layout =
+    graft.Snapshots.Layout("_vt_manifest", "_vt_pending", "_vt_lock")
   private val PartitioningName = "_vt_partitioning"
   private val SchemaName = "_vt_schema"
-  private val PendingStamp = "^([0-9]+):(.+)$".r
+
+  private[etl] def store(spark: SparkSession, dir: String) =
+    graft.Snapshots(spark, dir, Layout)
 
   /** Effective retention: an explicit per-call `retain` parameter wins
     * over the session conf (r13-verdict item 7 — gate bodies used to
@@ -84,86 +57,11 @@ object VersionedTable {
     * SparkSession; the parameter is thread-confined by construction).
     * The conf stays as the session-wide default.
     */
-  private def effRetain(spark: SparkSession, ov: Option[Long]): Long =
+  private[etl] def effRetain(spark: SparkSession, ov: Option[Long]): Long =
     ov.map(math.max(0L, _)).getOrElse(
       spark.conf.getOption(RetainVersionsConf)
         .flatMap(v => scala.util.Try(v.toLong).toOption)
         .map(math.max(0L, _)).getOrElse(2L))
-
-  // ------------------------------------------------------------------
-  // filesystem plumbing
-  // ------------------------------------------------------------------
-
-  private[etl] def fsOf(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** Relative paths of every data file (no `_`/`.`-prefixed segment). */
-  private[etl] def listDataFiles(spark: SparkSession,
-                                 dir: String): Seq[String] = {
-    val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(root)) return Seq.empty
-    val rootStr = fs.makeQualified(root).toString
-    def walk(p: org.apache.hadoop.fs.Path): Seq[String] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st.getPath.toString.stripPrefix(rootStr)
-          .stripPrefix("/"))
-      }
-    walk(root).sorted
-  }
-
-  private[etl] def readLines(fs: org.apache.hadoop.fs.FileSystem,
-                        p: org.apache.hadoop.fs.Path): List[String] = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .map(_.trim).filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  private[etl] def writeAtomic(fs: org.apache.hadoop.fs.FileSystem,
-                          dst: org.apache.hadoop.fs.Path,
-                          body: String): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
-      dst.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename $tmp -> $dst failed")
-  }
-
-  /** The live manifest's raw lines, resilient to the swap: the live
-    * pointer is published by delete-then-rename (portable across FSes
-    * that refuse rename-over), so a lock-free reader can catch the
-    * microsecond window where `_vt_manifest` is absent — and a writer
-    * crash INSIDE that window loses the pointer entirely. Both resolve
-    * the same way: the HIGHEST `.vN` history manifest is byte-identical
-    * to what the rename would have published (commitManifest writes it
-    * first, and its data files are fully on disk before any manifest
-    * write), so it serves as the fallback truth. None only when neither
-    * exists — a genuinely uninitialized directory.
-    */
-  private def liveManifestLines(spark: SparkSession,
-                                dir: String): Option[List[String]] = {
-    val (fs, root) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, ManifestName)
-    if (fs.exists(p))
-      try return Some(readLines(fs, p))
-      catch { case _: java.io.FileNotFoundException => () } // lost the race
-    if (!fs.exists(root)) return None
-    val hist = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(ManifestName + ".v"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(ManifestName + ".v").toLong).toOption)
-    if (hist.isEmpty) None
-    else Some(readLines(fs,
-      new org.apache.hadoop.fs.Path(root, ManifestName + ".v" + hist.max)))
-  }
 
   /** The live manifest: (version, relative file paths), None before
     * [[init]]. Header lines (`#key=value`, e.g. the streaming epoch)
@@ -172,10 +70,7 @@ object VersionedTable {
     */
   def readManifest(spark: SparkSession,
                    dir: String): Option[(Long, Seq[String])] =
-    liveManifestLines(spark, dir).map {
-      case v :: rest => (v.toLong, rest.filterNot(_.startsWith("#")))
-      case Nil => (0L, Nil)
-    }
+    store(spark, dir).live.map(m => (m.version, m.files))
 
   private val EpochHeader =
     "^#epoch(?:\\.([A-Za-z0-9._-]+))?=(-?[0-9]+)$".r
@@ -189,7 +84,7 @@ object VersionedTable {
     * `default`.
     */
   def streamEpochs(spark: SparkSession, dir: String): Map[String, Long] =
-    liveManifestLines(spark, dir).getOrElse(Nil).collect {
+    store(spark, dir).live.fold(List.empty[String])(_.lines).collect {
       case EpochHeader(id, n) =>
         (Option(id).getOrElse("default"), n.toLong)
     }.toMap
@@ -398,68 +293,23 @@ object VersionedTable {
   /** The table's Hive partition columns (empty = flat), recorded at
     * [[init]]/[[adopt]] so every later rewrite reproduces the layout.
     */
-  def partitioning(spark: SparkSession, dir: String): Seq[String] = {
-    val (fs, root) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, PartitioningName)
-    if (!fs.exists(p)) Seq.empty else readLines(fs, p)
-  }
+  def partitioning(spark: SparkSession, dir: String): Seq[String] =
+    store(spark, dir).read(PartitioningName).getOrElse(Nil)
 
   def currentVersion(spark: SparkSession, dir: String): Long =
     readManifest(spark, dir).map(_._1).getOrElse(
       throw new IllegalArgumentException(s"$dir is not a versioned table"))
 
-  /** Retained (fully readable) versions, ascending. A `.vN` beyond the
-    * live version is a PHANTOM — the history copy of a commit that died
-    * before its live flip — and is excluded: it was never committed, so
-    * serving it would expose a write that did not happen (the next
-    * mutation overwrites or prunes it).
+  /** Retained (fully readable) versions, ascending; a phantom `.vN`
+    * beyond the live version (a commit that died before its flip) is
+    * excluded.
     */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(root)) return Seq.empty
-    val cur = readManifest(spark, dir).map(_._1)
-    fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(ManifestName + ".v"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(ManifestName + ".v").toLong).toOption)
-      .filter(n => cur.forall(n <= _))
-      .sorted
-  }
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    store(spark, dir).versions
 
-  private def pendingEntries(spark: SparkSession,
-                             dir: String): Seq[String] = {
-    val (fs, root) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, PendingName)
-    if (!fs.exists(p)) Seq.empty else readLines(fs, p)
-  }
-
-  private def writePending(spark: SparkSession, dir: String,
-                           entries: Seq[String]): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, PendingName)
-    if (entries.isEmpty) { fs.delete(p, false); () }
-    else writeAtomic(fs, p, entries.mkString("\n"))
-  }
-
-  /** Files some reader may still open: live + every retained history
-    * manifest's list. The protection set for replay and orphan sweep.
-    */
-  private def protectedFiles(spark: SparkSession,
-                             dir: String): Set[String] = {
-    val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(root)) return Set.empty
-    val hist = fs.listStatus(root).toSeq
-      .filter(_.getPath.getName.startsWith(ManifestName + ".v"))
-      .flatMap(st => readLines(fs, st.getPath).drop(1)
-        .filterNot(_.startsWith("#")))
-    (readManifest(spark, dir).map(_._2).getOrElse(Seq.empty) ++ hist).toSet
-  }
-
-  /** Commit manifest `version` (file list), keep a `.vN` history copy,
-    * then prune history by AVAILABILITY (header notes). Callers stamp
-    * retirements into the pending calendar BEFORE this commit, so the
-    * prune sees the just-retired files as still-pending (available) and
-    * keeps the versions that reference them.
+  /** Commit manifest `version`: the `#` headers carried forward or
+    * replaced, then `files`. Callers stamp retirements into the calendar
+    * BEFORE this commit (see [[graft.Snapshots]]).
     */
   private def commitManifest(spark: SparkSession, dir: String,
                              version: Long, files: Seq[String],
@@ -468,8 +318,8 @@ object VersionedTable {
                              retainOv: Option[Long] = None,
                              newStats: Map[String, String] = Map.empty)
       : Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    val prevLines = liveManifestLines(spark, dir).getOrElse(Nil)
+    val st = store(spark, dir)
+    val prevLines = st.live.fold(List.empty[String])(_.lines)
     // EVERY epoch header carries FORWARD through non-streaming commits:
     // a compaction between two micro-batches must not reset any
     // stream's high-water mark, or that stream's next replay would
@@ -491,236 +341,22 @@ object VersionedTable {
       effSchema.map(j => s"#schema=$j") ++
       effStats.toSeq.sortBy(_._1)
         .map { case (rel, j) => s"#stats=$rel\t$j" }
-    val body = ((version.toString +: headers) ++ files.sorted)
-      .mkString("\n")
-    // history copy FIRST, then the live flip. A crash between the two
-    // leaves a PHANTOM `.vN` (readAt/versions exclude N > live; the
-    // next mutation overwrites or prunes it); a crash INSIDE the flip's
-    // delete-rename window loses the live pointer, and readers recover
-    // from the highest `.vN` — byte-identical to what the rename would
-    // have published. Both writes are temp-then-rename: a reader must
-    // never observe a TORN list — a truncated `.vN` would silently
-    // serve partial table contents.
-    writeAtomic(fs,
-      new org.apache.hadoop.fs.Path(root, ManifestName + ".v" + version),
-      body)
-    writeAtomic(fs, new org.apache.hadoop.fs.Path(root, ManifestName), body)
-    pruneHistory(spark, dir, retainOv)
+    st.commit(version, files, headers, effRetain(spark, retainOv))
   }
 
-  /** The AVAILABILITY-based history prune (header notes): drop every
-    * `.vN` (N < live version) referencing a file that is neither live
-    * nor still awaiting its scheduled delete — [[readAt]] on it would
-    * fail mid-scan, so the version must fail fast as "not retained"
-    * instead. Runs after every commit AND after every replay (a replay
-    * physically deletes files, which can expire versions).
-    */
-  private def pruneHistory(spark: SparkSession, dir: String,
-                           retainOv: Option[Long] = None): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    readManifest(spark, dir).foreach { case (version, files) =>
-      // three tiers per referenced file: LIVE → available; covered by a
-      // pending stamp → available exactly while the stamp is not due
-      // (metadata expiry LEADS physical deletion — the window closes
-      // when the promise does, even if the replay lags a commit);
-      // covered by NO stamp → fall back to on-disk existence (a writer
-      // that crashed after its commit but before re-stamping cannot
-      // expire versions whose files this very manifest still shields).
-      // The existence probe is PER FILE (memoized), not a full table
-      // listing: it fires only for the rare crashed-writer leftovers,
-      // so the prune stays O(referenced files), never O(table walk).
-      val stamped: Map[String, Seq[Long]] = pendingEntries(spark, dir)
-        .flatMap {
-          case PendingStamp(due, rel) => Some(rel -> due.toLong)
-          case _ => None
-        }.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2) }
-      val liveSet = files.toSet
-      val onDisk = scala.collection.mutable.HashMap[String, Boolean]()
-      def available(rel: String): Boolean =
-        liveSet(rel) || (stamped.get(rel) match {
-          case Some(dues) => dues.exists(_ > version)
-          case None => onDisk.getOrElseUpdate(rel,
-            fs.exists(new org.apache.hadoop.fs.Path(root, rel)))
-        })
-      // a version is KEPT while its files are all available AND it is
-      // either inside the retention window or extended by a retirement
-      // stamp still running (the promise frozen when its files retired).
-      // The window bound matters on APPEND-ONLY workloads: appends
-      // retire nothing, so availability alone would keep every version
-      // forever — O(N²) manifest metadata after N micro-batches.
-      val keepFrom = version - effRetain(spark, retainOv)
-      fs.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        val v = if (n.startsWith(ManifestName + ".v"))
-          scala.util.Try(n.stripPrefix(ManifestName + ".v").toLong).toOption
-        else None
-        // N > version is a PHANTOM (a crashed commit's history copy
-        // that never flipped live): never readable, pruned on sight
-        v.filter(_ > version).foreach(_ => fs.delete(st.getPath, false))
-        v.filter(_ < version).foreach { nv =>
-          val refs = readLines(fs, st.getPath).drop(1)
-            .filterNot(_.startsWith("#"))
-          val extended = refs.exists(r =>
-            stamped.get(r).exists(_.exists(_ > version)))
-          val keep = refs.forall(available) &&
-            (nv >= keepFrom || extended)
-          if (!keep) fs.delete(st.getPath, false)
-        }
-      }
-    }
-  }
-
-  /** Replay due deferred deletes: entries whose stamped due-version the
-    * live version has reached, skipping anything a retained manifest
-    * still protects. Runs at the top of every mutation; [[vacuum]] is
-    * the standalone form. Returns the deleted relative paths.
+  /** Replay the due deferred deletes (the calendar rules are in
+    * [[graft.Snapshots]]' header). Runs at the top of every mutation;
+    * [[vacuum]] is the standalone form. Returns the deleted relative
+    * paths.
     */
   private def replayPending(spark: SparkSession, dir: String,
-                            retainOv: Option[Long] = None): Seq[String] = {
-    val (fs, root) = fsOf(spark, dir)
-    val entries = pendingEntries(spark, dir)
-    if (entries.isEmpty) return Seq.empty
-    val latest = readManifest(spark, dir).map(_._1).getOrElse(0L)
-    val (due, notDue) = entries.partition {
-      case PendingStamp(d, _) => latest >= d.toLong
-      case _ => true
-    }
-    val shield = protectedFiles(spark, dir)
-    val deleted = scala.collection.mutable.ArrayBuffer[String]()
-    val held = scala.collection.mutable.ArrayBuffer[String]()
-    due.foreach { e =>
-      val rel = PendingStamp.findFirstMatchIn(e).map(_.group(2)).getOrElse(e)
-      if (shield(rel)) held += e
-      else {
-        fs.delete(new org.apache.hadoop.fs.Path(root, rel), false)
-        deleted += rel
-      }
-    }
-    // fold away commit subdirectories (and partition dirs inside them)
-    // the deletes just emptied — the root listing the manifest-recovery
-    // and versions() paths do must stay O(live commits), not accrete
-    // one empty dir per historical commit forever
-    val qRoot = fs.makeQualified(root)
-    deleted.foreach { rel =>
-      var parent = new org.apache.hadoop.fs.Path(root, rel).getParent
-      var more = true
-      while (more && parent != null && fs.makeQualified(parent) != qRoot) {
-        more =
-          try fs.exists(parent) && fs.listStatus(parent).isEmpty &&
-            fs.delete(parent, false)
-          catch { case _: java.io.IOException => false }
-        parent = parent.getParent
-      }
-    }
-    writePending(spark, dir, notDue ++ held)
-    // a replay can expire versions (their files just left the disk) —
-    // their manifests must fail fast, not mid-scan
-    if (deleted.nonEmpty) pruneHistory(spark, dir, retainOv)
-    deleted.toSeq
-  }
+                            retainOv: Option[Long] = None): Seq[String] =
+    store(spark, dir).replay(effRetain(spark, retainOv))
+      .map(_.split(":", 2).last)
 
-  /** Delete data files on disk but absent from every manifest and the
-    * pending calendar — crash garbage from a writer that died between
-    * writing files and committing. VACUUM-ONLY since r14: this is the
-    * one remaining full-table walk, and running it inline made every
-    * mutation O(table files). Crash garbage is invisible to readers
-    * (manifest-pinned) and isolated in its own commit subdirectory, so
-    * deferring collection to the scheduled [[vacuum]] costs only disk.
-    */
-  private def sweepOrphans(spark: SparkSession, dir: String): Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    if (readManifest(spark, dir).isEmpty) return
-    // dead commit attempts: the sweep runs under the table lock, so any
-    // `.staging-*` directory belongs to a writer that crashed before
-    // moving its files in — the whole tree is garbage
-    fs.listStatus(root).foreach { st =>
-      if (st.isDirectory && st.getPath.getName.startsWith(".staging-"))
-        fs.delete(st.getPath, true)
-    }
-    val shield = protectedFiles(spark, dir)
-    val pending = pendingEntries(spark, dir).map { e =>
-      PendingStamp.findFirstMatchIn(e).map(_.group(2)).getOrElse(e)
-    }.toSet
-    listDataFiles(spark, dir).filterNot(shield).filterNot(pending)
-      .foreach(rel =>
-        fs.delete(new org.apache.hadoop.fs.Path(root, rel), false))
-  }
-
-  // ------------------------------------------------------------------
-  // writer lock (the Similarity two-layer discipline; see its scaladoc
-  // for the steal protocol rationale)
-  // ------------------------------------------------------------------
-
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private[etl] def withLock[T](spark: SparkSession, dir: String,
-                               owner: String, leaseMs: Long = 600000L,
-                               timeoutMs: Long = 600000L)(body: => T): T = {
-    val mon = jvmLocks.computeIfAbsent(dir, _ => new Object)
-    mon.synchronized {
-      val (fs, root) = fsOf(spark, dir)
-      val lock = new org.apache.hadoop.fs.Path(root, LockName)
-      fs.mkdirs(root)
-      val deadline = System.currentTimeMillis() + timeoutMs
-      val token = owner + ":" + java.util.UUID.randomUUID()
-      var held = false
-      while (!held) {
-        try {
-          val out = fs.create(lock, false)
-          out.write(s"$token ${System.currentTimeMillis()}".getBytes("UTF-8"))
-          out.close()
-          // STEAL-RACE GUARD (r13 ADVICE): a contender that measured
-          // staleness against the PREVIOUS holder's lock may delete the
-          // file we just created and take it for itself. Re-read and
-          // verify the lock still carries OUR token before proceeding —
-          // if it was stolen out from under us, loop and contend again
-          // instead of running as a second concurrent writer.
-          val readBack =
-            try {
-              val in = fs.open(lock)
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            } catch { case _: java.io.IOException => "" }
-          if (readBack.startsWith(token + " ")) held = true
-          else Thread.sleep(50)
-        } catch {
-          case _: java.io.IOException =>
-            // stale-lease steal: measure, then re-check the lock is
-            // STILL the one measured immediately before deleting — a
-            // blind delete could collect a fresh lock another contender
-            // created after our staleness probe
-            val seen =
-              try Some(fs.getFileStatus(lock).getModificationTime)
-              catch { case _: java.io.IOException => None }
-            val stale = seen.exists(m =>
-              System.currentTimeMillis() - m > leaseMs)
-            if (stale) {
-              val still =
-                try fs.getFileStatus(lock).getModificationTime == seen.get
-                catch { case _: java.io.IOException => false }
-              if (still) fs.delete(lock, false)
-            }
-            else if (System.currentTimeMillis() > deadline)
-              throw new IllegalStateException(
-                s"versioned-table lock on $dir not released in $timeoutMs ms")
-            else Thread.sleep(50)
-        }
-      }
-      try body
-      finally {
-        val ours =
-          try {
-            val in = fs.open(lock)
-            val head =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            head.startsWith(token + " ")
-          } catch { case _: java.io.IOException => false }
-        if (ours) fs.delete(lock, false)
-      }
-    }
-  }
+  private def withLock[T](spark: SparkSession, dir: String,
+                          owner: String)(body: => T): T =
+    store(spark, dir).withLock(owner)(body)
 
   // ------------------------------------------------------------------
   // reads
@@ -734,11 +370,8 @@ object VersionedTable {
     */
   private def writeSchema(spark: SparkSession, dir: String,
                           schema: org.apache.spark.sql.types.StructType)
-      : Unit = {
-    val (fs, root) = fsOf(spark, dir)
-    writeAtomic(fs, new org.apache.hadoop.fs.Path(root, SchemaName),
-      schema.json)
-  }
+      : Unit =
+    store(spark, dir).write(SchemaName, schema.json)
 
   /** The shape a read() of this table produces from a writer's declared
     * schema: partition columns move LAST (parquet reads append them),
@@ -757,17 +390,14 @@ object VersionedTable {
 
   private def liveSchemaOf(spark: SparkSession, dir: String)
       : Option[org.apache.spark.sql.types.StructType] =
-    liveManifestLines(spark, dir).flatMap(l => schemaOf(l.drop(1)))
+    store(spark, dir).live.flatMap(m => schemaOf(m.lines))
 
   private def storedSchema(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val (fs, root) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, SchemaName)
-    if (!fs.exists(p)) None
-    else scala.util.Try(org.apache.spark.sql.types.DataType
-      .fromJson(readLines(fs, p).mkString("\n"))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption
-  }
+      : Option[org.apache.spark.sql.types.StructType] =
+    store(spark, dir).read(SchemaName).flatMap(lines =>
+      scala.util.Try(org.apache.spark.sql.types.DataType
+        .fromJson(lines.mkString("\n"))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
 
   private def loadFiles(spark: SparkSession, dir: String,
                         files: Seq[String],
@@ -792,12 +422,11 @@ object VersionedTable {
     * consistent even while a mutation swaps underneath.
     */
   def read(spark: SparkSession, dir: String): DataFrame =
-    liveManifestLines(spark, dir) match {
-      case Some(_ :: rest) =>
-        loadFiles(spark, dir, rest.filterNot(_.startsWith("#")),
-          schemaOf(rest))
-      case _ => throw new IllegalArgumentException(
-        s"$dir is not a versioned table (no $ManifestName) — init() first")
+    store(spark, dir).live match {
+      case Some(m) => loadFiles(spark, dir, m.files, schemaOf(m.lines))
+      case None => throw new IllegalArgumentException(
+        s"$dir is not a versioned table (no ${Layout.manifest}) — " +
+          "init() first")
     }
 
   /** TIME TRAVEL: the table exactly as version `version` committed it.
@@ -805,21 +434,11 @@ object VersionedTable {
     * prune); an expired version fails fast here, never mid-scan.
     */
   def readAt(spark: SparkSession, dir: String, version: Long): DataFrame = {
-    val (fs, root) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(root, ManifestName + ".v" + version)
-    // the <= live check rejects PHANTOM versions (a crashed commit's
-    // history copy that never flipped live) alongside missing ones
-    val committed = readManifest(spark, dir).exists(version <= _._1)
-    if (!fs.exists(p) || !committed)
-      throw new IllegalArgumentException(
-        s"table version $version not retained under $dir " +
-          s"(retained: ${versions(spark, dir).mkString(", ")}) — raise " +
-          s"$RetainVersionsConf to keep more history")
-    val lines = readLines(fs, p)
+    val m = store(spark, dir).snapshot(version,
+      s" — raise $RetainVersionsConf to keep more history")
     // the version's OWN committed schema: a readAt across a later
     // evolution keeps the shape this version was written with
-    loadFiles(spark, dir, lines.drop(1).filterNot(_.startsWith("#")),
-      schemaOf(lines))
+    loadFiles(spark, dir, m.files, schemaOf(m.lines))
   }
 
   // ------------------------------------------------------------------
@@ -856,8 +475,9 @@ object VersionedTable {
                            epoch: Option[(String, Long)] = None,
                            schemaJson: Option[String] = None,
                            retainOv: Option[Long] = None): Long = {
-    val (fs, root) = fsOf(spark, dir)
-    val version = readManifest(spark, dir).map(_._1).getOrElse(0L) + 1
+    val st = store(spark, dir)
+    import st.{fs, root}
+    val version = st.live.fold(0L)(_.version) + 1
     val sub = "cm" + version + "-" +
       java.util.UUID.randomUUID().toString.take(8)
     val staging = new org.apache.hadoop.fs.Path(root, ".staging-" + sub)
@@ -865,7 +485,7 @@ object VersionedTable {
     val writer = df.write.mode("append")
     (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer)
       .parquet(staging.toString)
-    val newFiles = listDataFiles(spark, staging.toString).map { rel =>
+    val newFiles = store(spark, staging.toString).dataFiles.map { rel =>
       val segs = rel.split("/")
       val dstRel = ("data" +: segs.dropRight(1) :+
         (sub + "-" + segs.last)).mkString("/")
@@ -877,16 +497,8 @@ object VersionedTable {
       dstRel
     }
     fs.delete(staging, true)
-    // retirement stamps land BEFORE the manifest flip: the commit's
-    // availability prune must see the retired files as still-pending
-    // (else it would expire the immediately-previous version), and a
-    // crash between the two leaves stamped entries whose files the old
-    // live manifest still shields — held at replay, retried harmlessly.
-    if (retired.nonEmpty) {
-      val dueAt = version + effRetain(spark, retainOv)
-      writePending(spark, dir,
-        pendingEntries(spark, dir) ++ retired.map(r => s"$dueAt:$r"))
-    }
+    // retirement stamps land BEFORE the manifest flip
+    st.retire(retired, version + effRetain(spark, retainOv))
     // data-skipping stats for the files this commit wrote — footer
     // reads bounded by the commit's own file count, Try-guarded: a
     // stats miss only costs future skipping, never the commit
@@ -901,12 +513,8 @@ object VersionedTable {
 
   private def writePartitioning(spark: SparkSession, dir: String,
                                 cols: Seq[String]): Unit =
-    if (cols.nonEmpty) {
-      val (fs, root) = fsOf(spark, dir)
-      fs.mkdirs(root)
-      writeAtomic(fs, new org.apache.hadoop.fs.Path(root, PartitioningName),
-        cols.mkString("\n"))
-    }
+    if (cols.nonEmpty)
+      store(spark, dir).write(PartitioningName, cols.mkString("\n"))
 
   /** Create the table: `df` becomes version 1. Fails if a manifest
     * already exists (use [[overwrite]] to replace content).
@@ -927,7 +535,7 @@ object VersionedTable {
       // them and a later vacuum would physically delete the user's
       // pre-existing dataset as orphans. (One full listing here is
       // fine: init runs once, on an empty-or-new destination.)
-      require(listDataFiles(spark, dir).isEmpty,
+      require(store(spark, dir).dataFiles.isEmpty,
         s"$dir already holds data files — adopt() snapshots an " +
           "existing directory; init() is for new destinations")
       writePartitioning(spark, dir, partitionBy)
@@ -959,10 +567,10 @@ object VersionedTable {
       require(readManifest(spark, dir).isEmpty,
         s"$dir is already a versioned table")
       writePartitioning(spark, dir, partitionBy)
-      val (fs, root) = fsOf(spark, dir)
-      val qRoot = fs.makeQualified(root)
-      val formerParents = scala.collection.mutable.LinkedHashSet[String]()
-      val adopted = listDataFiles(spark, dir).map { rel =>
+      val st = store(spark, dir)
+      import st.{fs, root}
+      val moved = scala.collection.mutable.ArrayBuffer[String]()
+      val adopted = st.dataFiles.map { rel =>
         if (rel.startsWith("data/")) rel
         else {
           val dstRel = "data/" + rel
@@ -970,24 +578,14 @@ object VersionedTable {
           fs.mkdirs(dst.getParent)
           if (!fs.rename(new org.apache.hadoop.fs.Path(root, rel), dst))
             throw new java.io.IOException(s"adopt move $rel failed")
-          if (rel.contains("/"))
-            formerParents += rel.substring(0, rel.lastIndexOf("/"))
+          moved += rel
           dstRel
         }
       }
-      // fold away the now-empty former partition directories (deepest
-      // first; delete(_, false) refuses non-empty dirs, so user files
-      // are never at risk)
-      formerParents.toSeq.sortBy(-_.length).foreach { relDir =>
-        var p = new org.apache.hadoop.fs.Path(root, relDir)
-        var more = true
-        while (more && p != null && fs.makeQualified(p) != qRoot) {
-          more =
-            try fs.exists(p) && fs.listStatus(p).isEmpty && fs.delete(p, false)
-            catch { case _: java.io.IOException => false }
-          p = p.getParent
-        }
-      }
+      // fold away the now-empty former partition directories
+      // (delete(_, false) refuses non-empty dirs, so user files are
+      // never at risk)
+      moved.foreach(st.foldEmptyParents)
       commitManifest(spark, dir, 1L, adopted, retainOv = retain)
       // adopt has no writer schema to declare — infer one footer read
       // (the only schema probe the table will ever pay) and AMEND the
@@ -997,14 +595,8 @@ object VersionedTable {
       scala.util.Try {
         val sch = readShape(read(spark, dir).schema, partitionBy)
         writeSchema(spark, dir, sch)
-        liveManifestLines(spark, dir).foreach { lines =>
-          val body = (lines.head +: (s"#schema=${sch.json}" +:
-            lines.tail)).mkString("\n")
-          writeAtomic(fs,
-            new org.apache.hadoop.fs.Path(root, ManifestName + ".v1"), body)
-          writeAtomic(fs,
-            new org.apache.hadoop.fs.Path(root, ManifestName), body)
-        }
+        st.live.foreach(m =>
+          st.publish(m.version, s"#schema=${sch.json}" +: m.lines))
       }
       1L
     }
@@ -1088,10 +680,11 @@ object VersionedTable {
                             retainOv: Option[Long] = None,
                             probeKeys: Option[(Seq[String], DataFrame)]
                               = None): Long = {
-    val lines = liveManifestLines(spark, dir).getOrElse(
+    val st = store(spark, dir)
+    val m = st.live.getOrElse(
       throw new IllegalArgumentException(s"$dir: init() first"))
-    val live = lines.drop(1).filterNot(_.startsWith("#"))
-    val base = schemaOf(lines.drop(1))
+    val live = m.files
+    val base = schemaOf(m.lines)
     val liveDf = loadFiles(spark, dir, live, base)
     // DATA SKIPPING (stats header notes): for a key-equality rewrite,
     // the touch probe scans only files whose stats range can overlap
@@ -1099,16 +692,15 @@ object VersionedTable {
     // as few files as the rewrite touches, instead of the whole table
     val probeFiles = probeKeys match {
       case Some((keys, srcKeys)) => statsCandidates(spark, dir, live,
-        statsOf(lines.drop(1)), keys, srcKeys)
+        statsOf(m.lines), keys, srcKeys)
       case None => live
     }
-    val (fs, root) = fsOf(spark, dir)
     // scheme-robust relativization: input_file_name() returns a URI
     // (possibly %-encoded, `file:///...`), manifest paths are raw and
     // root-relative — compare URI *paths*, not prefix strings (a
     // `file:/x` vs `file:///x` qualification mismatch would silently
     // touch zero files)
-    val rootPath = fs.makeQualified(root).toUri.getPath
+    val rootPath = st.fs.makeQualified(st.root).toUri.getPath
     val touchedAbs = touchRows(
       loadFiles(spark, dir, probeFiles, base)
         .withColumn("_vt_file", input_file_name()))
@@ -1356,23 +948,14 @@ object VersionedTable {
                      fromV: Long, toV: Long,
                      keys: Seq[String]): DataFrame = {
     require(fromV < toV, s"changesBetween needs fromV < toV, got $fromV, $toV")
-    def linesAt(v: Long): List[String] = {
-      val (fs, root) = fsOf(spark, dir)
-      val p = new org.apache.hadoop.fs.Path(root, ManifestName + ".v" + v)
-      val committed = readManifest(spark, dir).exists(v <= _._1)
-      if (!fs.exists(p) || !committed)
-        throw new IllegalArgumentException(
-          s"table version $v not retained under $dir " +
-            s"(retained: ${versions(spark, dir).mkString(", ")})")
-      readLines(fs, p)
-    }
-    val toLines = linesAt(toV)
-    val from = linesAt(fromV).drop(1).filterNot(_.startsWith("#")).toSet
-    val to = toLines.drop(1).filterNot(_.startsWith("#")).toSet
+    val st = store(spark, dir)
+    val toM = st.snapshot(toV)
+    val from = st.snapshot(fromV).files.toSet
+    val to = toM.files.toSet
     // both sides read under toV's schema (the Delta CDF convention):
     // across an evolution, pre-images carry NULL for columns that did
     // not exist yet
-    val sch = schemaOf(toLines)
+    val sch = schemaOf(toM.lines)
     val before = loadFiles(spark, dir, (from -- to).toSeq.sorted, sch)
     val after = loadFiles(spark, dir, (to -- from).toSeq.sorted, sch)
     val cols = before.columns.toSeq
@@ -1408,14 +991,16 @@ object VersionedTable {
   /** Standalone deferred-delete replay + orphan sweep — the maintenance
     * entry point a scheduler calls. Mutations replay the due-delete
     * calendar themselves (O(pending)), but the orphan sweep's full
-    * directory walk lives ONLY here (see [[sweepOrphans]]).
+    * directory walk lives ONLY here: crash garbage is invisible to
+    * readers and isolated in its own commit subdirectory, so deferring
+    * it to a scheduled vacuum costs only disk.
     * Returns the physically deleted relative paths.
     */
   def vacuum(spark: SparkSession, dir: String,
              retain: Option[Long] = None): Seq[String] =
     withLock(spark, dir, "vacuum") {
       val deleted = replayPending(spark, dir, retain)
-      sweepOrphans(spark, dir)
+      store(spark, dir).sweep()
       deleted
     }
 
@@ -1471,30 +1056,19 @@ object VersionedTable {
               retain: Option[Long] = None): Long =
     withLock(spark, dir, "restore") {
       replayPending(spark, dir, retain)
-      val (fs, root) = fsOf(spark, dir)
-      val p = new org.apache.hadoop.fs.Path(root,
-        ManifestName + ".v" + version)
-      val cur = readManifest(spark, dir).getOrElse(
+      val st = store(spark, dir)
+      val cur = st.live.getOrElse(
         throw new IllegalArgumentException(s"$dir: init() first"))
-      if (!fs.exists(p) || version > cur._1)
-        throw new IllegalArgumentException(
-          s"table version $version not retained under $dir " +
-            s"(retained: ${versions(spark, dir).mkString(", ")})")
-      if (version == cur._1) cur._1
+      val m = st.snapshot(version)
+      if (version == cur.version) cur.version
       else {
-        val lines = readLines(fs, p)
-        val files = lines.drop(1).filterNot(_.startsWith("#"))
-        val newV = cur._1 + 1
-        val restoredSet = files.toSet
-        val retired = cur._2.filterNot(restoredSet)
-        if (retired.nonEmpty) {
-          val dueAt = newV + effRetain(spark, retain)
-          writePending(spark, dir,
-            pendingEntries(spark, dir) ++ retired.map(r => s"$dueAt:$r"))
-        }
-        commitManifest(spark, dir, newV, files,
-          schemaJson = schemaOf(lines).map(_.json), retainOv = retain,
-          newStats = statsOf(lines)) // restored files keep their stats
+        val newV = cur.version + 1
+        val restoredSet = m.files.toSet
+        st.retire(cur.files.filterNot(restoredSet),
+          newV + effRetain(spark, retain))
+        commitManifest(spark, dir, newV, m.files,
+          schemaJson = schemaOf(m.lines).map(_.json), retainOv = retain,
+          newStats = statsOf(m.lines)) // restored files keep their stats
         newV
       }
     }

@@ -498,20 +498,23 @@ object Similarity {
                  indexDir: String, tombs: DataFrame, tombIdCol: String,
                  stageDir: String): Seq[Long] =
     withMaintenanceLock(spark, indexDir, "compact") {
+      val store = indexStore(spark, indexDir)
+      val retain = retainVersions(spark)
       // a predecessor's deferred deletes fall due now: their grace
       // window (readers pinned on the pre-swap manifest) ends at the
       // next maintenance op — this one. Also finishes a crashed
       // predecessor's cleanup, so this run never reads resurrected rows.
-      replayPendingDeletes(spark, indexDir)
+      store.replay(retain)
       // first locked op on a pre-manifest index: snapshot the pristine
-      // listing BEFORE mutating, then drop crash garbage (files a died
-      // mutator wrote but never committed — unreferenced by definition)
-      bootstrapManifest(spark, indexDir)
-      sweepOrphanFiles(spark, indexDir)
+      // listing as version 1 BEFORE mutating, then drop crash garbage
+      // (files a died mutator wrote but never committed — unreferenced
+      // by definition)
+      if (store.live.isEmpty) store.commit(1L, store.dataFiles, retain = retain)
+      store.sweep()
       // replay can leave the index EMPTY (every cell was pending
       // delete — the all-tombstoned corner); nothing to compact, and a
       // schema-less parquet read would throw
-      val emptyIndex = listDataFiles(spark, indexDir).isEmpty
+      val emptyIndex = store.dataFiles.isEmpty
       // duplicate-tolerant: a replayed delete must not change the outcome
       val tset = tombs.select(col(tombIdCol)).distinct()
       val affected =
@@ -533,13 +536,12 @@ object Similarity {
         val surviving = rewrite.groupBy("c_cell").agg(count(lit(1)))
           .select("c_cell").collect().map(_.getLong(0)).toSet
         val affectedSet = affected.toSet
-        val before = listDataFiles(spark, indexDir)
+        val before = store.dataFiles
         // the new version derives from the current LIVE list, never the
         // disk listing: under retention > 0 the disk also holds older
         // versions' retained files, which a listing-based commit would
         // RESURRECT into the new version (caught by IndexRetentionSpec)
-        val live0 = readManifest(spark, indexDir).map(_._2)
-          .getOrElse(before)
+        val live0 = store.live.map(_.files).getOrElse(before)
         // the affected cells' current LIVE files — replaced in the
         // manifest now, physically deleted when their stamp falls due
         val oldFiles = live0.filter(f =>
@@ -566,52 +568,35 @@ object Similarity {
             .partitionBy("c_cell").parquet(indexDir)
         }
         val beforeSet = before.toSet
-        val newFiles = listDataFiles(spark, indexDir)
-          .filterNot(beforeSet)
-        val version = readManifest(spark, indexDir).map(_._1).getOrElse(0L)
-        // Deferred physical cleanup, stamped with the DUE version
-        // (the commit below + the retention in force now, so later ops
-        // with a different conf honor the promise): the replaced
-        // files, plus fully-dead cells' now-empty partition
-        // directories. MERGED with entries the entry replay kept —
-        // under retention > 0 earlier retirements may still be inside
-        // their window. Stamped BEFORE the manifest flip (r12 ADVICE):
-        // the commit's availability prune must see the retired files
-        // as still-pending, or it would expire the immediately-
-        // previous version; a crash between the two leaves entries
-        // whose files the still-live old manifest shields at replay.
+        val newFiles = store.dataFiles.filterNot(beforeSet)
+        val version = store.live.fold(0L)(_.version)
+        // the replaced files plus fully-dead cells' partition
+        // directories, stamped with the DUE version before the flip
+        // (the calendar rules are in graft.Snapshots' header)
         val fullyDead = affected.filterNot(surviving)
-        val dueAt = version + 1 + retainVersions(spark)
-        val retired = (oldFiles ++ fullyDead.map(c => s"c_cell=$c"))
-          .map(e => s"$dueAt:$e")
-        writePendingDeletes(spark, indexDir,
-          readPendingEntries(spark, indexDir) ++ retired)
+        store.retire(oldFiles ++ fullyDead.map(c => s"c_cell=$c"),
+          version + 1 + retain)
         // THE swap: one atomic rename flips every reader from the old
         // file set to the new. A crash before this line leaves the old
         // manifest serving the old view (the appended files are orphans
         // the next run sweeps); after it, the old files are garbage.
-        commitManifest(spark, indexDir, version + 1,
-          (live0.toSet -- oldFiles.toSet).toSeq ++ newFiles)
+        store.commit(version + 1,
+          (live0.toSet -- oldFiles.toSet).toSeq ++ newFiles, retain = retain)
       }
       affected
     }
 
-  /** Name of the maintenance-lock file under an index directory. */
-  private val MaintLockName = "_graft_maint_lock"
-
-  /** Name of the pending-delete manifest under an index directory. */
-  private val PendingDeleteName = "_graft_pending_delete"
-
-  /** Name of the live-file manifest under an index directory (r11-
-    * verdict item 4). First line: version; remaining lines: the
-    * RELATIVE paths of exactly the data files a reader may see —
-    * committed by write-temp-then-rename, so any reader observes one
-    * whole version, never a mid-swap directory listing. Absent on an
-    * index that has never run a locked maintenance op (every mutator
-    * bootstraps it), in which case the directory listing is the truth
-    * exactly as before.
+  /** On-disk names of the index's snapshot store ([[graft.Snapshots]]):
+    * `_graft_manifest` (+ `.vN` history) lists exactly the data files a
+    * reader may see; absent on an index that never ran a locked
+    * maintenance op, where the directory listing stays the truth.
     */
-  private val ManifestName = "_graft_manifest"
+  private val IndexLayout = graft.Snapshots.Layout(
+    "_graft_manifest", "_graft_pending_delete", "_graft_maint_lock")
+
+  private def indexStore(spark: org.apache.spark.sql.SparkSession,
+                         indexDir: String) =
+    graft.Snapshots(spark, indexDir, IndexLayout)
 
   /** Session conf: how many PREVIOUS manifest versions stay fully
     * readable alongside the latest (Iceberg's snapshot-retention knob,
@@ -633,241 +618,15 @@ object Similarity {
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .map(math.max(0L, _)).getOrElse(0L)
 
-  /** Relative paths of the index's data files — every file whose path
-    * has no `_`/`.`-prefixed segment — via one recursive listing.
-    */
-  private[graft] def listDataFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    val rootStr = fs.makeQualified(root).toString
-    def walk(p: org.apache.hadoop.fs.Path): Seq[String] =
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-        else if (st.isDirectory) walk(st.getPath)
-        else Seq(st.getPath.toString.stripPrefix(rootStr)
-          .stripPrefix("/"))
-      }
-    walk(root).sorted
-  }
-
-  /** The live-file manifest, when present: (version, relative paths).
-    * Resilient to the live pointer's delete-then-rename swap window
-    * (and to a writer crash inside it): when `_graft_manifest` is
-    * momentarily or permanently absent but `.vN` history copies exist,
-    * the HIGHEST one is byte-identical to what the rename would have
-    * published (the history copy lands first, its data files earlier
-    * still) and serves as the fallback truth. None only on a genuinely
-    * pre-manifest index — where the directory listing stays the truth,
-    * exactly as before.
-    */
-  private[graft] def readManifest(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Option[(Long, Seq[String])] = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, ManifestName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def parse(path: org.apache.hadoop.fs.Path): Option[(Long, Seq[String])] = {
-      val in = fs.open(path)
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(_.trim).filter(_.nonEmpty).toList
-        finally in.close()
-      lines match {
-        case v :: files => Some((v.toLong, files))
-        case Nil => Some((0L, Nil))
-      }
-    }
-    if (fs.exists(p))
-      try return parse(p)
-      catch { case _: java.io.FileNotFoundException => () } // lost the race
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    if (!fs.exists(root)) return None
-    val hist = fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith(ManifestName + ".v"))
-      .flatMap(n => scala.util.Try(
-        n.stripPrefix(ManifestName + ".v").toLong).toOption)
-    if (hist.isEmpty) None
-    else parse(new org.apache.hadoop.fs.Path(indexDir,
-      ManifestName + ".v" + hist.max))
-  }
-
-  /** Atomically publish manifest `version` listing `files` (relative
-    * paths): write `.tmp`, rename over — the same discipline as
-    * [[writePendingDeletes]], so a reader sees the old version or the
-    * new one, never a torn list.
-    */
-  private def commitManifest(spark: org.apache.spark.sql.SparkSession,
-                             indexDir: String, version: Long,
-                             files: Seq[String]): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(indexDir, ManifestName)
-    val tmp = new org.apache.hadoop.fs.Path(indexDir,
-      ManifestName + ".tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val body = (version.toString +: files.sorted).mkString("\n")
-      .getBytes("UTF-8")
-    // history copy FIRST (a crash between the two leaves a PHANTOM
-    // `.vN` that readers exclude and the next mutation overwrites or
-    // prunes; a crash inside the live flip's delete-rename window is
-    // recovered by [[readManifest]]'s highest-`.vN` fallback), then the
-    // flip of the live pointer. The history copy is ALSO written
-    // temp-then-rename: a torn `.vN` read by [[ivfOpenIndexAt]] would
-    // silently serve a partial file list.
-    val histDst = new org.apache.hadoop.fs.Path(indexDir,
-      ManifestName + ".v" + version)
-    val histTmp = new org.apache.hadoop.fs.Path(indexDir,
-      ManifestName + ".v" + version + ".tmp")
-    val h = fs.create(histTmp, true)
-    h.write(body)
-    h.close()
-    fs.delete(histDst, false)
-    if (!fs.rename(histTmp, histDst))
-      throw new java.io.IOException(s"rename $histTmp -> $histDst failed")
-    val out = fs.create(tmp, true)
-    out.write(body)
-    out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename $tmp -> $dst failed")
-    pruneHistoryManifests(spark, indexDir)
-  }
-
-  /** History-manifest expiry by AVAILABILITY, not by the retention conf
-    * in force at prune time (r12 ADVICE: the old `version - retain`
-    * boundary broke both ways when the conf changed between ops —
-    * raising it kept `.vN` files whose data was already deleted under
-    * the earlier smaller window, so [[ivfOpenIndexAt]] failed MID-SCAN
-    * instead of fast; lowering it pruned manifests still inside the
-    * window promised to time-travel readers at retirement). The rule:
-    * `.vN` stays exactly as long as EVERY file it references is either
-    * live or still awaiting a scheduled delete (stamp beyond the
-    * current version, matched exactly or by cell-directory prefix),
-    * and drops the moment any referenced file is gone or due. The
-    * stamps are frozen at retirement, so both channels — physical
-    * deletion and metadata expiry — honor the SAME window regardless of
-    * later conf changes; under a constant conf this reproduces the old
-    * boundary. Runs after every commit AND after every replay (a replay
-    * physically deletes files, which can expire versions).
-    */
-  private def pruneHistoryManifests(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Unit = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    readManifest(spark, indexDir).foreach { case (version, live) =>
-      // three tiers per referenced file: LIVE → available; covered by a
-      // pending stamp → available exactly while the stamp is not due
-      // (metadata expiry LEADS physical deletion by design — the window
-      // closes when the promise does, even if the replay lags an op);
-      // covered by NO stamp → fall back to on-disk existence (the
-      // crash-lost-pending case: the file is shielded from the sweep by
-      // this very manifest, so the version stays whole).
-      val stamped = readPendingEntries(spark, indexDir).flatMap { e =>
-        PendingStamp.findFirstMatchIn(e).map { m =>
-          val raw = m.group(2)
-          val rel = if (raw.forall(c => c.isDigit || c == '-'))
-            s"c_cell=$raw"
-          else raw
-          (rel, m.group(1).toLong)
-        }
-      }
-      val liveSet = live.toSet
-      lazy val onDisk = listDataFiles(spark, indexDir).toSet
-      def available(rel: String): Boolean =
-        liveSet(rel) || {
-          val covering = stamped.filter { case (p, _) =>
-            rel == p || rel.startsWith(p + "/") }
-          if (covering.nonEmpty) covering.exists(_._2 > version)
-          else onDisk(rel)
-        }
-      // KEEP = all files available AND (inside the retention window OR
-      // extended by a still-running retirement stamp — the promise
-      // frozen when its files retired). The window bound matters on
-      // APPEND-ONLY indexes (a streaming refresh commits per micro-
-      // batch and retires nothing): availability alone would keep every
-      // version forever — O(N²) manifest metadata after N batches.
-      val keepFrom = version - retainVersions(spark)
-      fs.listStatus(root).foreach { st =>
-        val n = st.getPath.getName
-        val v = if (n.startsWith(ManifestName + ".v"))
-          scala.util.Try(n.stripPrefix(ManifestName + ".v").toLong)
-            .toOption
-        else None
-        // N > version is a PHANTOM (a crashed commit's history copy
-        // that never flipped live): never readable, pruned on sight
-        v.filter(_ > version).foreach(_ => fs.delete(st.getPath, false))
-        v.filter(_ < version).foreach { nv =>
-          val in = fs.open(st.getPath)
-          val refs =
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-              .map(_.trim).filter(_.nonEmpty).drop(1).toList
-            finally in.close()
-          val extended = refs.exists(r => stamped.exists { case (p, d) =>
-            (r == p || r.startsWith(p + "/")) && d > version })
-          val keep = refs.forall(available) &&
-            (nv >= keepFrom || extended)
-          if (!keep) fs.delete(st.getPath, false)
-        }
-      }
-    }
-  }
-
-  /** First locked maintenance op on a pre-manifest index: snapshot the
-    * current (pristine) listing as version 1 BEFORE any mutation, so a
-    * crash mid-mutation leaves readers the old view and the next run's
-    * [[sweepOrphanFiles]] can tell crash garbage from live data.
-    * No-op when a manifest already exists. Caller must hold the lock.
-    */
-  private def bootstrapManifest(spark: org.apache.spark.sql.SparkSession,
-                                indexDir: String): Unit =
-    if (readManifest(spark, indexDir).isEmpty)
-      commitManifest(spark, indexDir, 1L, listDataFiles(spark, indexDir))
-
-  /** Delete data files present on disk but absent from the manifest —
-    * crash garbage from a mutator that died between writing files and
-    * committing (an uncommitted file is unreferenced by construction:
-    * every mutator commits under the lock we hold). No-op without a
-    * manifest. Caller must hold the lock.
-    */
-  private def sweepOrphanFiles(spark: org.apache.spark.sql.SparkSession,
-                               indexDir: String): Unit =
-    readManifest(spark, indexDir).foreach { case (_, _) =>
-      // Spared from the sweep: everything a reader may still open
-      // (live + retained history manifests — [[protectedFiles]], which
-      // also covers a crash between a compaction's manifest commit and
-      // its pending write: the retired files stay referenced by their
-      // last version's history manifest until retention expires them),
-      // plus files awaiting a SCHEDULED delete (not orphans — they are
-      // the retained versions' data on the cleanup calendar; a pending
-      // cell-directory entry covers every file under it).
-      val shield = protectedFiles(spark, indexDir)
-      val pendingPrefixes = readPendingEntries(spark, indexDir).map { e =>
-        val raw = PendingStamp.findFirstMatchIn(e)
-          .map(_.group(2)).getOrElse(e)
-        if (raw.forall(c => c.isDigit || c == '-')) s"c_cell=$raw" else raw
-      }
-      def pendingCovers(rel: String): Boolean =
-        pendingPrefixes.exists(p => rel == p || rel.startsWith(p + "/"))
-      val root = new org.apache.hadoop.fs.Path(indexDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      listDataFiles(spark, indexDir).filterNot(shield)
-        .filterNot(pendingCovers).foreach { rel =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, rel), false)
-        }
-    }
-
   /** Load exactly the index's LIVE files: via the manifest when one
     * exists (`basePath` keeps the `c_cell=` partition column), else
     * the plain directory read. The manifest path is what gives
-    * readers a consistent snapshot while maintenance runs — see
-    * [[withMaintenanceLock]]'s isolation notes.
+    * readers a consistent snapshot while maintenance runs.
     */
   private def loadLive(spark: org.apache.spark.sql.SparkSession,
                        indexDir: String): DataFrame =
-    readManifest(spark, indexDir) match {
-      case Some((_, files)) => loadFileList(spark, indexDir, files)
+    indexStore(spark, indexDir).live match {
+      case Some(m) => loadFileList(spark, indexDir, m.files)
       case None => spark.read.parquet(indexDir)
     }
 
@@ -904,210 +663,31 @@ object Similarity {
                 org.apache.spark.sql.types.LongType))))
       }
 
-  /** In-process layer of the maintenance lock: one monitor per index
-    * directory. Same-driver mutators (a streaming query's foreachBatch
-    * and a scheduled compactor sharing the SparkSession — exactly the
-    * st27/n25 pair) serialize here without touching storage; the FILE
-    * lock below carries the cross-driver story.
-    */
-  private val jvmMaintLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
   /** MAINTENANCE SERIALIZATION for a persisted cell-partitioned index
     * (r10-verdict item 1): the streaming refresh ([[ivfAssignDelta]]
     * appends from a foreachBatch sink) and the compaction
-    * ([[ivfCompact]]'s staged-write + dynamic-overwrite swap) mutate
-    * the SAME cell directories; two writers interleaving file-level
-    * operations could double-apply a cell or swap a stale stage over a
-    * fresh append. Every mutator therefore runs under this lock,
-    * layered:
+    * ([[ivfCompact]]'s staged-write + manifest swap) mutate the SAME
+    * cell directories; two writers interleaving file-level operations
+    * could double-apply a cell or swap a stale stage over a fresh
+    * append, so every mutator runs under this lock — the snapshot
+    * store's two-layer writer lock on `_graft_maint_lock` (protocol and
+    * guards: [[graft.Snapshots]]' header). MaintenanceLockSpec pins
+    * contention, lease steal, the crash-replay manifest, and
+    * two-compactor idempotence; the n29 gate RACES a live refresh
+    * against a compaction under this lock and proves the served index
+    * equals a full rebuild.
     *
-    *   1. an in-process monitor keyed by index directory — same-driver
-    *      writers (the common deployment: refresh stream + scheduled
-    *      compactor in one app) serialize without storage round trips;
-    *   2. a CREATE-NO-OVERWRITE of `_graft_maint_lock` inside the index
-    *      directory — the HDFS/object-store primitive for cross-driver
-    *      mutual exclusion (atomic create on HDFS, conditional PUT on
-    *      S3; on RawLocalFileSystem check-then-create is not atomic,
-    *      which is exactly why layer 1 exists for the single-host
-    *      case). The file holds owner + timestamp; contenders poll,
-    *      and a lock older than `leaseMs` is presumed crashed and
-    *      stolen (a dead driver must not wedge maintenance forever).
-    *
-    * The `_` prefix keeps every spark.read of the index blind to the
-    * file. MaintenanceLockSpec pins contention, lease steal, the
-    * crash-replay manifest, and two-compactor idempotence; the n29
-    * gate RACES a live refresh against a compaction under this lock
-    * and proves the served index equals a full rebuild.
-    *
-    * READER isolation (r11-verdict item 4) comes from the LIVE-FILE
-    * MANIFEST, not the lock: every mutator commits `_graft_manifest`
-    * (version + the exact data-file list) by atomic rename, writes new
-    * files BEFORE the commit, and defers deleting replaced files to
-    * the NEXT maintenance op — so [[ivfOpenIndex]] pins a consistent
-    * snapshot without locking, and that snapshot survives at least one
-    * full maintenance cycle of concurrent swaps (IndexSnapshotSpec
-    * races a pinned reader against a whole compaction). A reader that
-    * outlives TWO maintenance ops can still lose its files to the
-    * deferred delete — the remaining honest gap; closing it needs
-    * reference-counted snapshots (Iceberg/Delta), the deployment-grade
-    * upgrade for a parquet-directory index.
+    * READER isolation (r11-verdict item 4) comes from the live-file
+    * manifest, not the lock: [[ivfOpenIndex]] pins a consistent
+    * snapshot without locking, and replaced files stay on disk until
+    * their retention stamp falls due (IndexSnapshotSpec races a pinned
+    * reader against a whole compaction).
     */
   def withMaintenanceLock[T](spark: org.apache.spark.sql.SparkSession,
                              indexDir: String, owner: String,
                              leaseMs: Long = 600000L,
-                             timeoutMs: Long = 600000L)(body: => T): T = {
-    val mon = jvmMaintLocks.computeIfAbsent(indexDir, _ => new Object)
-    mon.synchronized {
-      val lock = new org.apache.hadoop.fs.Path(indexDir, MaintLockName)
-      val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.mkdirs(lock.getParent)
-      val deadline = System.currentTimeMillis() + timeoutMs
-      // contender-unique token written into the lock: release only
-      // deletes the lock if it still holds OUR token, so a holder that
-      // outlived its lease (and was stolen from) cannot delete the new
-      // holder's lock on its way out
-      val token = owner + ":" + java.util.UUID.randomUUID()
-      var held = false
-      while (!held) {
-        try {
-          val out = fs.create(lock, false) // create-no-overwrite
-          out.write(s"$token ${System.currentTimeMillis()}"
-            .getBytes("UTF-8"))
-          out.close()
-          held = true
-        } catch {
-          case _: java.io.IOException =>
-            // lock exists (or raced): steal iff the lease expired.
-            // The steal is RENAME-then-verify-then-delete, never a
-            // direct delete: two cross-driver contenders can both
-            // observe the stale file's mtime as expired, and a direct
-            // delete from the slower one would remove the faster
-            // one's freshly CREATED lock (two writers inside).
-            // Renaming the stale file to a contender-unique name lets
-            // exactly one contender win the rename; the winner then
-            // VERIFIES it renamed the very file it judged stale (same
-            // content) — a contender that stalled between its
-            // staleness check and its rename could otherwise move a
-            // FRESH lock created in between — and renames it back if
-            // not. Both then loop to create(), which arbitrates
-            // atomically.
-            val observed =
-              try {
-                val st = fs.getFileStatus(lock)
-                if (System.currentTimeMillis() - st.getModificationTime
-                    > leaseMs) {
-                  val in = fs.open(lock)
-                  try Some(scala.io.Source.fromInputStream(in, "UTF-8")
-                    .mkString)
-                  finally in.close()
-                } else None
-              } catch { case _: java.io.IOException => None }
-            observed match {
-              case Some(staleContent) =>
-                val steal = new org.apache.hadoop.fs.Path(indexDir,
-                  MaintLockName + ".steal." + java.util.UUID.randomUUID())
-                val won =
-                  try fs.rename(lock, steal)
-                  catch { case _: java.io.IOException => false }
-                if (won) {
-                  val moved =
-                    try {
-                      val in = fs.open(steal)
-                      try scala.io.Source.fromInputStream(in, "UTF-8")
-                        .mkString
-                      finally in.close()
-                    } catch { case _: java.io.IOException => "" }
-                  if (moved == staleContent) fs.delete(steal, false)
-                  else fs.rename(steal, lock) // moved a FRESH lock: undo
-                }
-              case None =>
-                if (System.currentTimeMillis() > deadline)
-                  throw new IllegalStateException(
-                    s"maintenance lock on $indexDir not released within " +
-                      s"$timeoutMs ms")
-                else Thread.sleep(50)
-            }
-        }
-      }
-      // housekeeping: a contender that crashed between its steal
-      // rename and its delete leaves an orphan .steal.<uuid> file —
-      // litter, never live state (nothing reads them). Sweep ones
-      // older than the lease while we hold the lock.
-      try {
-        fs.listStatus(new org.apache.hadoop.fs.Path(indexDir)).foreach {
-          st =>
-            if (st.getPath.getName.startsWith(MaintLockName + ".steal.")
-                && System.currentTimeMillis() - st.getModificationTime
-                  > leaseMs)
-              fs.delete(st.getPath, false)
-        }
-      } catch { case _: java.io.IOException => () }
-      try body
-      finally {
-        // Release only deletes the lock while the lease is still LIVE
-        // and the token is ours: a holder that outlived its lease must
-        // leave the file for lease-steal (it cannot know whether a
-        // stealer already replaced it). Residual window: a holder that
-        // reads its own live token, then stalls past expiry before the
-        // delete, can still remove a stealer's fresh lock — closing
-        // that needs a store-side conditional delete (S3
-        // If-Match/HDFS ownership), documented as the deployment-grade
-        // upgrade path.
-        val stillOurs =
-          try {
-            val st = fs.getFileStatus(lock)
-            val live =
-              System.currentTimeMillis() - st.getModificationTime <= leaseMs
-            val in = fs.open(lock)
-            val head =
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-            live && head.startsWith(token + " ")
-          } catch { case _: java.io.IOException => false }
-        if (stillOurs) fs.delete(lock, false)
-      }
-    }
-  }
-
-  /** Persist the deferred-delete list as `_graft_pending_delete`
-    * (write-temp-then-rename, so a half-written manifest is never
-    * visible): index-relative paths — replaced data files and
-    * fully-dead `c_cell=<id>` directories. A bare cell id is also
-    * accepted on replay (the pre-manifest format, same meaning as its
-    * directory path). Replayed by [[replayPendingDeletes]].
-    */
-  /** Current pending-delete entries verbatim (stamped or legacy), empty
-    * when no manifest is pending.
-    */
-  private def readPendingEntries(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, PendingDeleteName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .split("\\s+").filter(_.nonEmpty).toSeq
-      finally in.close()
-    }
-  }
-
-  private def writePendingDeletes(
-      spark: org.apache.spark.sql.SparkSession, indexDir: String,
-      entries: Seq[String]): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(indexDir, PendingDeleteName)
-    val tmp = new org.apache.hadoop.fs.Path(indexDir,
-      PendingDeleteName + ".tmp")
-    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(tmp, true)
-    out.write(entries.mkString("\n").getBytes("UTF-8"))
-    out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"rename $tmp -> $dst failed")
-  }
+                             timeoutMs: Long = 600000L)(body: => T): T =
+    indexStore(spark, indexDir).withLock(owner, leaseMs, timeoutMs)(body)
 
   /** OPEN a persisted cell-partitioned index for serving: replay any
     * pending-delete manifest first (the Lucene open-time discipline —
@@ -1119,6 +699,7 @@ object Similarity {
     */
   def ivfOpenIndex(spark: org.apache.spark.sql.SparkSession,
                    indexDir: String): DataFrame = {
+    val store = indexStore(spark, indexDir)
     // Manifest-mode index (any index that has run a locked maintenance
     // op): load exactly the committed live files — a pending-delete
     // list may coexist (deferred cleanup awaiting the next maintenance
@@ -1126,7 +707,7 @@ object Similarity {
     // neither replays nor locks; it cannot shorten other readers'
     // grace window, and it returns a consistent SNAPSHOT that survives
     // one full maintenance cycle even if a compaction swaps mid-query.
-    if (readManifest(spark, indexDir).isDefined)
+    if (store.live.isDefined)
       return loadLive(spark, indexDir)
         .withColumn("c_cell", col("c_cell").cast("long"))
     // Pre-manifest index: the directory listing is the truth, so a
@@ -1138,9 +719,7 @@ object Similarity {
     // never queue behind a long compaction; the replay re-checks
     // inside the lock because a compactor may have replayed while we
     // waited.
-    val p = new org.apache.hadoop.fs.Path(indexDir, PendingDeleteName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
+    if (store.pending.nonEmpty)
       withMaintenanceLock(spark, indexDir, "open") {
         replayPendingDeletes(spark, indexDir)
       }
@@ -1158,31 +737,9 @@ object Similarity {
     */
   def ivfOpenIndexAt(spark: org.apache.spark.sql.SparkSession,
                      indexDir: String, version: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexDir,
-      ManifestName + ".v" + version)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // `> live` is a PHANTOM — a crashed commit's history copy that
-    // never flipped the live pointer; it was never committed, so it is
-    // "not retained" exactly like a pruned version
-    val committed = readManifest(spark, indexDir).exists(version <= _._1)
-    if (!fs.exists(p) || !committed) {
-      val avail = fs.listStatus(new org.apache.hadoop.fs.Path(indexDir))
-        .map(_.getPath.getName)
-        .filter(_.startsWith(ManifestName + ".v"))
-        .flatMap(n => scala.util.Try(
-          n.stripPrefix(ManifestName + ".v").toLong).toOption)
-        .sorted
-      throw new IllegalArgumentException(
-        s"index version $version not retained under $indexDir " +
-          s"(retained: ${avail.mkString(", ")}) — raise " +
-          s"$RetainVersionsConf to keep more history")
-    }
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
-      finally in.close()
-    loadFileList(spark, indexDir, lines.drop(1))
+    val m = indexStore(spark, indexDir).snapshot(version,
+      s" — raise $RetainVersionsConf to keep more history")
+    loadFileList(spark, indexDir, m.files)
       .withColumn("c_cell", col("c_cell").cast("long"))
   }
 
@@ -1206,127 +763,30 @@ object Similarity {
       .repartition(col("c_cell"))
       .write.mode("append").partitionBy("c_cell")
       .parquet(indexDir)
-    readManifest(spark, indexDir) match {
-      case Some((version, live)) =>
-        val before = listDataFiles(spark, indexDir).toSet
+    val store = indexStore(spark, indexDir)
+    store.live match {
+      case Some(m) =>
+        val before = store.dataFiles.toSet
         write()
-        val appended = listDataFiles(spark, indexDir).filterNot(before)
-        commitManifest(spark, indexDir, version + 1, live ++ appended)
+        val appended = store.dataFiles.filterNot(before)
+        store.commit(m.version + 1, m.files ++ appended,
+          retain = retainVersions(spark))
       case None => write()
     }
   }
 
-  /** Replay a pending-delete manifest: delete the listed entries —
-    * index-relative paths (a compaction's replaced files and
-    * fully-dead cell directories whose reader-grace window has
-    * closed), or bare cell ids in the pre-manifest format (meaning
-    * `c_cell=<id>`) — idempotently (a missing path is already done),
-    * then remove the manifest. Called at the top of every
-    * [[ivfCompact]] (where deferred deletes fall due) and by the
-    * legacy no-live-manifest open path (the Lucene
-    * replay-deletes-on-open discipline). Returns the replayed entries.
+  /** Replay the index's pending-delete manifest: delete the due
+    * entries — a compaction's replaced files and fully-dead cell
+    * directories whose reader-grace window has closed, or bare cell ids
+    * in the pre-manifest format — idempotently, then drop them from the
+    * calendar (rules: [[graft.Snapshots]]' header). Called at the top of
+    * every [[ivfCompact]] and by the legacy no-live-manifest open path
+    * (the Lucene replay-deletes-on-open discipline). Returns the
+    * replayed entries.
     */
   def replayPendingDeletes(spark: org.apache.spark.sql.SparkSession,
-                           indexDir: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(indexDir, PendingDeleteName)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val txt =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val entries = txt.split("\\s+").filter(_.nonEmpty).toSeq
-      // An entry is due when the live version reaches the DUE version
-      // stamped at retirement (= retiring commit + the retention in
-      // force THEN — so a later op running with a smaller retain
-      // cannot collapse a window already promised to readers); legacy
-      // unstamped entries (bare cell ids or paths from a pre-r12
-      // pending file) are always due.
-      val latest = readManifest(spark, indexDir).map(_._1).getOrElse(0L)
-      val (due, notDue) = entries.partition { e =>
-        PendingStamp.findFirstMatchIn(e) match {
-          case Some(m) => latest >= m.group(1).toLong
-          case None => true
-        }
-      }
-      // Never delete a file the live manifest or a retained history
-      // manifest still references: an append can legitimately COMMIT
-      // new files into a cell directory whose pending entry predates
-      // it (the resurrected-cell case — a recursive directory delete
-      // would take the live files with it), and a crash between a
-      // compaction's manifest commit and its pending write must not
-      // turn retained files into sweepable orphans.
-      val shield = protectedFiles(spark, indexDir)
-      val replayed = scala.collection.mutable.ArrayBuffer[String]()
-      val held = scala.collection.mutable.ArrayBuffer[String]()
-      due.foreach { e =>
-        val raw = PendingStamp.findFirstMatchIn(e)
-          .map(_.group(2)).getOrElse(e)
-        val rel =
-          if (raw.forall(c => c.isDigit || c == '-')) s"c_cell=$raw"
-          else raw
-        if (!rel.contains("/")) {
-          // a cell DIRECTORY: delete its unprotected files. If
-          // protected files remain, the cell was RESURRECTED by later
-          // committed appends — the scheduled delete is complete (the
-          // survivors belong to the cell's new life and have their own
-          // lifecycle), so the directory stays and the entry retires.
-          val dirPath = new org.apache.hadoop.fs.Path(indexDir, rel)
-          val under = listDataFiles(spark, indexDir)
-            .filter(f => f == rel || f.startsWith(rel + "/"))
-          under.filterNot(shield).foreach { f =>
-            fs.delete(new org.apache.hadoop.fs.Path(indexDir, f), false)
-          }
-          if (!under.exists(shield)) fs.delete(dirPath, true)
-          replayed += e
-        } else if (shield(rel)) held += e
-        else {
-          fs.delete(new org.apache.hadoop.fs.Path(indexDir, rel), false)
-          replayed += e
-        }
-      }
-      val kept = notDue ++ held
-      if (kept.isEmpty) fs.delete(p, false)
-      else writePendingDeletes(spark, indexDir, kept)
-      // deleting files can EXPIRE retained versions — their history
-      // manifests must leave with them so [[ivfOpenIndexAt]] fails
-      // fast ("not retained"), never mid-scan on a missing file
-      if (replayed.nonEmpty) pruneHistoryManifests(spark, indexDir)
-      replayed.toSeq
-    }
-  }
-
-  /** Stamped pending-delete entry: `<dueAtVersion>:<relativePath>`.
-    * Parquet data paths never contain `:`; bare-digit and unstamped
-    * legacy entries fall through to "always due".
-    */
-  private val PendingStamp = "^([0-9]+):(.+)$".r
-
-  /** Every file some reader may still legitimately open: the live
-    * manifest's list plus every RETAINED history manifest's — the
-    * protection set for [[replayPendingDeletes]] and
-    * [[sweepOrphanFiles]]. History manifests are pruned at commit in
-    * step with retention, so protection expires exactly when the
-    * versions referencing a file do.
-    */
-  private def protectedFiles(
-      spark: org.apache.spark.sql.SparkSession,
-      indexDir: String): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(indexDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Set.empty
-    val hist = fs.listStatus(root).toSeq
-      .filter(_.getPath.getName.startsWith(ManifestName + ".v"))
-      .flatMap { st =>
-        val in = fs.open(st.getPath)
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .map(_.trim).filter(_.nonEmpty).drop(1).toList
-        finally in.close()
-      }
-    (readManifest(spark, indexDir).map(_._2).getOrElse(Seq.empty) ++
-      hist).toSet
-  }
+                           indexDir: String): Seq[String] =
+    indexStore(spark, indexDir).replay(retainVersions(spark))
 
   /** The rewrite side of [[ivfCompact]]: a partition-pruned read of the
     * affected cells with the tombstones anti-joined out.

@@ -243,33 +243,6 @@ object StreamOps {
       .as[UserSessions]
   }
 
-  /** Typed alternative to [[sessionizeBatch]]: the `groupByKey.mapGroups`
-    * shape — kept as the documented general template for per-key imperative
-    * logic no window composition can express. Memory caveat: materializes
-    * one user's events as an array, so it assumes per-key cardinality fits
-    * an executor's heap; prefer the window form when (as here) the logic IS
-    * expressible relationally.
-    */
-  def sessionizeTyped(spark: SparkSession, events: DataFrame,
-                      gapSeconds: Long): Dataset[UserSessions] = {
-    import spark.implicits._
-    val gapUs = gapSeconds * 1000000L
-    events.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-        col("user_id"), col("event_type"), col("value"))
-      .as[Event]
-      .groupByKey(_.user_id)
-      .mapGroups { (uid, it) =>
-        val sorted = it.toArray.sortBy(e => (e.ts_us, e.event_id))
-        var sessions = if (sorted.isEmpty) 0L else 1L
-        var i = 1
-        while (i < sorted.length) {
-          if (sorted(i).ts_us - sorted(i - 1).ts_us > gapUs) sessions += 1
-          i += 1
-        }
-        UserSessions(uid, sorted.length.toLong, sessions)
-      }
-  }
-
   /** Streaming exact dedup on a keyed stream with a watermark bounding the
     * dedup state — the Structured Streaming analogue of the reference's
     * per-run uniqueness cache (sdk/src/ETLTask.php:31-53): keys older than

@@ -51,8 +51,8 @@ class DedupSpec extends SparkSpec {
     // k2 pass first and wrongly drop rowB.
     val df = Seq((1, "x", "p"), (2, "y", "p")).toDF("ord", "k1", "k2")
     val dest = Seq(("x", "zz")).toDF("k1", "k2")
-    val out = Dedup.firstWinsAnyWithDestination(df, Seq("k1", "k2"),
-      Seq(col("ord")), dest).collect().map(_.getInt(0)).sorted
+    val out = Dedup.firstWinsAny(df, Seq("k1", "k2"),
+      Seq(col("ord")), Some(dest)).collect().map(_.getInt(0)).sorted
     assert(out.toSeq === Seq(2))
 
     // and a row dropped by a LATER column's dest probe has already claimed
@@ -63,8 +63,8 @@ class DedupSpec extends SparkSpec {
     // cached k1=x before k2 dropped it.
     val df2 = Seq((1, "x", "p"), (2, "x", "q")).toDF("ord", "k1", "k2")
     val dest2 = Seq(("zz", "p")).toDF("k1", "k2")
-    val out2 = Dedup.firstWinsAnyWithDestination(df2, Seq("k1", "k2"),
-      Seq(col("ord")), dest2).collect().map(_.getInt(0)).sorted
+    val out2 = Dedup.firstWinsAny(df2, Seq("k1", "k2"),
+      Seq(col("ord")), Some(dest2)).collect().map(_.getInt(0)).sorted
     assert(out2.toSeq === Seq.empty)
   }
 
@@ -81,8 +81,8 @@ class DedupSpec extends SparkSpec {
     assert(probed.toSeq === Seq(3, 4, 5, 6))
     // folded into first-wins: the survivors dedup on the trimmed key, and
     // the null keys form one group whose first row wins
-    val out = Dedup.firstWinsAnyWithDestination(src, Seq("k"),
-      Seq(col("ord")), dst).collect().map(_.getInt(0)).sorted
+    val out = Dedup.firstWinsAny(src, Seq("k"),
+      Seq(col("ord")), Some(dst)).collect().map(_.getInt(0)).sorted
     assert(out.toSeq === Seq(3, 4))
   }
 

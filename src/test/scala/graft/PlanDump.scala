@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.FormattedMode
   * dimension sides, partial+final aggregate pairs, equality-shaped joins).
   * Run after operator changes so the artifact matches the code:
   *
-  *   sbt "runMain graft.PlanDump"            # sf0.001 → /root/repo/PLANS.md
-  *   sbt "runMain graft.PlanDump <dir> <out>"
+  *   sbt "Test/runMain graft.PlanDump"       # sf0.001 → PLANS.md
+  *   sbt "Test/runMain graft.PlanDump <dir> <out>"
   *
   * Not read-only: b1_bucketed_join materializes its two bucketed tables
   * into the session warehouse at plan-construction time — the one query
@@ -124,7 +124,7 @@ object PlanDump {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
+    val out = if (args.length > 1) args(1) else "PLANS.md"
     val spark = SparkSession.builder()
       .master("local[8]")
       .withExtensions(new GraftExtensions)

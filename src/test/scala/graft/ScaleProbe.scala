@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * output-size blowups (the clone corpus inflates dedup output ~1000×)
   * can be reported next to the time.
   *
-  *   sbt "runMain graft.ScaleProbe /tmp/scale10 d8_auto_hamming_join d7@8x2"
+  *   sbt "Test/runMain graft.ScaleProbe /tmp/scale10 d8_auto_hamming_join d7@8x2"
   */
 object ScaleProbe {
 
