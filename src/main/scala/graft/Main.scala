@@ -112,12 +112,19 @@ object Main {
   private def loadTable(spark: SparkSession, spec: PipelineSpec,
                         flow: etl.FlowSpec, sourceDir: String): DataFrame =
     spec.sourceConnection(flow) match {
-      case Some(conn) =>
-        val df = etl.Sources.jdbc(spark, conn.url, flow.from, conn.options)
-        df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
+      case Some(conn) => readJdbc(spark, conn, flow.from)
       case None =>
         spark.read.parquet(s"$sourceDir/${flow.from}.parquet")
     }
+
+  /** A JDBC table with its column names lower-cased (databases such as
+    * Derby report unquoted names in upper case).
+    */
+  private def readJdbc(spark: SparkSession, conn: etl.ConnectionSpec,
+                       table: String): DataFrame = {
+    val df = etl.Sources.jdbc(spark, conn.url, table, conn.options)
+    df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
+  }
 
   /** Destination state for the anti-join probe. ONLY a
     * table-doesn't-exist failure (SQLState class 42) counts as absent —
@@ -133,10 +140,8 @@ object Main {
                        destDir: String): Option[DataFrame] =
     spec.destinationConnection(flow) match {
       case Some(conn) =>
-        try {
-          val df = etl.Sources.jdbc(spark, conn.url, flow.to, conn.options)
-          Some(df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*))
-        } catch {
+        try Some(readJdbc(spark, conn, flow.to))
+        catch {
           case t: Throwable if JdbcSink.isMissingRelation(t) => None
         }
       case None =>

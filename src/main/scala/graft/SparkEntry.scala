@@ -134,7 +134,7 @@ object SparkEntry {
       JdbcSink.append(cust.filter(col("c_custkey") <= 100)
         .select(col("c_custkey").as("cust_id"), col("c_name").as("name")),
         url, "t_cust", opts)
-      JdbcSink.upsert(
+      JdbcSink.upsertReport(
         cust.filter(col("c_custkey") > 50 && col("c_custkey") <= 150)
           .select(col("c_custkey").as("cust_id"),
             upper(col("c_name")).as("name")),
@@ -162,19 +162,19 @@ object SparkEntry {
       val cust = t(s, dir, "customer")
       try {
         // seed 1-100 (pure inserts through the batched upsert path)
-        JdbcSink.upsert(
+        JdbcSink.upsertReport(
           cust.filter(col("c_custkey") <= 100)
             .select(col("c_custkey").as("cust_id"),
               col("c_name").as("name")),
-          url, "t_cust", Seq("cust_id"), opts, quote = "`")
+          url, "t_cust", Seq("cust_id"), opts)
         // update 51-100 (uppercased), insert 101-150 — the update-vs-
         // insert branch decided entirely through the SUCCESS_NO_INFO
         // re-probe, since MiniMySql never reports per-row batch counts
-        JdbcSink.upsert(
+        JdbcSink.upsertReport(
           cust.filter(col("c_custkey") > 50 && col("c_custkey") <= 150)
             .select(col("c_custkey").as("cust_id"),
               upper(col("c_name")).as("name")),
-          url, "t_cust", Seq("cust_id"), opts, quote = "`")
+          url, "t_cust", Seq("cust_id"), opts)
         MiniMySql.scanDF(s, db, "t_cust", StructType(Seq(
             StructField("cust_id", LongType),
             StructField("name", StringType))))

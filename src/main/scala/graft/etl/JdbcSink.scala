@@ -10,42 +10,34 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.jdbc.{JdbcOptionsInWrite,
   JdbcUtils}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
-import org.apache.spark.util.LongAccumulator
 
-/** Every JDBC row write: batched append (the reference's `add_many`),
-  * batched UPDATE-else-INSERT (upsert), MySQL's single-statement
-  * `INSERT … ON DUPLICATE KEY UPDATE` upsert, batched DELETE, and
-  * delete-then-insert (reference: sdk/lib/db.php:250-274 batched statements,
-  * sdk/lib/db.php:285-319 `db_update`/`db_execute`,
-  * sdk/migrate_assures.php:185-236 update-vs-insert branch and
-  * delete-then-reinsert of child rows).
+/** The two JDBC row writes: batched append (the reference's `add_many`,
+  * sdk/lib/db.php:250-274) and batched UPDATE-else-INSERT (the reference's
+  * update-vs-insert branch, sdk/migrate_assures.php:185-203).
   *
-  * Where the reference probed and mutated ONE ROW PER ROUND-TRIP, every
-  * write here runs through one per-partition loop ([[eachBatch]]): each
+  * Where the reference probed and mutated ONE ROW PER ROUND-TRIP, both
+  * writes run through one per-partition loop ([[writeBatches]]): each
   * executor partition opens one connection (with the reference's
   * retry/backoff) with autocommit off, prepares its statements once, and
-  * binds and executes `batchSize` rows at a time. A mutation commits each
+  * binds and executes `batchSize` rows at a time. The upsert commits each
   * batch as its own transaction; the append holds the whole partition in
   * one transaction, as Spark's JDBC writer does, with a savepoint per
-  * batch. The append and the upserts add the reference's failed-row
-  * contract (sdk/migrate_assures.php:419-456) through one poison-row replay
-  * ([[replaying]]): a batch that fails with a DATA error rolls back (the
-  * append: to its savepoint) and replays row by row, each row on its own;
-  * rows that still fail are skipped, counted, and sampled (≤ 20 per
-  * partition). Any other failure rolls back what the partition has not
-  * committed and propagates to Spark's task retry, and so does every
-  * DELETE failure. The append and the ODKU upsert share one
-  * single-statement step ([[singleStatement]]).
+  * batch. The loop carries the reference's failed-row contract
+  * (sdk/migrate_assures.php:419-456) as its poison-row replay: a batch that
+  * fails with a DATA error rolls back (the append: to its savepoint) and
+  * replays row by row, each row on its own; rows that still fail are
+  * skipped, counted, and sampled (≤ 20 per partition). Any other failure
+  * rolls back what the partition has not committed and propagates to
+  * Spark's task retry.
   *
-  * The mutations quote identifiers with `quote` (default `"` — matches how
-  * Spark's JDBC writer creates tables on Derby/Postgres; pass "`" for
-  * MySQL); the append quotes through Spark's dialect for `url`.
+  * Identifiers are quoted by Spark's JDBC dialect for `url`
+  * (`JdbcDialects.get(url).quoteIdentifier`): double quotes on
+  * Derby/Postgres, backticks on MySQL/MariaDB.
   *
   * Counts come from an accumulator, so they are reporting-grade (a retried
-  * task adds twice). The mutations' STATEMENTS are idempotent — re-running
+  * task adds twice). The upsert's STATEMENTS are idempotent — re-running
   * an upsert leaves the table unchanged — which is the property that
   * matters for at-least-once execution. An append is not, so it commits a
   * partition only at its end: a task that fails before then leaves no
@@ -74,9 +66,9 @@ object JdbcSink {
   /** Retry policy shared by every plan-time/executor-side connection path:
     * up to `attempts`, `delayMs` apart (the reference retried everything;
     * here PERMANENT failures fail fast — SQLState class 42 (syntax /
-    * missing object) or 28 (bad credentials) anywhere in the failure can
-    * never succeed on retry, and interruption propagates instead of being
-    * slept through).
+    * missing object) or 28 (bad credentials), or Derby's authentication
+    * failure, anywhere in the failure can never succeed on retry, and
+    * interruption propagates instead of being slept through).
     */
   private[graft] def withRetry[T](attempts: Int, delayMs: Long)(f: => T): T = {
     var last: Throwable = null
@@ -97,7 +89,15 @@ object JdbcSink {
   private def isRetryable(t: Throwable): Boolean = {
     val classes = sqlStateClasses(t)
     !classes.contains("42") && !classes.contains("28") &&
-      !causes(t).exists(_.isInstanceOf[InterruptedException])
+      !causes(t).exists {
+        case _: InterruptedException => true
+        // Derby reports bad credentials as 08004 with its session
+        // severity 40000; MySQL's "Too many connections" (08004, 1040)
+        // stays transient
+        case s: SQLException =>
+          s.getSQLState == "08004" && s.getErrorCode == 40000
+        case _ => false
+      }
   }
 
   /** True when the failure (anywhere in the cause chain) is the database
@@ -144,48 +144,44 @@ object JdbcSink {
     seen.toSeq
   }
 
-  /** Outcome of a resilient upsert: rows applied, rows that failed even
-    * the row-at-a-time retry, and a bounded sample of their errors.
+  /** Outcome of a write: rows applied, rows that failed even the
+    * row-at-a-time replay, and a bounded sample of their errors.
     */
   final case class UpsertReport(applied: Long, failed: Long,
                                 errors: Seq[String])
 
-  /** Update-else-insert each row of `df` into `table` on `keys`. Returns the
-    * number of rows applied (updates + inserts). Poison rows are skipped
-    * and counted — use [[upsertReport]] to see them.
-    */
-  def upsert(df: DataFrame, url: String, table: String, keys: Seq[String],
-             options: Map[String, String] = Map.empty,
-             batchSize: Int = 1000, quote: String = "\""): Long =
-    upsertReport(df, url, table, keys, options, batchSize, quote).applied
-
-  /** [[upsert]] with poison-row isolation, the reference's failed-row
-    * semantics (see [[replaying]]): rows that fail alone are skipped,
-    * counted, and sampled into `errors` (≤20 per partition) instead of
-    * sinking the whole write. The update-vs-insert branch is decided from
-    * the batched UPDATE's per-row counts — rows whose UPDATE matched
-    * nothing are re-batched as INSERTs — so the semantics are exactly the
-    * reference's "update if present else insert" without needing a
-    * dialect-specific MERGE.
+  /** Update-else-insert each row of `df` into `table` on `keys`, with
+    * poison-row isolation (see the header): rows that fail alone are
+    * skipped, counted, and sampled into `errors` (≤20 per partition)
+    * instead of sinking the whole write. The update-vs-insert branch is
+    * decided from the batched UPDATE's per-row counts — rows whose UPDATE
+    * matched nothing are re-batched as INSERTs — so the semantics are
+    * exactly the reference's "update if present else insert" without
+    * needing a dialect-specific MERGE.
     */
   def upsertReport(df: DataFrame, url: String, table: String,
                    keys: Seq[String],
                    options: Map[String, String] = Map.empty,
-                   batchSize: Int = 1000,
-                   quote: String = "\""): UpsertReport = {
-    val (cols, nonKeys) = upsertColumns(df, keys)
+                   batchSize: Int = 1000): UpsertReport = {
+    val cols = df.columns.toSeq
+    val nonKeys = cols.filterNot(keys.contains)
+    require(keys.nonEmpty && nonKeys.nonEmpty,
+      s"upsert needs key and non-key columns, got keys=$keys of $cols")
     // Column identifiers are quoted (Spark's JDBC writer creates them
     // quoted); the TABLE name passes through raw, exactly as Spark's own
     // writer emits it in CREATE/INSERT — quoting it here would miss tables
     // the writer created unquoted (e.g. Derby folds those to upper case).
-    def q(n: String) = quote + n + quote
+    val dialect = JdbcDialects.get(url)
+    def q(n: String) = dialect.quoteIdentifier(n)
     val updateSql = s"UPDATE $table SET " +
       nonKeys.map(c => s"${q(c)} = ?").mkString(", ") +
       " WHERE " + keys.map(c => s"${q(c)} = ?").mkString(" AND ")
+    val insertSql = s"INSERT INTO $table (${cols.map(q).mkString(", ")})" +
+      s" VALUES (${cols.map(_ => "?").mkString(", ")})"
     val schema = df.schema
     val updateOrder = nonKeys ++ keys
-    replaying(df, url, options, batchSize, "graft_upsert",
-      Seq(updateSql, insertSql(table, cols, q)), wholePartition = false)(
+    writeBatches(df, url, options, batchSize, "graft_upsert",
+      Seq(updateSql, insertSql), wholePartition = false)(
       batch = { case (Seq(up, ins), rows) =>
         rows.foreach { r => bind(up, r, updateOrder, schema); up.addBatch() }
         val counts = up.executeBatch()
@@ -204,7 +200,6 @@ object JdbcSink {
         }.map(_._1)
         misses.foreach { r => bind(ins, r, cols, schema); ins.addBatch() }
         if (misses.nonEmpty) ins.executeBatch()
-        rows.length
       },
       one = { case (Seq(up, ins), r) =>
         bind(up, r, updateOrder, schema)
@@ -215,46 +210,18 @@ object JdbcSink {
       })
   }
 
-  /** MySQL-dialect single-statement upsert: `INSERT … ON DUPLICATE KEY
-    * UPDATE nk = VALUES(nk), …` — the shape a production MySQL sink
-    * emits instead of [[upsert]]'s UPDATE-probe-then-INSERT pair (ONE
-    * round trip per row instead of up to two, and Connector/J's
-    * `rewriteBatchedStatements=true` collapses a whole batch into one
-    * multi-value statement because the update clause holds no `?`).
-    * Semantics match [[upsert]] when the table's PRIMARY KEY equals
-    * `keys`: the source row wholly replaces the matched row's non-key
-    * columns, and poison rows are isolated the same way. Requires the
-    * target dialect to support ODKU (MySQL/MariaDB; gated against
-    * [[MiniMySql]], which also pins the 1-inserted/2-changed/1-unchanged
-    * affected counts this method deliberately does NOT ride on — applied
-    * counts rows PROCESSED, the same meaning as [[upsert]]'s).
-    */
-  def upsertOnDuplicateKey(df: DataFrame, url: String, table: String,
-                           keys: Seq[String],
-                           options: Map[String, String] = Map.empty,
-                           batchSize: Int = 1000,
-                           quote: String = "`"): UpsertReport = {
-    val (cols, nonKeys) = upsertColumns(df, keys)
-    def q(n: String) = quote + n + quote
-    singleStatement(df, url, options, batchSize, "graft_odku",
-      insertSql(table, cols, q) + " ON DUPLICATE KEY UPDATE " +
-        nonKeys.map(c => s"${q(c)} = VALUES(${q(c)})").mkString(", "),
-      wholePartition = false)
-  }
-
   /** Append every row of `df` to `table`, creating the table when it does
     * not exist — the reference's `add_many` batch insert
-    * (sdk/lib/db.php:250-274) with its failed-row replay (see
-    * [[replaying]]): a row that fails alone is skipped, counted and sampled
-    * instead of aborting the write. Set-up runs on the driver over one
-    * connection, through Spark's own JDBC helpers, so the table and the
-    * INSERT are the ones Spark's JDBC writer makes: a missing table is
-    * created with the dialect's type mapping and the
-    * `createTableColumnTypes`/`createTableOptions` options, identifiers are
-    * quoted by the dialect, and column names resolve against an existing
-    * table's own names (case-insensitively unless `spark.sql.caseSensitive`).
-    * Rows then go through [[singleStatement]] in 1,000-row batches, one
-    * transaction per partition (see the header).
+    * (sdk/lib/db.php:250-274) with its failed-row replay (see the header):
+    * a row that fails alone is skipped, counted and sampled instead of
+    * aborting the write. Set-up runs on the driver over one connection,
+    * through Spark's own JDBC helpers, so the table and the INSERT are the
+    * ones Spark's JDBC writer makes: a missing table is created with the
+    * dialect's type mapping and the `createTableColumnTypes`/
+    * `createTableOptions` options, identifiers are quoted by the dialect,
+    * and column names resolve against an existing table's own names
+    * (case-insensitively unless `spark.sql.caseSensitive`). Rows then go in
+    * 1,000-row batches, one transaction per partition.
     */
   def append(df: DataFrame, url: String, table: String,
              options: Map[String, String] = Map.empty): UpsertReport = {
@@ -265,63 +232,23 @@ object JdbcSink {
       JdbcUtils.createTable(conn, table, df.schema, caseSensitive, write)
       Some(df.schema)
     } finally conn.close()
-    singleStatement(df, url, options, 1000, "graft_append",
-      JdbcUtils.getInsertStatement(table, df.schema, tableSchema,
-        caseSensitive, JdbcDialects.get(url)), wholePartition = true)
+    val sql = JdbcUtils.getInsertStatement(table, df.schema, tableSchema,
+      caseSensitive, JdbcDialects.get(url))
+    val cols = df.columns.toSeq
+    val schema = df.schema
+    writeBatches(df, url, options, 1000, "graft_append", Seq(sql),
+      wholePartition = true)(
+      batch = { case (Seq(st), rows) =>
+        rows.foreach { r => bind(st, r, cols, schema); st.addBatch() }
+        st.executeBatch()
+      },
+      one = { case (Seq(st), r) =>
+        bind(st, r, cols, schema)
+        st.executeUpdate()
+      })
   }
 
-  /** Delete every `table` row whose key tuple appears in `df` (distinct on
-    * `keys` first — one DELETE per distinct tuple, batched). Returns rows
-    * deleted as reported by the database.
-    */
-  def delete(df: DataFrame, url: String, table: String, keys: Seq[String],
-             options: Map[String, String] = Map.empty,
-             batchSize: Int = 1000, quote: String = "\""): Long = {
-    require(keys.nonEmpty, "delete needs at least one key column")
-    def q(n: String) = quote + n + quote
-    val sql = s"DELETE FROM $table WHERE " +
-      keys.map(c => s"${q(c)} = ?").mkString(" AND ")
-    val tuples = df.select(keys.map(col): _*).distinct()
-    val schema = tuples.schema
-    val acc = df.sparkSession.sparkContext.longAccumulator("graft_delete")
-    eachBatch(tuples, url, options, batchSize, Seq(sql), acc,
-      wholePartition = false)(
-      { case (Seq(st), rows) =>
-        rows.foreach { r => bind(st, r, keys, schema); st.addBatch() }
-        st.executeBatch().collect { case n if n > 0 => n.toLong }.sum
-      }, noRecovery)
-    acc.value
-  }
-
-  /** Delete-then-insert children against a live table (reference:
-    * sdk/migrate_assures.php:205-227): remove every row whose PARENT key
-    * appears in the recomputed set, then [[append]] the recomputed rows
-    * through the shared single-statement step; returns the rows appended.
-    * Idempotent by construction — a second run deletes what the first
-    * inserted and re-inserts the same rows.
-    */
-  def replaceChildren(df: DataFrame, url: String, table: String,
-                      parentKeys: Seq[String],
-                      options: Map[String, String] = Map.empty): Long = {
-    delete(df, url, table, parentKeys, options)
-    append(df, url, table, options).applied
-  }
-
-  /** Applies one batch on the partition's prepared statements (in `sqls`
-    * order) and returns the rows it applied; it does not commit.
-    */
-  private type BatchStep = (Seq[PreparedStatement], Seq[Row]) => Long
-
-  /** Per partition, what to do when a batch or its commit throws: given
-    * the partition's [[Tx]] and statements, a handler per batch that
-    * returns the rows it applied instead. Unhandled failures propagate.
-    */
-  private type Recovery = (Tx, Seq[PreparedStatement]) =>
-    Seq[Row] => PartialFunction[Throwable, Long]
-
-  private val noRecovery: Recovery = (_, _) => _ => PartialFunction.empty
-
-  /** A partition's unit of work. Per batch (the mutations), `done` commits
+  /** A partition's unit of work. Per batch (the upsert), `done` commits
     * the work and `undo` rolls it back. Over the whole partition (the
     * append), `done` moves a savepoint past the work and `undo` rolls back
     * to that savepoint; the partition commits once, at its end.
@@ -336,19 +263,31 @@ object JdbcSink {
       if (mark == null) conn.rollback() else conn.rollback(mark)
   }
 
-  /** The one per-partition mutation loop: one connection with autocommit
+  /** The one per-partition write loop: one connection with autocommit
     * off, `sqls` prepared once, then each `batchSize` rows run through
-    * `batch` and end one [[Tx]] unit, adding the rows applied to `applied`;
-    * the partition commits at its end. A failure rolls back what the
-    * partition has not committed — with `wholePartition`, all of it — so a
-    * task retry starts from a clean slate. Empty partitions open no
-    * connection.
+    * `batch` (which does not commit) and end one [[Tx]] unit; the
+    * partition commits at its end. Poison-row replay (reference
+    * sdk/migrate_assures.php:419-456: collect failures, retry them
+    * individually, log what still fails and move on): when a batch fails
+    * with a data error ([[isDataError]]), the staged batches are cleared,
+    * the batch's unit is undone, and the batch replays through `one`, each
+    * row its own unit; a row that fails alone with a data error is undone,
+    * counted as failed and sampled (≤ 20 per partition). Any other failure
+    * rolls back what the partition has not committed — with
+    * `wholePartition`, all of it — so a task retry starts from a clean
+    * slate. Empty partitions open no connection.
     */
-  private def eachBatch(df: DataFrame, url: String,
-                        options: Map[String, String], batchSize: Int,
-                        sqls: Seq[String], applied: LongAccumulator,
-                        wholePartition: Boolean)
-                       (batch: BatchStep, recover: Recovery): Unit =
+  private def writeBatches(df: DataFrame, url: String,
+                           options: Map[String, String], batchSize: Int,
+                           name: String, sqls: Seq[String],
+                           wholePartition: Boolean)
+                          (batch: (Seq[PreparedStatement], Seq[Row]) => Unit,
+                           one: (Seq[PreparedStatement], Row) => Unit)
+      : UpsertReport = {
+    val sc = df.sparkSession.sparkContext
+    val applied = sc.longAccumulator(name)
+    val failed = sc.longAccumulator(s"${name}_failed")
+    val errors = sc.collectionAccumulator[String](s"${name}_errors")
     df.foreachPartition { (it: Iterator[Row]) =>
       if (it.hasNext) {
         val conn = connect(url, options)
@@ -357,11 +296,26 @@ object JdbcSink {
           val st = sqls.map(conn.prepareStatement)
           try {
             val tx = new Tx(conn, wholePartition)
-            val onError = recover(tx, st)
+            var sampled = 0
+            def alone(r: Row): Boolean =
+              try { one(st, r); tx.done(); true }
+              catch {
+                case e: SQLException if isDataError(e) =>
+                  tx.undo()
+                  failed.add(1)
+                  if (sampled < 20) { errors.add(e.getMessage); sampled += 1 }
+                  false
+              }
             it.grouped(batchSize).foreach { rows =>
               applied.add(
-                try { val n = batch(st, rows); tx.done(); n }
-                catch onError(rows))
+                try { batch(st, rows); tx.done(); rows.length }
+                catch {
+                  case e: SQLException if isDataError(e) =>
+                    // a mid-bind failure leaves entries staged
+                    st.foreach(_.clearBatch())
+                    tx.undo()
+                    rows.count(alone)
+                })
             }
             conn.commit()
           } finally st.foreach(_.close())
@@ -373,84 +327,8 @@ object JdbcSink {
         } finally conn.close()
       }
     }
-
-  /** [[eachBatch]] with poison-row isolation (reference
-    * sdk/migrate_assures.php:419-456: collect failures, retry them
-    * individually, log what still fails and move on). When a batch fails
-    * with a data error ([[isDataError]]), the staged batches are cleared,
-    * the batch's [[Tx]] unit is undone, and the batch replays through
-    * `one`, each row its own unit; a row that fails alone with a data error
-    * is undone, counted as failed and sampled (≤ 20 per partition).
-    */
-  private def replaying(df: DataFrame, url: String,
-                        options: Map[String, String], batchSize: Int,
-                        name: String, sqls: Seq[String],
-                        wholePartition: Boolean)
-                       (batch: BatchStep,
-                        one: (Seq[PreparedStatement], Row) => Unit)
-      : UpsertReport = {
-    val sc = df.sparkSession.sparkContext
-    val applied = sc.longAccumulator(name)
-    val failed = sc.longAccumulator(s"${name}_failed")
-    val errors = sc.collectionAccumulator[String](s"${name}_errors")
-    eachBatch(df, url, options, batchSize, sqls, applied, wholePartition)(
-      batch, { (tx, st) =>
-        var sampled = 0
-        def alone(r: Row): Boolean =
-          try { one(st, r); tx.done(); true }
-          catch {
-            case e: SQLException if isDataError(e) =>
-              tx.undo()
-              failed.add(1)
-              if (sampled < 20) { errors.add(e.getMessage); sampled += 1 }
-              false
-          }
-        rows => {
-          case e: SQLException if isDataError(e) =>
-            // a mid-bind failure leaves entries staged
-            st.foreach(_.clearBatch())
-            tx.undo()
-            rows.count(alone)
-        }
-      })
     UpsertReport(applied.value, failed.value, errors.value.asScala.toSeq)
   }
-
-  /** The one single-statement step, shared by [[append]] and
-    * [[upsertOnDuplicateKey]]: `sql` takes every column of `df` in order; a
-    * batch binds each row and executes once, a replayed row executes alone.
-    */
-  private def singleStatement(df: DataFrame, url: String,
-                              options: Map[String, String], batchSize: Int,
-                              name: String, sql: String,
-                              wholePartition: Boolean): UpsertReport = {
-    val cols = df.columns.toSeq
-    val schema = df.schema
-    replaying(df, url, options, batchSize, name, Seq(sql), wholePartition)(
-      batch = { case (Seq(st), rows) =>
-        rows.foreach { r => bind(st, r, cols, schema); st.addBatch() }
-        st.executeBatch()
-        rows.length
-      },
-      one = { case (Seq(st), r) =>
-        bind(st, r, cols, schema)
-        st.executeUpdate()
-      })
-  }
-
-  private def upsertColumns(df: DataFrame,
-                            keys: Seq[String]): (Seq[String], Seq[String]) = {
-    val cols = df.columns.toSeq
-    val nonKeys = cols.filterNot(keys.contains)
-    require(keys.nonEmpty && nonKeys.nonEmpty,
-      s"upsert needs key and non-key columns, got keys=$keys of $cols")
-    (cols, nonKeys)
-  }
-
-  private def insertSql(table: String, cols: Seq[String],
-                        q: String => String): String =
-    s"INSERT INTO $table (${cols.map(q).mkString(", ")})" +
-      s" VALUES (${cols.map(_ => "?").mkString(", ")})"
 
   private def bind(st: PreparedStatement, row: Row, order: Seq[String],
                    schema: StructType): Unit = {

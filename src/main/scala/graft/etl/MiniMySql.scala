@@ -8,6 +8,7 @@ import java.sql.{BatchUpdateException, Connection, PreparedStatement,
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects}
 import org.apache.spark.sql.types.StructType
 
 /** In-process JDBC engine with MYSQL/MARIADB dialect semantics — the
@@ -23,10 +24,10 @@ import org.apache.spark.sql.types.StructType
   *   - **identifier quoting**: backtick-quoted or bare identifiers
   *     parse; a DOUBLE-QUOTED identifier is rejected with MySQL's
   *     error 1064 / SQLState 42000, because without ANSI_QUOTES a
-  *     MySQL server reads `"name"` as a string literal — the exact
-  *     failure a Derby-tested `quote="\""` config would hit in
-  *     production, and the reason [[JdbcSink]]'s `quote` parameter
-  *     exists;
+  *     MySQL server reads `"name"` as a string literal — the failure
+  *     ANSI quoting (Derby's, Postgres's) would hit on MySQL, and the
+  *     reason [[JdbcSink]] quotes through the URL's Spark dialect
+  *     ([[ensureRegistered]] registers a backtick one for [[UrlPrefix]]);
   *   - **SQLState classes**: duplicate key → 1062/23000, NOT-NULL
   *     violation → 1048/23000 (both class 23 — [[JdbcSink]]'s
   *     poison-row isolation), missing table → 1146/42S02 (class 42 —
@@ -41,10 +42,11 @@ import org.apache.spark.sql.types.StructType
   *     multi-row statement fails atomically) and throws
   *     `BatchUpdateException` carrying the MySQL codes.
   *
-  * Supported statement shapes are exactly what [[JdbcSink]] emits
-  * (UPDATE … SET … WHERE, INSERT INTO … VALUES, DELETE FROM … WHERE,
-  * all fully parameterized); transactions are real (undo log, commit /
-  * rollback, one writer lock per database — MySQL's row locks
+  * Supported statement shapes are exactly what [[JdbcSink.upsertReport]]
+  * emits (UPDATE … SET … WHERE, INSERT INTO … VALUES, both fully
+  * parameterized) plus the multi-value INSERT Connector/J rewrites a
+  * batch into; transactions are real (undo log, commit / rollback, one
+  * writer lock per database — MySQL's row locks
   * collapsed to a table-group lock, which over-serializes but never
   * changes results). The store is JVM-local: executor partitions reach
   * it in local mode (the gate's runtime), and the double is explicitly
@@ -150,28 +152,16 @@ object MiniMySql {
                                   wheres: Seq[String]) extends Stmt
   /** `tuples` > 1 models Connector/J's `rewriteBatchedStatements=true`
     * multi-value rewrite (`VALUES (?,?),(?,?),…` — ONE statement, ONE
-    * atomic server round trip); `odku` lists the columns of an
-    * `ON DUPLICATE KEY UPDATE c = VALUES(c), …` clause (the only
-    * assignment form modeled — the shape [[JdbcSink.upsertOnDuplicateKey]]
-    * emits, and the only one Connector/J will rewrite: a `?` in the
-    * update clause disables the rewrite in the real driver too).
+    * atomic server round trip).
     */
   private final case class Insert(table: String, cols: Seq[String],
-                                  tuples: Int = 1,
-                                  odku: Seq[String] = Seq.empty)
-    extends Stmt
-  private final case class Delete(table: String, wheres: Seq[String])
-    extends Stmt
+                                  tuples: Int) extends Stmt
 
   private val UpdateRe =
     "(?is)^\\s*UPDATE\\s+(\\S+)\\s+SET\\s+(.+?)\\s+WHERE\\s+(.+?)\\s*$".r
   private val InsertRe =
     ("(?is)^\\s*INSERT\\s+INTO\\s+(\\S+)\\s*\\(([^)]*)\\)\\s*VALUES\\s*" +
-      "(\\(.+?\\))(?:\\s+ON\\s+DUPLICATE\\s+KEY\\s+UPDATE\\s+(.+?))?\\s*$").r
-  private val DeleteRe =
-    "(?is)^\\s*DELETE\\s+FROM\\s+(\\S+)\\s+WHERE\\s+(.+?)\\s*$".r
-  private val OdkuValuesRe =
-    "(?is)^(.+?)\\s*=\\s*VALUES\\s*\\(\\s*(.+?)\\s*\\)$".r
+      "(\\(.+?\\))\\s*$").r
 
   private def eqParam(s: String): String = {
     val m = "^(.*?)\\s*=\\s*\\?$".r.findFirstMatchIn(s.trim).getOrElse(
@@ -183,7 +173,7 @@ object MiniMySql {
     case UpdateRe(t, sets, wheres) =>
       Update(ident(t), sets.split(",").toSeq.map(eqParam),
         wheres.split("(?i)\\s+AND\\s+").toSeq.map(eqParam))
-    case InsertRe(t, cols, tuples, odku) =>
+    case InsertRe(t, cols, tuples) =>
       val cs = cols.split(",").toSeq.map(s => ident(s))
       // split the VALUES blob into its tuples; each must be all-`?`
       // of the column arity (fully parameterized, like everything else)
@@ -194,22 +184,7 @@ object MiniMySql {
         if (!n.forall(_ == "?") || n.length != cs.length)
           throw syntaxError(s"near '($qs)'")
       }
-      val odkuCols =
-        if (odku == null) Seq.empty[String]
-        else odku.split(",").toSeq.map { a =>
-          OdkuValuesRe.findFirstMatchIn(a.trim) match {
-            case Some(m) =>
-              val dst = ident(m.group(1)); val src = ident(m.group(2))
-              if (dst != src) throw syntaxError(
-                s"MiniMySql models only `c = VALUES(c)` near '$a'")
-              dst
-            case None => throw syntaxError(
-              s"MiniMySql models only `c = VALUES(c)` near '$a'")
-          }
-        }
-      Insert(ident(t), cs, ts.length, odkuCols)
-    case DeleteRe(t, wheres) =>
-      Delete(ident(t), wheres.split("(?i)\\s+AND\\s+").toSeq.map(eqParam))
+      Insert(ident(t), cs, ts.length)
     case other => throw syntaxError(s"near '${other.take(40)}'")
   }
 
@@ -314,15 +289,13 @@ object MiniMySql {
             }
             hit.length
           }
-        case Insert(tn, cols, tuples, odku) =>
+        case Insert(tn, cols, tuples) =>
           val t = table(tn)
-          (cols ++ odku).foreach(c =>
+          cols.foreach(c =>
             if (!t.colIndex.contains(c)) throw unknownColumn(c))
-          val odkuIdx = odku.map(t.colIndex)
-          var affected = 0
           var tup = 0
           // tuples process SEQUENTIALLY (MySQL semantics: a later tuple
-          // hitting an earlier tuple's key takes the ODKU path); a
+          // hitting an earlier tuple's key is a duplicate); a
           // failing tuple aborts the statement and [[execute]]'s
           // statement-level unwind removes the earlier tuples' effects
           // while PRESERVING the enclosing transaction — MySQL's own
@@ -334,56 +307,15 @@ object MiniMySql {
             cols.zip(tp).foreach { case (c, v) =>
               row(t.colIndex(c)) = v }
             val key = t.keyOf(row)
-            t.rows.get(key) match {
-              case Some(existing) if odku.nonEmpty =>
-                // ON DUPLICATE KEY UPDATE path. Affected-count contract
-                // is Connector/J's DEFAULT (useAffectedRows=false →
-                // CLIENT_FOUND_ROWS): 1 = inserted, 2 = updated AND
-                // changed, 1 = updated to its current values.
-                record(t, key)
-                var changed = false
-                odkuIdx.foreach { i =>
-                  val nv = row(i)
-                  if (nv == null && t.cols(i).notNull)
-                    throw nullViolation(t.cols(i).name)
-                  if (existing(i) != nv) changed = true
-                  existing(i) = nv
-                }
-                if (t.keyOf(existing) != key)
-                  throw new java.sql.SQLFeatureNotSupportedException(
-                    "MiniMySql: ON DUPLICATE KEY UPDATE of primary-key " +
-                      "columns is not modeled", "0A000")
-                affected += (if (changed) 2 else 1)
-              case Some(_) => throw dupKey(key)
-              case None =>
-                t.cols.zipWithIndex.foreach { case (cd, i) =>
-                  if (row(i) == null && cd.notNull)
-                    throw nullViolation(cd.name)
-                }
-                record(t, key)
-                t.rows.put(key, row)
-                affected += 1
+            if (t.rows.contains(key)) throw dupKey(key)
+            t.cols.zipWithIndex.foreach { case (cd, i) =>
+              if (row(i) == null && cd.notNull) throw nullViolation(cd.name)
             }
+            record(t, key)
+            t.rows.put(key, row)
             tup += 1
           }
-          affected
-        case Delete(tn, wheres) =>
-          val t = table(tn)
-          wheres.foreach(c =>
-            if (!t.colIndex.contains(c)) throw unknownColumn(c))
-          val whereIdx = wheres.map(t.colIndex)
-          if (params.contains(null)) 0
-          else {
-            val hit = t.rows.values.filter { row =>
-              whereIdx.zip(params).forall { case (i, v) => row(i) == v }
-            }.toSeq
-            hit.foreach { row =>
-              val key = t.keyOf(row)
-              record(t, key)
-              t.rows.remove(key)
-            }
-            hit.length
-          }
+          tuples
       }
   }
 
@@ -391,10 +323,11 @@ object MiniMySql {
 
   val UrlPrefix = "jdbc:graftmysql:"
 
-  /** DriverManager-visible driver. `Class.forName` of this OBJECT's
-    * class name (`graft.etl.MiniMySqlDriver$` — note the `$`) runs this
-    * initializer and registers it, which is how [[JdbcSink]]'s
-    * executor-side `driver` option reaches it.
+  /** DriverManager-visible driver and its backtick-quoting Spark dialect.
+    * `Class.forName` of the driver OBJECT's class name
+    * (`graft.etl.MiniMySqlDriver$` — note the `$`) runs its initializer
+    * and registers both, which is how [[JdbcSink]]'s executor-side
+    * `driver` option reaches it.
     */
   def ensureRegistered(): Unit = MiniMySqlDriver.toString
 
@@ -443,24 +376,17 @@ object MiniMySql {
         case "addBatch" => batch += snapshot(); null
         case "clearBatch" => batch.clear(); null
         case "executeBatch" =>
-          // INSERT/UPDATE batches report SUCCESS_NO_INFO — the
-          // worst-case reporting the JDBC spec allows and what
-          // Connector/J returns for its multi-value INSERT rewrite —
-          // forcing JdbcSink's -2 re-probe recovery. DELETE batches
-          // report REAL counts (no rewrite exists for them; every
-          // MySQL-family driver returns counts in default mode, and
-          // JdbcSink's deleted-rows contract consumes them). A failing
-          // batch applies NOTHING (one rewritten statement fails
-          // atomically).
+          // batches report SUCCESS_NO_INFO — the worst-case reporting
+          // the JDBC spec allows and what Connector/J returns for its
+          // multi-value INSERT rewrite — forcing JdbcSink's -2 re-probe
+          // recovery. A failing batch applies NOTHING (one rewritten
+          // statement fails atomically).
           val staged = batch.toSeq
           batch.clear()
           try {
-            val counts = staged.map(p => conn.execute(stmt, p))
+            staged.foreach(p => conn.execute(stmt, p))
             if (conn.autoCommit) conn.commit()
-            stmt match {
-              case _: Delete => counts.toArray
-              case _ => staged.map(_ => Statement.SUCCESS_NO_INFO).toArray
-            }
+            staged.map(_ => Statement.SUCCESS_NO_INFO).toArray
           } catch {
             case e: SQLException =>
               // each statement already unwound itself (statement-level
@@ -517,6 +443,7 @@ object MiniMySql {
 /** The registered [[java.sql.Driver]] — see [[MiniMySql.ensureRegistered]]. */
 object MiniMySqlDriver extends java.sql.Driver {
   java.sql.DriverManager.registerDriver(this)
+  JdbcDialects.registerDialect(MiniMySqlDialect)
 
   override def acceptsURL(url: String): Boolean =
     url != null && url.startsWith(MiniMySql.UrlPrefix)
@@ -532,4 +459,13 @@ object MiniMySqlDriver extends java.sql.Driver {
       : Array[java.sql.DriverPropertyInfo] = Array.empty
   override def getParentLogger: java.util.logging.Logger =
     throw new java.sql.SQLFeatureNotSupportedException()
+}
+
+/** MySQL's identifier quoting for [[MiniMySql.UrlPrefix]] URLs, which
+  * Spark's own MySQL dialect does not claim.
+  */
+object MiniMySqlDialect extends JdbcDialect {
+  override def canHandle(url: String): Boolean =
+    url.startsWith(MiniMySql.UrlPrefix)
+  override def quoteIdentifier(colName: String): String = s"`$colName`"
 }

@@ -1282,8 +1282,8 @@ object StreamOps {
 
   /** `foreachBatch` body for a streaming upsert into a live database
     * table: each micro-batch applies update-else-insert on `keys` via
-    * [[graft.etl.JdbcSink.upsert]] — the standard pattern for sinks Spark
-    * has no native streaming connector for. Pair with `outputMode(Update)`
+    * [[graft.etl.JdbcSink.upsertReport]] — the standard pattern for sinks
+    * Spark has no native streaming connector for. Pair with `outputMode(Update)`
     * on an aggregation so each batch carries only the CHANGED groups.
     * Structured Streaming's at-least-once replay composes with the
     * upsert's idempotence: a replayed batch rewrites the same rows instead
@@ -1294,7 +1294,7 @@ object StreamOps {
                       options: Map[String, String] = Map.empty):
       (DataFrame, Long) => Unit =
     (batch, _) => {
-      graft.etl.JdbcSink.upsert(batch, url, table, keys, options)
+      graft.etl.JdbcSink.upsertReport(batch, url, table, keys, options)
       ()
     }
 

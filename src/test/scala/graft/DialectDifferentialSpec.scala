@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import graft.etl.{JdbcSink, MiniMySql, Sources}
 
 /** Differential gate for the MySQL dialect double: the SAME mutation
-  * plan (seed → overlapping upsert → poison batch → keyed delete) runs
+  * plan (seed → overlapping upsert → poison batch) runs
   * against live embedded Derby and against MiniMySql, and the final
   * tables must be IDENTICAL — the two engines differ in everything
   * JdbcSink is sensitive to (quoting, batch-count reporting, SQLState
@@ -24,26 +24,23 @@ class DialectDifferentialSpec extends SparkSpec {
 
   /** One full mutation plan against a connection; returns the table. */
   private def runPlan(url: String, opts: Map[String, String],
-                      quote: String, seedVia: DataFrame => Unit,
+                      seedVia: DataFrame => Unit,
                       read: () => DataFrame): DataFrame = {
     seedVia(Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d")).toDF("id", "v"))
     // overlapping upsert: update 3-4, insert 5-6 — forced through
     // whatever batch-count reporting the engine gives
-    JdbcSink.upsert(
+    JdbcSink.upsertReport(
       Seq((3L, "C"), (4L, "D"), (5L, "e"), (6L, "f")).toDF("id", "v"),
-      url, "t_diff", Seq("id"), opts, quote = quote)
+      url, "t_diff", Seq("id"), opts)
     // poison batch: null v on id=7 is isolated, 8 lands
     JdbcSink.upsertReport(
       Seq[(java.lang.Long, String)]((7L, null), (8L, "h")).toDF("id", "v"),
-      url, "t_diff", Seq("id"), opts, quote = quote)
-    // keyed delete: 1 and 6 go
-    JdbcSink.delete(Seq(Tuple1(1L), Tuple1(6L)).toDF("id"), url, "t_diff",
-      Seq("id"), opts, quote = quote)
+      url, "t_diff", Seq("id"), opts)
     read()
   }
 
   test("Derby and MiniMySql converge to the identical table under the " +
-    "same seed/upsert/poison/delete plan") {
+    "same seed/upsert/poison plan") {
     // Derby side — table created with the SAME constraints the
     // MiniMySql side declares (PK + NOT NULL), so the poison row is
     // rejected by both engines rather than accepted by a
@@ -59,9 +56,9 @@ class DialectDifferentialSpec extends SparkSpec {
           | "v" VARCHAR(100) NOT NULL)""".stripMargin)
       finally c.close()
     }
-    val derby = runPlan(derbyUrl, derbyOpts, quote = "\"",
-      seedVia = df => JdbcSink.upsert(df, derbyUrl, "t_diff", Seq("id"),
-        derbyOpts, quote = "\""),
+    val derby = runPlan(derbyUrl, derbyOpts,
+      seedVia = df => JdbcSink.upsertReport(df, derbyUrl, "t_diff",
+        Seq("id"), derbyOpts),
       read = () => Sources.jdbc(spark, derbyUrl, "t_diff", derbyOpts)
         .select(col("id").cast("long"), col("v")))
     // MiniMySql side (backticks, SUCCESS_NO_INFO batches, MySQL states)
@@ -72,15 +69,15 @@ class DialectDifferentialSpec extends SparkSpec {
     MiniMySql.createTable(db, "t_diff",
       Seq(MiniMySql.ColDef("id", notNull = true),
         MiniMySql.ColDef("v", notNull = true)), pk = Seq("id"))
-    val mini = runPlan(myUrl, myOpts, quote = "`",
-      seedVia = df => JdbcSink.upsert(df, myUrl, "t_diff", Seq("id"),
-        myOpts, quote = "`"),
+    val mini = runPlan(myUrl, myOpts,
+      seedVia = df => JdbcSink.upsertReport(df, myUrl, "t_diff", Seq("id"),
+        myOpts),
       read = () => MiniMySql.scanDF(spark, db, "t_diff", schema))
     val a = derby.orderBy("id").as[(Long, String)].collect().toSeq
     val b = mini.orderBy("id").as[(Long, String)].collect().toSeq
     assert(a === b)
-    assert(a === Seq((2L, "b"), (3L, "C"), (4L, "D"), (5L, "e"),
-      (8L, "h")))
+    assert(a === Seq((1L, "a"), (2L, "b"), (3L, "C"), (4L, "D"), (5L, "e"),
+      (6L, "f"), (8L, "h")))
   }
 
   test("concurrent partitions through MiniMySql's writer lock: a " +
@@ -94,14 +91,14 @@ class DialectDifferentialSpec extends SparkSpec {
         MiniMySql.ColDef("v", notNull = true)), pk = Seq("id"))
     val rows = (1L to 400L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartition(4) // 4 executor connections mutating concurrently
-    assert(JdbcSink.upsert(rows, url, "t_diff", Seq("id"), opts,
-      quote = "`", batchSize = 50) === 400L)
+    assert(JdbcSink.upsertReport(rows, url, "t_diff", Seq("id"), opts,
+      batchSize = 50).applied === 400L)
     val got = MiniMySql.scanDF(spark, db, "t_diff", schema)
     assert(got.count() === 400L)
     assert(got.select(sum(col("id"))).as[Long].head() === 400L * 401 / 2)
     // idempotent re-run under the same concurrency
-    assert(JdbcSink.upsert(rows, url, "t_diff", Seq("id"), opts,
-      quote = "`", batchSize = 50) === 400L)
+    assert(JdbcSink.upsertReport(rows, url, "t_diff", Seq("id"), opts,
+      batchSize = 50).applied === 400L)
     assert(MiniMySql.scanDF(spark, db, "t_diff", schema).count() === 400L)
   }
 }

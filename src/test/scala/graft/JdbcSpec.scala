@@ -59,42 +59,16 @@ class JdbcSpec extends SparkSpec {
     // 2 exists (update), 3 doesn't (insert)
     val batch = Seq((2, "beta2", 25.0), (3, "gamma", 30.0))
       .toDF("id", "name", "amount")
-    val applied = graft.etl.JdbcSink.upsert(batch, url, "t_ups",
-      Seq("id"), opts)
+    val applied = graft.etl.JdbcSink.upsertReport(batch, url, "t_ups",
+      Seq("id"), opts).applied
     assert(applied === 2L)
     val expected = Seq((1, "alpha", 10.0), (2, "beta2", 25.0),
       (3, "gamma", 30.0))
     assert(snapshot("t_ups") === expected)
 
     // idempotence: the same batch applied again changes nothing
-    graft.etl.JdbcSink.upsert(batch, url, "t_ups", Seq("id"), opts)
+    graft.etl.JdbcSink.upsertReport(batch, url, "t_ups", Seq("id"), opts)
     assert(snapshot("t_ups") === expected)
-  }
-
-  test("delete by key set; replace-children delete-then-insert, idempotent") {
-    val kids = Seq((10, 1, "a", 0.0), (11, 1, "b", 0.0), (12, 2, "c", 0.0))
-      .toDF("id", "parent", "name", "amount")
-    JdbcSink.append(kids, url, "t_kids", opts)
-
-    // recompute parent 1's children as a fresh set
-    val recomputed = Seq((20, 1, "x", 1.0), (21, 1, "y", 1.0))
-      .toDF("id", "parent", "name", "amount")
-    graft.etl.JdbcSink.replaceChildren(recomputed, url, "t_kids",
-      Seq("parent"), opts)
-    def ids() = Sources.jdbc(spark, url, "t_kids", opts).collect()
-      .map(_.getAs[Int]("id")).sorted.toSeq
-    assert(ids() === Seq(12, 20, 21))
-
-    // second run deletes what the first inserted and re-inserts: no growth
-    graft.etl.JdbcSink.replaceChildren(recomputed, url, "t_kids",
-      Seq("parent"), opts)
-    assert(ids() === Seq(12, 20, 21))
-
-    // targeted delete by key tuple
-    val deleted = graft.etl.JdbcSink.delete(
-      Seq(2).toDF("parent"), url, "t_kids", Seq("parent"), opts)
-    assert(deleted === 1L)
-    assert(ids() === Seq(20, 21))
   }
 
   /** A table with a NOT NULL column for poison rows to violate. */
@@ -121,7 +95,7 @@ class JdbcSpec extends SparkSpec {
 
     // healing the row and re-running completes the set
     val fixed = Seq((2, "healed", 2.0)).toDF("id", "name", "amount")
-    graft.etl.JdbcSink.upsert(fixed, url, "t_guard", Seq("id"), opts)
+    graft.etl.JdbcSink.upsertReport(fixed, url, "t_guard", Seq("id"), opts)
     assert(ids() === Seq(1, 2, 3))
   }
 
@@ -136,13 +110,13 @@ class JdbcSpec extends SparkSpec {
     // the class decides wherever it sits in the chain: a permanent 42
     // behind a wrapper with another state fails on the first attempt, a
     // transient 08 behind the same wrapper is retried every attempt
-    def attemptsUntilThrow(inner: String): (Int, Throwable) = {
+    def attemptsUntilThrow(inner: String, code: Int = 0): (Int, Throwable) = {
       var n = 0
       val e = intercept[Throwable] {
         graft.etl.JdbcSink.withRetry(attempts = 3, delayMs = 20) {
           n += 1
           throw new java.sql.SQLException("wrap", "XJ001",
-            new java.sql.SQLException("inner", inner))
+            new java.sql.SQLException("inner", inner, code))
         }
       }
       (n, e)
@@ -153,6 +127,10 @@ class JdbcSpec extends SparkSpec {
     val (transient, e08) = attemptsUntilThrow("08001")
     assert(transient === 3)
     assert(e08.getMessage.contains("Too many attempt"))
+    // 08004 is Derby's authentication failure (vendor code 40000), which
+    // no retry can fix, and also MySQL's "Too many connections" (1040)
+    assert(attemptsUntilThrow("08004", 40000)._1 === 1)
+    assert(attemptsUntilThrow("08004", 1040)._1 === 3)
   }
 
   test("poison row after a committed batch: its batch replays, the " +

@@ -1,18 +1,16 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.{JdbcSink, MiniMySql, Sources}
+import graft.etl.MiniMySql
 
-/** ON DUPLICATE KEY UPDATE + multi-value INSERT rewrite coverage for the
+/** Multi-value INSERT rewrite and statement-atomicity coverage for the
   * MySQL dialect double (r12-verdict item 7 — the riskiest Connector/J
-  * behaviors a live server would exercise): the 1-inserted / 2-changed /
-  * 1-unchanged affected counts under the default CLIENT_FOUND_ROWS
-  * reporting, `VALUES(col)` resolution, sequential tuple processing
-  * inside one rewritten statement, the modeled-subset syntax guard, and
-  * [[JdbcSink.upsertOnDuplicateKey]] — differentially against both the
-  * probe-based [[JdbcSink.upsert]] on the same engine and live Derby.
+  * behaviors a live server would exercise): a statement that dies midway
+  * unwinds only itself inside an explicit transaction, a duplicate inside
+  * one rewritten statement is MySQL's 1062/23000, and an
+  * `ON DUPLICATE KEY UPDATE` clause, which the double does not model, is a
+  * syntax error rather than a silent misparse.
   */
 class MiniMySqlOdkuSpec extends SparkSpec {
   import spark.implicits._
@@ -31,23 +29,6 @@ class MiniMySqlOdkuSpec extends SparkSpec {
   }
 
   private def conn(url: String) = MiniMySql.connect(url)
-
-  test("ODKU affected counts: 1 inserted, 2 updated-and-changed, " +
-    "1 updated-to-current (Connector/J default reporting)") {
-    val (_, url, _) = freshDb()
-    val c = conn(url)
-    try {
-      val ps = c.prepareStatement(
-        "INSERT INTO `t` (`id`, `v`) VALUES (?, ?) " +
-          "ON DUPLICATE KEY UPDATE `v` = VALUES(`v`)")
-      ps.setObject(1, 1L); ps.setString(2, "a")
-      assert(ps.executeUpdate() === 1) // fresh insert
-      ps.setObject(1, 1L); ps.setString(2, "b")
-      assert(ps.executeUpdate() === 2) // dup, value changed
-      ps.setObject(1, 1L); ps.setString(2, "b")
-      assert(ps.executeUpdate() === 1) // dup, set to its current value
-    } finally c.close()
-  }
 
   test("statement-level atomicity inside an explicit transaction: a " +
     "multi-tuple INSERT that dies mid-statement unwinds ITS OWN tuples " +
@@ -99,25 +80,6 @@ class MiniMySqlOdkuSpec extends SparkSpec {
     assert(got === Map(1L -> "a", 2L -> "a"))
   }
 
-  test("multi-value rewritten INSERT: one statement, tuples processed " +
-    "sequentially (a later tuple updates an earlier tuple's row)") {
-    val (db, url, _) = freshDb()
-    val c = conn(url)
-    try {
-      val ps = c.prepareStatement(
-        "INSERT INTO `t` (`id`, `v`) VALUES (?, ?), (?, ?), (?, ?) " +
-          "ON DUPLICATE KEY UPDATE `v` = VALUES(`v`)")
-      ps.setObject(1, 10L); ps.setString(2, "x")
-      ps.setObject(3, 11L); ps.setString(4, "y")
-      ps.setObject(5, 10L); ps.setString(6, "z") // same key as tuple 1
-      // 1 (insert 10) + 1 (insert 11) + 2 (update 10: x→z)
-      assert(ps.executeUpdate() === 4)
-    } finally c.close()
-    val got = MiniMySql.scanDF(spark, db, "t", schema)
-      .as[(Long, String)].collect().toMap
-    assert(got === Map(10L -> "z", 11L -> "y"))
-  }
-
   test("multi-value INSERT without ODKU still throws 1062/23000 on a " +
     "duplicate, and the caller's rollback restores (statement atomicity)") {
     val (db, url, _) = freshDb()
@@ -147,81 +109,5 @@ class MiniMySqlOdkuSpec extends SparkSpec {
       }
       assert(e.getErrorCode === 1064 && e.getSQLState === "42000")
     } finally c.close()
-  }
-
-  test("ODKU assigning NULL to a NOT NULL column raises 1048/23000 on " +
-    "the update path too") {
-    val (_, url, _) = freshDb()
-    val c = conn(url)
-    try {
-      val ps = c.prepareStatement(
-        "INSERT INTO `t` (`id`, `v`) VALUES (?, ?) " +
-          "ON DUPLICATE KEY UPDATE `v` = VALUES(`v`)")
-      ps.setObject(1, 1L); ps.setString(2, "a")
-      ps.executeUpdate()
-      ps.setObject(1, 1L); ps.setNull(2, java.sql.Types.VARCHAR)
-      val e = intercept[java.sql.SQLException] { ps.executeUpdate() }
-      assert(e.getErrorCode === 1048 && e.getSQLState === "23000")
-    } finally c.close()
-  }
-
-  test("JdbcSink.upsertOnDuplicateKey == JdbcSink.upsert on the same " +
-    "engine: identical final table under seed/overlap/poison") {
-    def run(up: (org.apache.spark.sql.DataFrame, String) => Unit)
-        : Map[Long, String] = {
-      val (db, url, _) = freshDb()
-      up(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), url)
-      up(Seq((2L, "B"), (4L, "d")).toDF("id", "v"), url)
-      // poison row (null v) must be isolated, 6 must land
-      up(Seq[(java.lang.Long, String)]((5L, null), (6L, "f"))
-        .toDF("id", "v"), url)
-      MiniMySql.scanDF(spark, db, "t", schema)
-        .as[(Long, String)].collect().toMap
-    }
-    val opts = Map("driver" -> "graft.etl.MiniMySqlDriver$")
-    val viaProbe = run((df, url) =>
-      JdbcSink.upsert(df, url, "`t`", Seq("id"), opts, quote = "`"))
-    val viaOdku = run((df, url) => {
-      val r = JdbcSink.upsertOnDuplicateKey(df, url, "`t`", Seq("id"), opts)
-      assert(r.applied + r.failed === df.count())
-    })
-    assert(viaOdku === viaProbe)
-    assert(viaOdku === Map(1L -> "a", 2L -> "B", 3L -> "c", 4L -> "d",
-      6L -> "f"))
-  }
-
-  test("differential vs live Derby: upsertOnDuplicateKey(MiniMySql) " +
-    "converges to the same table as upsert(Derby) under one plan") {
-    // Derby side via the probe-based upsert (Derby has no ODKU)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_odku_d")
-      .toString
-    val derbyUrl = s"jdbc:derby:$tmp/db;create=true"
-    val derbyOpts = Map("driver" -> "org.apache.derby.jdbc.EmbeddedDriver")
-    locally {
-      val c = JdbcSink.connect(derbyUrl, derbyOpts)
-      try c.createStatement().executeUpdate(
-        """CREATE TABLE t ("id" BIGINT NOT NULL PRIMARY KEY,
-          | "v" VARCHAR(100) NOT NULL)""".stripMargin)
-      finally c.close()
-    }
-    def plan(up: org.apache.spark.sql.DataFrame => Unit): Unit = {
-      up(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"))
-      up(Seq((3L, "C"), (4L, "d"), (5L, "e")).toDF("id", "v"))
-      up(Seq[(java.lang.Long, String)]((9L, null), (6L, "f"))
-        .toDF("id", "v"))
-    }
-    plan(df => JdbcSink.upsert(df, derbyUrl, "t", Seq("id"), derbyOpts,
-      quote = "\""))
-    val derby = Sources.jdbc(spark, derbyUrl, "t", derbyOpts)
-      .select(col("id").cast("long"), col("v"))
-      .as[(Long, String)].collect().toMap
-    val (db, url, opts) = freshDb()
-    plan(df => JdbcSink.upsertOnDuplicateKey(df, url, "`t`", Seq("id"),
-      opts))
-    val mini = MiniMySql.scanDF(spark, db, "t", schema)
-      .as[(Long, String)].collect().toMap
-    assert(mini === derby)
-    assert(mini === Map(1L -> "a", 2L -> "b", 3L -> "C", 4L -> "d",
-      5L -> "e", 6L -> "f"))
   }
 }

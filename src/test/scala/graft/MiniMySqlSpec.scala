@@ -3,6 +3,7 @@ package graft
 import java.sql.SQLException
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.jdbc.JdbcDialects
 import org.apache.spark.sql.types._
 
 import graft.etl.{JdbcSink, MiniMySql}
@@ -35,23 +36,41 @@ class MiniMySqlSpec extends SparkSpec {
     "through the SUCCESS_NO_INFO re-probe") {
     val (db, url, opts) = freshDb()
     val seed = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
-    assert(JdbcSink.upsert(seed, url, "t", Seq("id"), opts,
-      quote = "`") === 3L)
+    assert(JdbcSink.upsertReport(seed, url, "t", Seq("id"), opts)
+      .applied === 3L)
     val upd = Seq((2L, "B"), (3L, "C"), (4L, "d")).toDF("id", "v")
-    assert(JdbcSink.upsert(upd, url, "t", Seq("id"), opts,
-      quote = "`") === 3L)
+    assert(JdbcSink.upsertReport(upd, url, "t", Seq("id"), opts)
+      .applied === 3L)
     assert(scan(db).orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (2L, "B"), (3L, "C"), (4L, "d")))
+  }
+
+  test("quoting follows the URL's dialect: upsertReport with no quoting " +
+    "argument inserts, then updates") {
+    val (db, url, opts) = freshDb()
+    assert(JdbcDialects.get(url).quoteIdentifier("v") === "`v`")
+    val seed = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    assert(JdbcSink.upsertReport(seed, url, "t", Seq("id"), opts) ===
+      JdbcSink.UpsertReport(2L, 0L, Nil))
+    val upd = Seq((2L, "B")).toDF("id", "v")
+    assert(JdbcSink.upsertReport(upd, url, "t", Seq("id"), opts) ===
+      JdbcSink.UpsertReport(1L, 0L, Nil))
+    assert(scan(db).orderBy("id").as[(Long, String)].collect().toSeq ===
+      Seq((1L, "a"), (2L, "B")))
   }
 
   test("the dialect tripwire: double-quoted identifiers are a 1064/42000 " +
     "syntax error, fail-fast (never retried)") {
     val (_, url, opts) = freshDb()
-    val df = Seq((1L, "a")).toDF("id", "v")
+    val conn = JdbcSink.connect(url, opts)
     val t0 = System.nanoTime()
-    val e = intercept[org.apache.spark.SparkException] {
-      JdbcSink.upsert(df, url, "t", Seq("id"), opts, quote = "\"")
-    }
+    // no JdbcSink write emits double quotes for this URL any more, so the
+    // statement is raw, under the connection retry policy
+    val e = try intercept[SQLException] {
+      JdbcSink.withRetry(attempts = 7, delayMs = 3000) {
+        conn.prepareStatement("UPDATE t SET \"v\" = ? WHERE \"id\" = ?")
+      }
+    } finally conn.close()
     // class-42 states are non-retryable: the 7x3s backoff must NOT run
     assert((System.nanoTime() - t0) / 1e9 < 3.0)
     def states(t: Throwable): Set[String] = {
@@ -66,15 +85,10 @@ class MiniMySqlSpec extends SparkSpec {
     "sees it") {
     val (_, url, opts) = freshDb()
     val df = Seq((1L, "a")).toDF("id", "v")
-    // both upserts propagate it instead of counting the rows as failed
-    for (upsert <- Seq[() => Any](
-        () => JdbcSink.upsert(df, url, "missing_tbl", Seq("id"), opts,
-          quote = "`"),
-        () => JdbcSink.upsertOnDuplicateKey(df, url, "missing_tbl",
-          Seq("id"), opts))) {
-      val e = intercept[org.apache.spark.SparkException](upsert())
-      assert(JdbcSink.isMissingRelation(e))
-    }
+    // the upsert propagates it instead of counting the rows as failed
+    val e = intercept[org.apache.spark.SparkException](
+      JdbcSink.upsertReport(df, url, "missing_tbl", Seq("id"), opts))
+    assert(JdbcSink.isMissingRelation(e))
   }
 
   test("poison rows carry MySQL 1048/23000 and are isolated, not fatal: " +
@@ -82,8 +96,7 @@ class MiniMySqlSpec extends SparkSpec {
     val (db, url, opts) = freshDb()
     val rows = Seq[(java.lang.Long, String)](
       (1L, "a"), (2L, null), (3L, "c")).toDF("id", "v")
-    val rpt = JdbcSink.upsertReport(rows, url, "t", Seq("id"), opts,
-      quote = "`")
+    val rpt = JdbcSink.upsertReport(rows, url, "t", Seq("id"), opts)
     assert(rpt.applied === 2L)
     assert(rpt.failed === 1L)
     assert(rpt.errors.exists(_.contains("cannot be null")))
@@ -91,35 +104,11 @@ class MiniMySqlSpec extends SparkSpec {
       Seq((1L, "a"), (3L, "c")))
   }
 
-  test("ODKU poison row after a committed batch: its batch replays, the " +
-    "batches before and after it land") {
-    val (db, url, opts) = freshDb()
-    // one partition, batches {1,2} {3,null} {5}
-    val rows = Seq[(java.lang.Long, String)]((1L, "a"), (2L, "b"),
-      (3L, "c"), (4L, null), (5L, "e")).toDF("id", "v").coalesce(1)
-    val rpt = JdbcSink.upsertOnDuplicateKey(rows, url, "t", Seq("id"), opts,
-      batchSize = 2)
-    assert(rpt.applied === 4L)
-    assert(rpt.failed === 1L)
-    assert(scan(db).select("id").as[Long].collect().sorted.toSeq ===
-      Seq(1L, 2L, 3L, 5L))
-  }
-
-  test("delete and replaceChildren shapes parse under the dialect") {
-    val (db, url, opts) = freshDb()
-    JdbcSink.upsert(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
-      url, "t", Seq("id"), opts, quote = "`")
-    assert(JdbcSink.delete(Seq(Tuple1(2L)).toDF("id"), url, "t",
-      Seq("id"), opts, quote = "`") === 1L)
-    assert(scan(db).select("id").as[Long].collect().sorted.toSeq ===
-      Seq(1L, 3L))
-  }
-
   test("upsert is idempotent under the dialect (at-least-once safety)") {
     val (db, url, opts) = freshDb()
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-    JdbcSink.upsert(df, url, "t", Seq("id"), opts, quote = "`")
-    JdbcSink.upsert(df, url, "t", Seq("id"), opts, quote = "`")
+    JdbcSink.upsertReport(df, url, "t", Seq("id"), opts)
+    JdbcSink.upsertReport(df, url, "t", Seq("id"), opts)
     assert(scan(db).orderBy("id").as[(Long, String)].collect().toSeq ===
       Seq((1L, "a"), (2L, "b")))
   }

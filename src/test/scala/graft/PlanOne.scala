@@ -6,8 +6,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev-only (test source set): dump `explain(formatted)` of named
-  * declared queries to `plans/r15/<query>_<tag>.txt` — the
-  * before/after plan evidence the optimization rounds commit.
+  * declared queries to `plans/r15/<query>_<tag>.txt` under the working
+  * directory — the before/after plan evidence the optimization rounds
+  * commit.
   *
   *   sbt "Test/runMain graft.PlanOne before g18_stress_centrality ..."
   *
@@ -30,12 +31,12 @@ object PlanOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Files.createDirectories(Paths.get("/root/repo/plans/r15"))
+    Files.createDirectories(Paths.get("plans/r15"))
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, dir)
       val txt = s"## $n\n\n```\n" +
         df.queryExecution.explainString(FormattedMode).trim + "\n```\n"
-      Files.write(Paths.get(s"/root/repo/plans/r15/${n}_$tag.txt"),
+      Files.write(Paths.get(s"plans/r15/${n}_$tag.txt"),
         txt.getBytes("UTF-8"))
       println(s"[planone] wrote ${n}_$tag.txt")
     }
