@@ -1,22 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.graft.{Kernel, KernelCall}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{FixedPointDot, HammingLE, LshBucket, MinHashSig, RollingHash, WordShingles}
+import graft.functions._
 
-/** SQL-function surface of the engine: the reference's string helpers and
-  * the fingerprint hash as native Catalyst expression trees (composed from
-  * built-in expressions — codegen'd end to end, no UDF boxing), plus the
-  * two registration paths:
+/** SQL-function surface of the engine, registered by [[GraftExtensions]]
+  * (`spark.sql.extensions` config or `withExtensions` at session build
+  * time):
   *
-  *  - `GraftFunctions.registerAll(spark)` on a live session;
-  *  - `GraftExtensions` via `spark.sql.extensions` config / `withExtensions`
-  *    at session build time (the idiomatic deployment path).
+  *  - the reference's string helpers as native Catalyst expression trees
+  *    composed from built-in expressions (codegen'd end to end, no UDF
+  *    boxing);
+  *  - the catalog of native row kernels, each listed once below as a
+  *    [[Kernel]]: SQL calls it by name, the DataFrame operators call the
+  *    same entry (`GraftFunctions.wordShingles(text, 3)`);
+  *  - the expressions with their own generated code and the sketch
+  *    aggregates.
   *
   * Expression semantics mirror graft.functions.StrFunctions (reference:
   * sdk/lib/str.php:11-31 — "" when the separator is absent, and for
@@ -39,6 +43,76 @@ object GraftFunctions {
       Substring(str,
         Add(StringInstr(str, sep), Length(sep)),
         Length(str)))
+
+  private def atLeastOne(what: String): Seq[Int] => Unit =
+    p => require(p.head >= 1, s"$what must be >= 1, got ${p.head}")
+
+  // ---- text --------------------------------------------------------------
+  val rollingHash = Kernel("rolling_hash", RollingHash.getClass, "hash",
+    LongType, Seq(StringType))
+  val nfcNormalize = Kernel("nfc_normalize", UnicodeNorm.getClass, "nfc",
+    StringType, Seq(StringType))
+  val accentStrip = Kernel("accent_strip", UnicodeNorm.getClass,
+    "stripAccents", StringType, Seq(StringType))
+  // word_shingles(text, k): distinct lowercase word k-shingles
+  val wordShingles = Kernel("word_shingles", WordShingles.getClass,
+    "compute", ArrayType(StringType, containsNull = false), Seq(StringType),
+    nParams = 1, checkParams = atLeastOne("shingle size"))
+  // word_chunks(text, k): non-overlapping k-token chunks
+  val wordChunks = Kernel("word_chunks", WordChunks.getClass, "compute",
+    ArrayType(StringType, containsNull = false), Seq(StringType),
+    nParams = 1, checkParams = atLeastOne("chunk size"))
+  // word_chunk_structs(text, k, overlap): overlapping chunks with positions
+  val wordChunkStructs = Kernel("word_chunk_structs",
+    WordChunkStructs.getClass, "compute", WordChunkStructs.Schema,
+    Seq(StringType), nParams = 2, checkParams = {
+      case Seq(k, overlap) => require(k > overlap && overlap >= 0,
+        s"need chunkSize > overlap >= 0, got $k/$overlap")
+    })
+  // minhash_sig(shingles, m): m-component signature of a shingle array
+  val minhashSig = Kernel("minhash_sig", MinHashSig.getClass, "compute",
+    ArrayType(LongType, containsNull = true), Seq(ArrayType(StringType)),
+    nParams = 1, checkParams = atLeastOne("signature size"))
+  // cdc_chunks(text): content-defined chunk structs (start, len, digest)
+  val cdcChunks = Kernel("cdc_chunks", CdcChunks.getClass, "compute",
+    CdcChunks.Schema, Seq(StringType))
+
+  // ---- layout and membership ---------------------------------------------
+  // z_order(x, y): Morton interleave for 2-D data layout clustering
+  val zOrder = Kernel("z_order", ZOrder2.getClass, "interleave", LongType,
+    Seq(LongType, LongType))
+  // bloom_might_contain(filter, item, numHashes): bloom_build's probe
+  val bloomMightContain = Kernel("bloom_might_contain",
+    BloomFilterFns.getClass, "mightContain", BooleanType,
+    Seq(BinaryType, StringType), nParams = 1)
+  val bloomMightContainLong = Kernel("bloom_might_contain_long",
+    BloomFilterFns.getClass, "mightContainLong", BooleanType,
+    Seq(BinaryType, LongType), nParams = 1)
+
+  // ---- media: header and payload decoders, NULL on unreadable bytes -------
+  val mediaDims = Kernel("media_dims", MediaDims.getClass, "decode",
+    MediaDims.Schema, Seq(BinaryType), nullableResult = true)
+  val audioMeta = Kernel("audio_meta", AudioMeta.getClass, "decode",
+    AudioMeta.Schema, Seq(BinaryType), nullableResult = true)
+  // audio_blocks(binary, nBlocks): per-block peak and sum of squares
+  val audioBlocks = Kernel("audio_blocks", AudioBlocks.getClass, "decode",
+    AudioBlocks.Schema, Seq(BinaryType), nParams = 1, nullableResult = true)
+  val gifFrames = Kernel("gif_frames", GifFrames.getClass, "decode",
+    GifFrames.Schema, Seq(BinaryType), nullableResult = true)
+  // bmp_thumb / png_thumb(binary, gridW, gridH): RGB-hex thumbnail
+  val bmpThumb = Kernel("bmp_thumb", BmpThumb.getClass, "decode",
+    StringType, Seq(BinaryType), nParams = 2, nullableResult = true)
+  val pngThumb = Kernel("png_thumb", PngThumb.getClass, "decode",
+    StringType, Seq(BinaryType), nParams = 2, nullableResult = true)
+  val exifMeta = Kernel("exif_meta", ExifMeta.getClass, "decode",
+    ExifMeta.Schema, Seq(BinaryType), nullableResult = true)
+  val gpsScrub = Kernel("gps_scrub", GpsScrub.getClass, "scrub",
+    GpsScrub.Schema, Seq(BinaryType), nullableResult = true)
+
+  val kernels: Seq[Kernel] = Seq(rollingHash, nfcNormalize, accentStrip,
+    wordShingles, wordChunks, wordChunkStructs, minhashSig, cdcChunks,
+    zOrder, bloomMightContain, bloomMightContainLong, mediaDims, audioMeta,
+    audioBlocks, gifFrames, bmpThumb, pngThumb, exifMeta, gpsScrub)
 
   private def arity(name: String, n: Int)(
       f: Seq[Expression] => Expression): Seq[Expression] => Expression =
@@ -63,8 +137,6 @@ object GraftFunctions {
   }
 
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "rolling_hash" -> arity("rolling_hash", 1)(exprs =>
-      RollingHash(exprs.head)),
     "str_before" -> arity("str_before", 2)(exprs =>
       strBeforeExpr(exprs(0), exprs(1))),
     "str_after" -> arity("str_after", 2)(exprs =>
@@ -75,20 +147,13 @@ object GraftFunctions {
     // lsh_bucket(vec, nPlanes[, planeOffset]) — the optional offset selects
     // a disjoint slice of the static plane matrix (table t of an ensemble
     // passes t * nPlanes).
-    "lsh_bucket" -> (exprs => {
+    "lsh_bucket" -> ((exprs: Seq[Expression]) => {
       if (exprs.length != 2 && exprs.length != 3)
         throw new IllegalArgumentException(
           s"lsh_bucket requires 2 or 3 arguments, got ${exprs.length}")
       LshBucket(exprs(0), litInt("lsh_bucket", exprs(1)),
         if (exprs.length == 3) litInt("lsh_bucket", exprs(2)) else 0)
     }),
-    "word_shingles" -> arity("word_shingles", 2)(exprs =>
-      WordShingles(exprs(0), litInt("word_shingles", exprs(1)))),
-    "word_chunks" -> arity("word_chunks", 2)(exprs =>
-      graft.functions.WordChunks(exprs(0),
-        litInt("word_chunks", exprs(1)))),
-    "minhash_sig" -> arity("minhash_sig", 2)(exprs =>
-      MinHashSig(exprs(0), litInt("minhash_sig", exprs(1)))),
     // hamming_le(codeA, codeB, d) — similarity-join predicate; joins whose
     // condition carries it are rewritten by plans.HammingJoinRewrite
     "hamming_le" -> arity("hamming_le", 3)(exprs =>
@@ -96,69 +161,23 @@ object GraftFunctions {
     // misra_gries(item, k) — heavy-hitters candidate summary (aggregate;
     // the analyzer wraps the bare AggregateFunction)
     "misra_gries" -> arity("misra_gries", 2)(exprs =>
-      graft.functions.MisraGriesAgg(exprs(0),
-        litInt("misra_gries", exprs(1)))),
+      MisraGriesAgg(exprs(0), litInt("misra_gries", exprs(1)))),
     // count_min(item, width, depth) — approximate-frequency sketch
     // aggregate; counters are order-independent sums, so estimates gate
     "count_min" -> arity("count_min", 3)(exprs =>
-      graft.functions.CountMinAgg(exprs(0),
+      CountMinAgg(exprs(0),
         litInt("count_min", exprs(1)), litInt("count_min", exprs(2)))),
     // bloom_build(item, numBits, numHashes) — membership filter aggregate
     "bloom_build" -> arity("bloom_build", 3)(exprs =>
-      graft.functions.BloomFilterAgg(exprs(0),
+      BloomFilterAgg(exprs(0),
         litInt("bloom_build", exprs(1)), litInt("bloom_build", exprs(2)))),
-    // bloom_might_contain(filter, item, numHashes) — codegen'd probe
-    "bloom_might_contain" -> arity("bloom_might_contain", 3)(exprs =>
-      graft.functions.BloomMightContain(exprs(0), exprs(1),
-        litInt("bloom_might_contain", exprs(2)))),
-    // z_order(x, y) — Morton interleave for 2-D data layout clustering
-    "z_order" -> arity("z_order", 2)(exprs =>
-      graft.functions.ZOrder2(exprs(0), exprs(1))),
-    // media_dims(binary) — container magic + pixel dimensions from the
-    // payload's leading bytes (PNG/JPEG/GIF/BMP), codegen'd header sniff
-    "media_dims" -> arity("media_dims", 1)(exprs =>
-      graft.functions.MediaDims(exprs.head)),
-    // audio_meta(binary) — container magic + stream parameters from the
-    // payload's leading bytes (WAV/FLAC/MP3), codegen'd header sniff
-    "audio_meta" -> arity("audio_meta", 1)(exprs =>
-      graft.functions.AudioMeta(exprs.head)),
     // dhash56(string) — 56-bit perceptual difference hash over the
     // payload's code points (stub-pixel contract; Hamming-joinable)
-    "dhash56" -> arity("dhash56", 1)(exprs =>
-      graft.functions.DHash56(exprs.head)),
-    // cdc_chunks(string) — content-defined chunk structs
-    // (start, len, digest); FastCDC-style rolling-hash boundaries
-    "cdc_chunks" -> arity("cdc_chunks", 1)(exprs =>
-      graft.functions.CdcChunks(exprs.head)),
-    // gif_frames(binary) — per-frame structs (index, placement,
-    // dimensions, GCE delay, local palette) from the GIF block walk
-    "gif_frames" -> arity("gif_frames", 1)(exprs =>
-      graft.functions.GifFrames(exprs.head)),
-    // bmp_thumb(binary, gridW, gridH) — true-pixel box-average thumbnail
-    // of an uncompressed 24-bpp BMP as RGB hex
-    "bmp_thumb" -> arity("bmp_thumb", 3)(exprs =>
-      graft.functions.BmpThumb(exprs(0), litInt("bmp_thumb", exprs(1)),
-        litInt("bmp_thumb", exprs(2)))),
-    // png_thumb(binary, gridW, gridH) — full PNG decode (inflate +
-    // unfilter) and true-pixel box-average thumbnail as RGB hex
-    "png_thumb" -> arity("png_thumb", 3)(exprs =>
-      graft.functions.PngThumb(exprs(0), litInt("png_thumb", exprs(1)),
-        litInt("png_thumb", exprs(2)))),
-    // exif_meta(binary) — orientation/make/model/datetime from the JPEG
-    // APP1 TIFF walk
-    "exif_meta" -> arity("exif_meta", 1)(exprs =>
-      graft.functions.ExifMeta(exprs.head)),
-    // audio_blocks(binary, nBlocks) — per-block peak + exact sum of
-    // squares from a PCM WAV's actual int16 samples
-    "audio_blocks" -> arity("audio_blocks", 2)(exprs =>
-      graft.functions.AudioBlocks(exprs(0),
-        litInt("audio_blocks", exprs(1)))))
-
-  /** Register on a live session (temp functions). */
-  def registerAll(spark: SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+    "dhash56" -> arity("dhash56", 1)(exprs => DHash56(exprs.head))) ++
+    kernels.map { k =>
+      val n = k.inputs.length
+      k.name -> arity(k.name, n + k.nParams)(exprs =>
+        KernelCall(k, exprs.take(n), exprs.drop(n).map(litInt(k.name, _))))
     }
 }
 

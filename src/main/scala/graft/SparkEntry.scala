@@ -7,7 +7,6 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.etl._
 import graft.functions.StrFunctions._
-import graft.functions.RollingHash
 import graft.ops.{AsOfJoin, Curation, LogHistogram, MinHashDedup, Multimodal, ScaleSafe, SimHash, Similarity, Skew, TextAnalysis}
 import graft.streaming.StreamOps
 
@@ -2076,13 +2075,8 @@ object SparkEntry {
         .select(col("doc_id"), col("text"))
         .filter(col("text").isNotNull)
         .unionByName(fixtures)
-      val nfcC = org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.NfcNormalize(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("text"))))
-      def strip(c: Column) =
-        org.apache.spark.sql.graft.ColumnBridge.column(
-          graft.functions.AccentStrip(
-            org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+      val nfcC = GraftFunctions.nfcNormalize(col("text"))
+      val strip = GraftFunctions.accentStrip
       docs.select(col("doc_id"),
           nfcC.as("nfc_text"),
           strip(lower(nfcC)).as("folded"),
@@ -2236,7 +2230,6 @@ object SparkEntry {
       ).orderBy("doc_id")),
 
     "t5_rolling_hash" -> ((s, dir) => {
-      RollingHash.register(s)
       t(s, dir, "documents").select(
         col("doc_id"), expr("rolling_hash(text)").as("rh")
       ).orderBy("doc_id")
@@ -2590,9 +2583,7 @@ object SparkEntry {
     // block; the cross-doc digest table IS the storage-dedup map. One
     // codegen'd chunking pass, one digest-keyed aggregation ------------
     "d21_cdc_chunks" -> ((s, dir) => {
-      val chunks = org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.CdcChunks(
-          org.apache.spark.sql.graft.ColumnBridge.expression(col("text"))))
+      val chunks = GraftFunctions.cdcChunks(col("text"))
       t(s, dir, "documents").filter(col("text").isNotNull)
         .select(col("doc_id"), explode(chunks).as("c"))
         .select(col("doc_id"), col("c.digest").as("digest"))
@@ -5994,7 +5985,6 @@ object SparkEntry {
     // built-in (per-source storage-dedup ratio, no DataFrame code) ------
     "sql3_sql_native_fns" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      GraftFunctions.registerAll(s)
       s.sql(
         """SELECT source,
           |  count(*) AS n_chunks,
@@ -6006,7 +5996,6 @@ object SparkEntry {
 
     "sql1_engine_sql" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      GraftFunctions.registerAll(s)
       s.sql(
         """SELECT p_partkey,
           |  str_before(p_type, ' ') AS type_head,
@@ -6067,7 +6056,6 @@ object SparkEntry {
     // chunk equality join exactly as it does for the DataFrame form.
     "sql7_hamming_join" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      GraftFunctions.registerAll(s)
       s.sql(
         """WITH ph AS (SELECT doc_id, dhash56(text) AS phash
           |  FROM documents WHERE text IS NOT NULL)
@@ -6081,7 +6069,6 @@ object SparkEntry {
 
     "sql8_heavy_hitters" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      GraftFunctions.registerAll(s)
       s.sql(
         """WITH toks AS (SELECT explode(
           |    regexp_extract_all(lower(text), '\\S+', 0)) AS token
@@ -6129,7 +6116,6 @@ object SparkEntry {
 
     "sql11_media_meta" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      GraftFunctions.registerAll(s)
       val fixtures = Multimodal.FixtureMediaHex.map { case (id, hex, _) =>
         s"(CAST($id AS BIGINT), unhex('$hex'))"
       }.mkString(",\n    ")
@@ -6201,7 +6187,6 @@ object SparkEntry {
     // oracle verbatim -----------------------------------------------------
     "sql14_ann_ivf" -> ((s, dir) => {
       Tables.registerAll(s, dir)
-      GraftFunctions.registerAll(s)
       s.sql(
         """WITH c0 AS (
           |  SELECT vec_id AS c_id, embedding AS c_vec,

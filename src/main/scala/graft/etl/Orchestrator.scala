@@ -2,6 +2,7 @@ package graft.etl
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
+import scala.util.Failure
 
 /** Orchestration parity with the reference's shell layer (reference:
   * sdk/shell/import.sh): migrations with dependencies run sequentially
@@ -20,14 +21,23 @@ import scala.concurrent.duration.Duration
 object Orchestrator {
 
   /** Run stages in order; jobs within a stage concurrently. Returns each
-    * job's result in submission order. A failed job fails its stage (like
-    * `set -e` around the shell's foreground steps).
+    * job's result in submission order. A stage is a plain barrier, like the
+    * shell's `wait`: every job of it finishes before the stage ends. A
+    * failed job fails its stage (like `set -e` around the shell's
+    * foreground steps): the first failure in submission order is thrown,
+    * later ones ride along as suppressed, and later stages do not start.
     */
   def runStages[T](stages: Seq[Seq[() => T]])
                   (implicit ec: ExecutionContext): Seq[Seq[T]] =
     stages.map { stage =>
-      Await.result(Future.sequence(stage.map(job => Future(job()))),
-        Duration.Inf)
+      val outcomes = stage.map(job => Future(job()))
+        .map(f => Await.ready(f, Duration.Inf).value.get)
+      outcomes.collect { case Failure(e) => e } match {
+        case first +: rest =>
+          rest.foreach(e => if (e ne first) first.addSuppressed(e))
+          throw first
+        case _ => outcomes.map(_.get)
+      }
     }
 
   /** Convenience: run one config's flows as a single parallel stage per

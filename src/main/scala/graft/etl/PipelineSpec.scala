@@ -81,7 +81,15 @@ object PipelineSpec {
       case _ => throw new IllegalArgumentException(
         "'connections' must be an object")
     }
-    PipelineSpec(tables.map(parseFlow), connections)
+    val flows = tables.map(parseFlow)
+    // an unknown name would otherwise fall back to the global "from"
+    // and silently read the wrong source
+    flows.foreach(f => f.connection.foreach { c =>
+      if (!connections.contains(c)) throw new IllegalArgumentException(
+        s"flow '${f.from} -> ${f.to}': connection '$c' names no entry " +
+          "of 'connections'")
+    })
+    PipelineSpec(flows, connections)
   }
 
   private def parseConnection(v: JValue, where: String): ConnectionSpec = {

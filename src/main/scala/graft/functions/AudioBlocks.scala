@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StructField, StructType}
@@ -23,29 +21,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, S
   * NULL for anything that is not a PCM (format 1) 16-bit WAV with at
   * least `nBlocks` samples; a data chunk longer than the payload is
   * clipped to the bytes present (a truncated download still audits).
-  * Native Catalyst expression with `doGenCode` — one bounded pass per
-  * row inside whole-stage codegen.
+  * The `audio_blocks` row kernel (catalog in `graft.GraftFunctions`) —
+  * one static call and one bounded pass per row inside whole-stage
+  * codegen.
   */
-case class AudioBlocks(child: Expression, nBlocks: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = AudioBlocks.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_blocks"
-
-  override def nullSafeEval(input: Any): Any =
-    AudioBlocks.decode(input.asInstanceOf[Array[Byte]], nBlocks)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.AudioBlocks.decode($c, $nBlocks);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioBlocks =
-    copy(child = newChild)
-}
-
 object AudioBlocks {
 
   val BlockSchema: StructType = StructType(Seq(

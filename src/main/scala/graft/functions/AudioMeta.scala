@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,31 +28,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *     NULL — honest: frame data is compressed and VBR duration needs a
   *     full frame walk, which a header sniff must not do.
   *
-  * Native Catalyst expression with `doGenCode`: bounded byte reads per
-  * row inside whole-stage codegen (WAV: one bounded chunk walk), no UDF
-  * boxing, no library dependency. Truncated-but-recognized headers yield
-  * the format with NULL parameters — at crawl scale corrupt payloads are
-  * data, not errors.
+  * The `audio_meta` row kernel (catalog in `graft.GraftFunctions`), one
+  * static call per row: bounded byte reads per row inside whole-stage
+  * codegen (WAV: one bounded chunk walk), no UDF boxing, no library
+  * dependency. Truncated-but-recognized headers yield the format with
+  * NULL parameters — at crawl scale corrupt payloads are data, not
+  * errors.
   */
-case class AudioMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = AudioMeta.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "audio_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    AudioMeta.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.AudioMeta.decode($c);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): AudioMeta =
-    copy(child = newChild)
-}
-
 object AudioMeta {
 
   val Schema: StructType = StructType(Seq(
@@ -157,9 +136,4 @@ object AudioMeta {
     }
     null
   }
-
-  /** Register as a SQL function so `expr("audio_meta(col)")` works. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "audio_meta", exprs => AudioMeta(exprs.head), "built-in")
 }

@@ -4,13 +4,12 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Shared bit-level mechanics for [[BloomFilterAgg]] / [[BloomMightContain]]:
+/** Shared bit-level mechanics for [[BloomFilterAgg]] and its probe:
   * double hashing (Kirsch & Mitzenmacher, "Less hashing, same performance",
   * 2006) over the two 64-bit halves of md5(item) — probe i sets/tests bit
   * `(h1 + i*h2) mod m`. md5 keeps the scheme engine-portable and is one
@@ -44,8 +43,13 @@ object BloomFilterFns {
     }
   }
 
-  /** Static entry point for codegen: `bytes` is the serialized filter (8
-    * bytes per word, big-endian via ByteBuffer), `k` the probe count.
+  /** The `bloom_might_contain(filter, item, k)` row kernel — the PROBE
+    * side: false means the item is DEFINITELY absent (the
+    * no-false-negatives contract callers rely on); true means "verify
+    * exactly". One static call inside the scan's whole-stage-generated
+    * loop — one md5 and `k` word tests per row, no join, no shuffle.
+    * `bytes` is the serialized filter (8 bytes per word, big-endian via
+    * ByteBuffer).
     */
   def mightContain(bytes: Array[Byte], item: UTF8String, k: Int): Boolean = {
     val m = bytes.length * 8
@@ -86,6 +90,10 @@ object BloomFilterFns {
     }
   }
 
+  /** `bloom_might_contain_long(filter, item, k)` — probe side of
+    * [[BloomFilterAggLong]]: false = definitely absent, true = verify
+    * exactly; a few multiplies and `k` word tests per row.
+    */
   def mightContainLong(bytes: Array[Byte], item: Long, k: Int): Boolean = {
     val m = bytes.length * 8
     val h1 = mixLong(item)
@@ -183,41 +191,6 @@ case class BloomFilterAgg(
     copy(child = newChildren.head)
 }
 
-/** `bloom_might_contain(filter, item)` — the PROBE side: false means the
-  * item is DEFINITELY absent (the no-false-negatives contract callers rely
-  * on); true means "verify exactly". Codegen'd via a static call, so the
-  * probe sits inside the scan's whole-stage-generated loop — one md5 and
-  * `numHashes` word tests per row, no join, no shuffle.
-  */
-case class BloomMightContain(left: Expression, right: Expression,
-                             numHashes: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"bloom_might_contain needs (binary, string), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(filter: Any, item: Any): Any =
-    BloomFilterFns.mightContain(filter.asInstanceOf[Array[Byte]],
-      item.asInstanceOf[UTF8String], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (f, it) =>
-      s"graft.functions.BloomFilterFns.mightContain($f, $it, $numHashes)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomMightContain =
-    copy(left = newLeft, right = newRight)
-}
-
 /** [[BloomFilterAgg]] for BIGINT keys: same word-wise-OR merge contract,
   * SplitMix64 double hashing instead of md5 — built for join-key
   * prefilters where the key is (or packs into) one long and the md5
@@ -278,49 +251,4 @@ case class BloomFilterAggLong(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BloomFilterAggLong =
     copy(child = newChildren.head)
-}
-
-/** `bloom_might_contain_long(filter, item)` — probe side of
-  * [[BloomFilterAggLong]]: false = definitely absent, true = verify
-  * exactly. Codegen'd static call; a few multiplies and `numHashes`
-  * word tests per row.
-  */
-case class BloomMightContainLong(left: Expression, right: Expression,
-                                 numHashes: Int)
-  extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain_long"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"bloom_might_contain_long needs (binary, bigint), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(filter: Any, item: Any): Any =
-    BloomFilterFns.mightContainLong(filter.asInstanceOf[Array[Byte]],
-      item.asInstanceOf[Long], numHashes)
-
-  // keep literal filters out of plan dumps: a 4 MiB embedded filter
-  // would otherwise print as megabytes of hex in every explain()
-  override def toString: String = {
-    val l = left match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(
-          b: Array[Byte], _) => s"<bloom filter: ${b.length} B>"
-      case other => other.toString
-    }
-    s"bloom_might_contain_long($l, $right)"
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (f, it) =>
-      s"graft.functions.BloomFilterFns.mightContainLong($f, $it, $numHashes)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BloomMightContainLong =
-    copy(left = newLeft, right = newRight)
 }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -22,32 +20,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * (wrong magic, compressed, short pixel data, or fewer pixels than
   * grid cells) — corrupt media is data, not an error.
   *
-  * Native Catalyst expression with `doGenCode`: the decode is one
-  * bounded pass over the pixel array per row, inside whole-stage
-  * codegen. This is the proof the m1 header parser suggested: real
-  * pixel work fits the pure-JVM expression contract — swapping in a
-  * JNI codec for PNG/JPEG changes `decode`, not the plan.
+  * The `bmp_thumb` row kernel (catalog in `graft.GraftFunctions`): the
+  * decode is one bounded pass over the pixel array per row, inside
+  * whole-stage codegen. This is the proof the m1 header parser
+  * suggested: real pixel work fits the pure-JVM row-kernel contract —
+  * swapping in a JNI codec for PNG/JPEG changes `decode`, not the plan.
   */
-case class BmpThumb(child: Expression, gridW: Int, gridH: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "bmp_thumb"
-
-  override def nullSafeEval(input: Any): Any =
-    BmpThumb.decode(input.asInstanceOf[Array[Byte]], gridW, gridH)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.BmpThumb.decode($c, $gridW, $gridH);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): BmpThumb =
-    copy(child = newChild)
-}
-
 object BmpThumb {
 
   private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff

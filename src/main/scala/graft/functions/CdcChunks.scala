@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,33 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * chunker adds zero shuffles; dedup downstream is one digest-keyed
   * aggregation.
   */
-case class CdcChunks(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
+object CdcChunks {
+  val Schema: DataType = ArrayType(StructType(Seq(
     StructField("start", LongType, nullable = false),
     StructField("len", LongType, nullable = false),
     StructField("digest", StringType, nullable = false))),
     containsNull = false)
-  override def prettyName: String = "cdc_chunks"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"cdc_chunks needs a string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    CdcChunks.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CdcChunks.compute($c)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): CdcChunks = copy(child = newChild)
-}
-
-object CdcChunks {
   final val Window = 8
   final val Mod = 1000000007L
   final val Divisor = 64L

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,28 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * read, every offset is bounds-checked, malformed structures degrade
   * to partial/NULL rather than throwing (crawl-scale discipline).
   *
-  * Native Catalyst expression with `doGenCode` — EXIF audit of a
-  * 100 TB image column is one map-only codegen projection.
+  * The `exif_meta` row kernel (catalog in `graft.GraftFunctions`) —
+  * EXIF audit of a 100 TB image column is one map-only codegen
+  * projection.
   */
-case class ExifMeta(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ExifMeta.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "exif_meta"
-
-  override def nullSafeEval(input: Any): Any =
-    ExifMeta.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.ExifMeta.decode($c);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): ExifMeta =
-    copy(child = newChild)
-}
-
 object ExifMeta {
 
   val Schema: StructType = StructType(Seq(

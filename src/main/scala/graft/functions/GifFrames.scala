@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType, StructField, StructType}
@@ -32,30 +30,11 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType
   * at all). Truncated or non-GIF payloads yield NULL, never an error —
   * at crawl scale corrupt media is data (quarantine on NULL downstream).
   *
-  * Native Catalyst expression with `doGenCode`: the walk is a bounded
-  * byte scan per row inside whole-stage codegen — no UDF boxing, no
-  * library. An animated-GIF audit over a 100 TB media column is one
-  * map-only projection + explode.
+  * The `gif_frames` row kernel (catalog in `graft.GraftFunctions`): the
+  * walk is a bounded byte scan per row inside whole-stage codegen — no
+  * UDF boxing, no library. An animated-GIF audit over a 100 TB media
+  * column is one map-only projection + explode.
   */
-case class GifFrames(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = GifFrames.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "gif_frames"
-
-  override def nullSafeEval(input: Any): Any =
-    GifFrames.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.GifFrames.decode($c);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): GifFrames =
-    copy(child = newChild)
-}
-
 object GifFrames {
 
   val FrameSchema: StructType = StructType(Seq(

@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, StructField, StructType}
 
@@ -29,25 +27,6 @@ import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, StructFiel
   * discipline as [[ExifMeta]] (offsets checked, malformed structures
   * degrade to pass-through rather than throwing).
   */
-case class GpsScrub(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = GpsScrub.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "gps_scrub"
-
-  override def nullSafeEval(input: Any): Any =
-    GpsScrub.scrub(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.GpsScrub.scrub($c);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): GpsScrub =
-    copy(child = newChild)
-}
-
 object GpsScrub {
 
   val Schema: StructType = StructType(Seq(

@@ -1,9 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,33 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *     = top-down row order; the magnitude is reported). The ancient
   *     BITMAPCOREHEADER (size 12) uses uint16s at 18/20.
   *
-  * A native Catalyst expression with `doGenCode`, so header sniffing over
-  * a 100 TB binary column stays inside whole-stage codegen — a few bounded
-  * byte reads per row (JPEG: one bounded segment walk), no UDF boxing, no
-  * library dependency. Truncated-but-recognized headers yield the format
-  * with NULL dimensions rather than failing the scan: at crawl scale,
+  * The `media_dims` row kernel (catalog in `graft.GraftFunctions`), one
+  * static call per row, so header sniffing over a 100 TB binary column
+  * stays inside whole-stage codegen — a few bounded byte reads per row
+  * (JPEG: one bounded segment walk), no UDF boxing, no library
+  * dependency. Truncated-but-recognized headers yield the format with
+  * NULL dimensions rather than failing the scan: at crawl scale,
   * corrupt payloads are data, not errors (quarantine downstream on
   * `width IS NULL`).
   */
-case class MediaDims(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = MediaDims.Schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "media_dims"
-
-  override def nullSafeEval(input: Any): Any =
-    MediaDims.decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.MediaDims.decode($c);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): MediaDims =
-    copy(child = newChild)
-}
-
 object MediaDims {
 
   val Schema: StructType = StructType(Seq(
@@ -129,9 +108,4 @@ object MediaDims {
     }
     null
   }
-
-  /** Register as a SQL function so `expr("media_dims(col)")` works. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "media_dims", exprs => MediaDims(exprs.head), "built-in")
 }

@@ -1,12 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** m-component minhash signature of a shingle array as ONE native codegen
-  * expression.
+/** m-component minhash signature of a shingle array as ONE static row
+  * kernel (`minhash_sig`, catalog in `graft.GraftFunctions`).
   *
   * Semantics are IDENTICAL to the composed form (MinHashDedup.baseHash +
   * signatureOfHashes, which the DuckDB oracle mirrors in SQL): per shingle,
@@ -21,34 +18,6 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * whole signature as a tight Java loop — profiling showed it as the
   * second-largest cost of the LSH pipeline after shingling.
   */
-case class MinHashSig(child: Expression, m: Int) extends UnaryExpression {
-  require(m >= 1, s"signature size must be >= 1, got $m")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"minhash_sig needs array<string>, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSig.compute(input.asInstanceOf[ArrayData], m)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashSig.compute($c, $m)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
 object MinHashSig {
   final val Mod = 2147483647L // 2^31 - 1, prime
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,30 +18,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * truncated streams and inflate failures. Bounded: images larger
   * than [[PngThumb.MaxPixels]] are refused before allocating.
   *
-  * Expression contract identical to [[BmpThumb]]: `doGenCode` wraps a
-  * static decode, so a PNG thumbnail column over 100 TB is one
+  * Kernel contract identical to [[BmpThumb]]: `png_thumb` is one static
+  * decode call per row, so a PNG thumbnail column over 100 TB is one
   * codegen projection; per-row cost is the inflate itself.
   */
-case class PngThumb(child: Expression, gridW: Int, gridH: Int)
-    extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "png_thumb"
-
-  override def nullSafeEval(input: Any): Any =
-    PngThumb.decode(input.asInstanceOf[Array[Byte]], gridW, gridH)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-       |${ev.value} = graft.functions.PngThumb.decode($c, $gridW, $gridH);
-       |if (${ev.value} == null) { ${ev.isNull} = true; }
-     """.stripMargin)
-
-  override protected def withNewChildInternal(newChild: Expression): PngThumb =
-    copy(child = newChild)
-}
-
 object PngThumb {
 
   /** Refuse to inflate anything claiming more pixels than this (16 MP) —

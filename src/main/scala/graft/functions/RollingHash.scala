@@ -1,9 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Polynomial rolling hash over Unicode code points, mod 1e9+7 — the
@@ -12,28 +8,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * h_0 = 0;  h_i = (31 * h_{i-1} + codepoint_i) mod 1_000_000_007
   *
-  * Implemented as a native Catalyst `Expression` with `doGenCode` so it stays
-  * inside whole-stage codegen (no UDF serialization/boxing in the hot path).
+  * The `rolling_hash` row kernel (catalog in `graft.GraftFunctions`): one
+  * static call inside whole-stage codegen (no UDF serialization/boxing in
+  * the hot path).
   * The modulus keeps every intermediate < 2^35, so the same arithmetic is
   * reproducible in any engine with 64-bit integers (the DuckDB oracle mirrors
   * it with `list_reduce`).
   */
-case class RollingHash(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "rolling_hash"
-
-  override def nullSafeEval(input: Any): Any =
-    RollingHash.hash(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.RollingHash.hash($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): RollingHash =
-    copy(child = newChild)
-}
-
 object RollingHash {
   final val Mod = 1000000007L
 
@@ -48,8 +29,5 @@ object RollingHash {
     h
   }
 
-  /** Register as a SQL function so `expr("rolling_hash(col)")` works. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
+  def hash(s: UTF8String): Long = hash(s.toString)
 }

@@ -2,10 +2,6 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Unicode canonicalization for multilingual corpora — the first
@@ -15,68 +11,33 @@ import org.apache.spark.unsafe.types.UTF8String
   * dedup-different, and tokenizer-different until normalized. NFC is the
   * W3C/WHATWG interchange form.
   *
-  * Native codegen expressions (`java.text.Normalizer` is JDK-builtin —
-  * no library, no UDF): normalizing 100 TB of text is a map-only
-  * projection. The DuckDB oracle mirrors with its `nfc_normalize` /
-  * `strip_accents` builtins — parity pinned on accent fixtures.
+  * Static row kernels `nfc_normalize` and `accent_strip` (catalog in
+  * `graft.GraftFunctions`; `java.text.Normalizer` is JDK-builtin — no
+  * library, no UDF): normalizing 100 TB of text is a map-only projection
+  * inside whole-stage codegen. The DuckDB oracle mirrors with its
+  * `nfc_normalize` / `strip_accents` builtins — parity pinned on accent
+  * fixtures.
   */
-case class NfcNormalize(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(UnicodeNorm.nfc(
-      input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.UnicodeNorm.nfc($c.toString()))")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): NfcNormalize = copy(child = newChild)
-}
-
-/** Accent folding: NFD-decompose, drop combining marks (Mn), recompose.
-  * "café" → "cafe", "ñ" → "n"; characters with no decomposition (ø, ß,
-  * ł) pass through — the same contract as DuckDB's `strip_accents`.
-  */
-case class AccentStrip(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "accent_strip"
-
-  override def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(UnicodeNorm.stripAccents(
-      input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      "org.apache.spark.unsafe.types.UTF8String.fromString(" +
-        s"graft.functions.UnicodeNorm.stripAccents($c.toString()))")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): AccentStrip = copy(child = newChild)
-}
-
 object UnicodeNorm {
   def nfc(s: String): String =
     if (Normalizer.isNormalized(s, Normalizer.Form.NFC)) s
     else Normalizer.normalize(s, Normalizer.Form.NFC)
 
+  def nfc(s: UTF8String): UTF8String =
+    UTF8String.fromString(nfc(s.toString))
+
   private val CombiningMarks = "\\p{Mn}+".r
 
+  /** Accent folding: NFD-decompose, drop combining marks (Mn), recompose.
+    * "café" → "cafe", "ñ" → "n"; characters with no decomposition (ø, ß,
+    * ł) pass through — the same contract as DuckDB's `strip_accents`.
+    */
   def stripAccents(s: String): String = {
     val decomposed = Normalizer.normalize(s, Normalizer.Form.NFD)
     val stripped = CombiningMarks.replaceAllIn(decomposed, "")
     Normalizer.normalize(stripped, Normalizer.Form.NFC)
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "accent_strip", exprs => AccentStrip(exprs.head), "built-in")
-  }
+  def stripAccents(s: UTF8String): UTF8String =
+    UTF8String.fromString(stripAccents(s.toString))
 }

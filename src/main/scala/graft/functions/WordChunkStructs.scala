@@ -1,16 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** OVERLAPPING word chunks with positions as one native codegen
-  * expression — the RAG/context chunker (`c3_token_chunks`) fused the way
-  * [[WordChunks]] fuses the non-overlapping segmenter.
+/** OVERLAPPING word chunks with positions as one static row kernel
+  * (`word_chunk_structs`) — the RAG/context chunker (`c3_token_chunks`)
+  * fused the way [[WordChunks]] fuses the non-overlapping segmenter.
   *
   * Semantics are IDENTICAL to the composed
   * `TextAnalysis.tokenChunks(TextAnalysis.tokens(text), k, overlap)`:
@@ -21,38 +18,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * the single (start=1, n_tokens=0, chunk="") row the composed form
   * produces. Output element: struct<start, n_tokens, chunk>.
   */
-case class WordChunkStructs(child: Expression, k: Int, overlap: Int)
-  extends UnaryExpression {
-  require(k > overlap && overlap >= 0,
-    s"need chunkSize > overlap >= 0, got $k/$overlap")
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
+object WordChunkStructs {
+  val Schema: DataType = ArrayType(StructType(Seq(
     StructField("start", LongType, nullable = false),
     StructField("n_tokens", LongType, nullable = false),
     StructField("chunk", StringType, nullable = false))),
     containsNull = false)
-  override def prettyName: String = "word_chunk_structs"
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"word_chunk_structs needs a string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WordChunkStructs.compute(input.asInstanceOf[UTF8String], k, overlap)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WordChunkStructs.compute($c, $k, $overlap)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordChunkStructs = copy(child = newChild)
-}
-
-object WordChunkStructs {
   private val Token = java.util.regex.Pattern.compile("\\S+")
 
   def compute(text: UTF8String, k: Int, overlap: Int): ArrayData = {

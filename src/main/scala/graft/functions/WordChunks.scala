@@ -1,14 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** NON-OVERLAPPING fixed-size word chunks of a text column as one native
-  * codegen expression — the segmenter the paragraph-dedup family
+/** NON-OVERLAPPING fixed-size word chunks of a text column as one static
+  * row kernel (`word_chunks`) — the segmenter the paragraph-dedup family
   * (d12/c7) explodes. Chunk i (0-based) is tokens [i*k, (i+1)*k) of the
   * lowercase `\S+` token stream joined by one space; the trailing partial
   * chunk is kept; fewer than one token → empty array. Token start
@@ -21,31 +17,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * measured 7× there). One generated call tokenizes and chunks in plain
   * Java.
   */
-case class WordChunks(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"chunk size must be >= 1, got $k")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_chunks"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"word_chunks needs a string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WordChunks.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WordChunks.compute($c, $k)")
-
-  override protected def withNewChildInternal(
-      newChild: Expression): WordChunks = copy(child = newChild)
-}
-
 object WordChunks {
   private val Token = java.util.regex.Pattern.compile("\\S+")
 

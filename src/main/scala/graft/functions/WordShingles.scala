@@ -1,13 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Distinct word k-shingles of a text column as ONE native codegen
-  * expression — the feature extractor every dedup path starts from.
+/** Distinct word k-shingles of a text column as ONE static row kernel
+  * (`word_shingles`, catalog in `graft.GraftFunctions`) — the feature
+  * extractor every dedup path starts from.
   *
   * Semantics are IDENTICAL to the composed form
   * `array_distinct(transform(sequence(1, n-k+1), i =>
@@ -23,34 +21,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * simhash pipeline (the hashing it feeds was already cheap). One generated
   * call per row does the tokenize-shingle-dedup pass in plain Java.
   */
-case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
-  require(k >= 1, s"shingle size must be >= 1, got $k")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"word_shingles needs a string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    WordShingles.compute(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.WordShingles.compute($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-}
-
 object WordShingles {
   private val Token = java.util.regex.Pattern.compile("\\S+")
 

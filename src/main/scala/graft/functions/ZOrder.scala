@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
-
 /** Morton/Z-order interleave of two non-negative integer keys (low
   * [[ZOrder2.Bits]] bits each): bit i of `left` lands at bit 2i, bit i of
   * `right` at 2i+1 — `z_order(x, y)` as a codegen'd scalar.
@@ -24,33 +19,6 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * or bucketed/offset values; silently masking sign bits would interleave
   * garbage).
   */
-case class ZOrder2(left: Expression, right: Expression)
-  extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "z_order"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"z_order needs (bigint, bigint), got " +
-          s"(${l.simpleString}, ${r.simpleString})")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any =
-    ZOrder2.interleave(l.asInstanceOf[Long], r.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (l, r) =>
-      s"graft.functions.ZOrder2.interleave($l, $r)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): ZOrder2 =
-    copy(left = newLeft, right = newRight)
-}
-
 object ZOrder2 {
   /** Bits taken from each key; 21+21 = 42-bit z-values stay well inside
     * a long and cover surrogate-id ranges to 2M.

@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   *     [[graft.functions.BloomFilterAgg]] pass — word-wise OR partials,
   *     128 KiB result for m = 2^20, broadcast everywhere);
   *  2. probe it inside the increment's scan loop (codegen'd
-  *     [[graft.functions.BloomMightContain]]): bloom-negative rows are
+  *     `bloom_might_contain` kernel): bloom-negative rows are
   *     DEFINITELY new — admitted with zero join work;
   *  3. only bloom-POSITIVE rows (true dups + the ~(1-e^(-kn/m))^k false
   *     positives) enter the exact anti join, so the expensive path
@@ -36,11 +36,7 @@ object Bloom {
         numBits, numHashes).toAggregateExpression())
 
   def mightContain(filter: Column, item: Column, numHashes: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.BloomMightContain(
-        org.apache.spark.sql.graft.ColumnBridge.expression(filter),
-        org.apache.spark.sql.graft.ColumnBridge.expression(item),
-        numHashes))
+    graft.GraftFunctions.bloomMightContain(filter, item, numHashes)
 
   /** BIGINT-keyed build/probe pair (SplitMix64 double hashing, no md5):
     * for join-key prefilters where the key is one long — the probe is a
@@ -54,11 +50,7 @@ object Bloom {
 
   def mightContainLong(filter: Column, item: Column,
                        numHashes: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.BloomMightContainLong(
-        org.apache.spark.sql.graft.ColumnBridge.expression(filter),
-        org.apache.spark.sql.graft.ColumnBridge.expression(item),
-        numHashes))
+    graft.GraftFunctions.bloomMightContainLong(filter, item, numHashes)
 
   /** Admit the increment rows whose `textCol` content does not already
     * exist in `corpus` (by md5 digest) — bloom prefilter, exact verify.

@@ -47,10 +47,7 @@ object Curation {
     // tokenize+chunk pass per row — the WordShingles discipline);
     // `pos * segWords + 1` recovers the token start position the
     // first-wins ordering needs.
-    val chunks = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.WordChunks(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col(textCol)),
-        segWords))
+    val chunks = graft.GraftFunctions.wordChunks(col(textCol), segWords)
     val segs = docs
       .filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(chunks).as(Seq("pos", "chunk")))
@@ -85,10 +82,7 @@ object Curation {
     */
   def dedupSegmentsInDoc(docs: DataFrame, idCol: String, textCol: String,
                          segWords: Int = 2): DataFrame = {
-    val chunks = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.WordChunks(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col(textCol)),
-        segWords))
+    val chunks = graft.GraftFunctions.wordChunks(col(textCol), segWords)
     val segs = docs
       .filter(col(textCol).isNotNull)
       .select(col(idCol), posexplode(chunks).as(Seq("pos", "chunk")))

@@ -72,14 +72,13 @@ object MinHashDedup {
   def signature(sh: Column, m: Int): Column =
     signatureOfHashes(transform(sh, baseHash(_)), m)
 
-  /** Signature as ONE native codegen call ([[graft.functions.MinHashSig]]):
+  /** Signature as ONE native row-kernel call (`minhash_sig`,
+    * [[graft.functions.MinHashSig]]):
     * same values as [[signature]]/the oracle SQL, but md5 + m mins run as a
     * tight Java loop instead of m×|shingles| interpreted lambda dispatches.
     */
   def signatureFused(sh: Column, m: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.MinHashSig(
-        org.apache.spark.sql.graft.ColumnBridge.expression(sh), m))
+    graft.GraftFunctions.minhashSig(sh, m)
 
   /** LSH band keys: the signature is split into `nBands` runs of `rowsPerBand`
     * components; each band hashes to one bucket key.

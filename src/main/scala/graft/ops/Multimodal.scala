@@ -135,9 +135,7 @@ object Multimodal {
     * One codegen projection, no shuffle, no per-row driver work.
     */
   def headerMetadata(media: DataFrame): DataFrame = {
-    val dims = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.MediaDims(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload"))))
+    val dims = graft.GraftFunctions.mediaDims(col("payload"))
     media.select(
         col("doc_id"),
         length(col("payload")).cast("long").as("n_bytes"),
@@ -188,9 +186,7 @@ object Multimodal {
     * 100 TB audio column never leaves whole-stage codegen.
     */
   def audioMetadata(media: DataFrame): DataFrame = {
-    val meta = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.AudioMeta(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload"))))
+    val meta = graft.GraftFunctions.audioMeta(col("payload"))
     media.select(
         col("doc_id"),
         length(col("payload")).cast("long").as("n_bytes"),
@@ -240,9 +236,7 @@ object Multimodal {
     * shuffle: an animation audit over a 100 TB media column.
     */
   def gifFrameTable(media: DataFrame): DataFrame = {
-    val frames = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.GifFrames(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload"))))
+    val frames = graft.GraftFunctions.gifFrames(col("payload"))
     media.select(col("doc_id"), frames.as("frames"))
       .select(col("doc_id"), explode(col("frames")).as("f"))
       .select(col("doc_id"),
@@ -266,10 +260,7 @@ object Multimodal {
     */
   def pixelThumbnails(media: DataFrame, gridW: Int,
                       gridH: Int): DataFrame = {
-    val thumb = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.BmpThumb(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload")),
-        gridW, gridH))
+    val thumb = graft.GraftFunctions.bmpThumb(col("payload"), gridW, gridH)
     media.select(
       col("doc_id"),
       length(col("payload")).cast("long").as("n_bytes"),
@@ -285,10 +276,7 @@ object Multimodal {
     */
   def pngThumbnails(media: DataFrame, gridW: Int,
                     gridH: Int): DataFrame = {
-    val thumb = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.PngThumb(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload")),
-        gridW, gridH))
+    val thumb = graft.GraftFunctions.pngThumb(col("payload"), gridW, gridH)
     media.select(
       col("doc_id"),
       length(col("payload")).cast("long").as("n_bytes"),
@@ -399,9 +387,7 @@ object Multimodal {
     * before any pixel work.
     */
   def exifMetadata(media: DataFrame): DataFrame = {
-    val meta = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.ExifMeta(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload"))))
+    val meta = graft.GraftFunctions.exifMeta(col("payload"))
     media.select(col("doc_id"), meta.as("m"))
       .select(col("doc_id"),
         col("m.orientation").cast("long").as("orientation"),
@@ -451,14 +437,8 @@ object Multimodal {
     * projections, no shuffle — safe over a mixed 100 TB binary column.
     */
   def gpsScrubAudit(media: DataFrame): DataFrame = {
-    def scrubOf(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.GpsScrub(
-          org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-    def metaOf(c: org.apache.spark.sql.Column) =
-      org.apache.spark.sql.graft.ColumnBridge.column(
-        graft.functions.ExifMeta(
-          org.apache.spark.sql.graft.ColumnBridge.expression(c)))
+    val scrubOf = graft.GraftFunctions.gpsScrub
+    val metaOf = graft.GraftFunctions.exifMeta
     media
       .select(col("doc_id"), col("payload"),
         scrubOf(col("payload")).as("s1"))
@@ -507,10 +487,7 @@ object Multimodal {
     * present. One codegen projection + explode, no shuffle.
     */
   def audioBlockTable(media: DataFrame, nBlocks: Int): DataFrame = {
-    val blocks = org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.AudioBlocks(
-        org.apache.spark.sql.graft.ColumnBridge.expression(col("payload")),
-        nBlocks))
+    val blocks = graft.GraftFunctions.audioBlocks(col("payload"), nBlocks)
     media.select(col("doc_id"), blocks.as("blocks"))
       .select(col("doc_id"), explode(col("blocks")).as("b"))
       .select(col("doc_id"),

@@ -41,16 +41,15 @@ object TextAnalysis {
     size(call_function("regexp_extract_all",
       lower(text), lit(BpePattern), lit(0)))
 
-  /** Distinct word k-shingles straight from text — the fused native codegen
-    * expression ([[graft.functions.WordShingles]]). Semantically equal to
+  /** Distinct word k-shingles straight from text — the fused native row
+    * kernel `word_shingles` ([[graft.functions.WordShingles]]).
+    * Semantically equal to
     * `array_distinct(MinHashDedup.shingles(tokens(text), k))` but one
     * generated pass per row; the composed interpreted form was the dominant
     * cost of every dedup pipeline.
     */
   def wordShingles(text: Column, k: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.WordShingles(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text), k))
+    graft.GraftFunctions.wordShingles(text, k)
 
   def charCount(text: Column): Column = length(text)
 
@@ -132,10 +131,7 @@ object TextAnalysis {
     */
   def tokenChunksFused(text: Column, chunkSize: Int,
                        overlap: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      graft.functions.WordChunkStructs(
-        org.apache.spark.sql.graft.ColumnBridge.expression(text),
-        chunkSize, overlap))
+    graft.GraftFunctions.wordChunkStructs(text, chunkSize, overlap)
 
   def tokenChunks(tk: Column, chunkSize: Int, overlap: Int): Column = {
     require(chunkSize > overlap && overlap >= 0,

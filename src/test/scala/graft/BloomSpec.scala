@@ -75,7 +75,7 @@ class BloomSpec extends SparkSpec {
       .filter(Bloom.mightContain(col("bf"), col("s"), 5))
     probed.collect()
     val plan = probed.queryExecution.executedPlan.toString
-    assert(plan.contains("bloom_might_contain"),
+    assert(plan.contains("BloomFilterFns.mightContain"),
       s"probe missing from plan:\n$plan")
     assert(plan.contains("WholeStageCodegen") || plan.contains("*("),
       s"probe fell out of codegen:\n$plan")

@@ -46,10 +46,7 @@ class FusedEquivalenceSpec extends SparkSpec {
     check(Prop.forAll(Gen.listOfN(6, textGen), Gen.chooseNum(1, 9)) {
       (texts, k) =>
         val chunksOf: org.apache.spark.sql.Column =
-          org.apache.spark.sql.graft.ColumnBridge.column(
-            graft.functions.WordChunks(
-              org.apache.spark.sql.graft.ColumnBridge
-                .expression(col("text")), k))
+          GraftFunctions.wordChunks(col("text"), k)
         val rows = texts.toDF("text").select(
           chunksOf.as("fused"),
           filter(TextAnalysis.tokenChunks(

@@ -3,7 +3,6 @@ package graft
 class GraftFunctionsSpec extends SparkSpec {
 
   test("registered SQL functions match the Column-API semantics") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     Seq(("hello world", " "), ("noseparator", " "), (" lead", " "))
       .toDF("s", "sep").createOrReplaceTempView("strs")
@@ -21,7 +20,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("codegen vector/dedup primitives are reachable from SQL") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     Seq((Array(1.0f, 0.0f), Array(0.5f, 0.5f), "the quick brown fox jumps"))
       .toDF("a", "b", "text").createOrReplaceTempView("vecs")
@@ -54,7 +52,6 @@ class GraftFunctionsSpec extends SparkSpec {
   }
 
   test("fused expressions match composed-form null semantics") {
-    GraftFunctions.registerAll(spark)
     // null shingle entries are SKIPPED (array_min ignores nulls in the
     // composed form); all-null input yields null components
     val r = spark.sql(
@@ -78,6 +75,28 @@ class GraftFunctionsSpec extends SparkSpec {
     intercept[Exception] {
       spark.sql("SELECT minhash_sig(5, 4)").collect()
     }
+  }
+
+  test("the session extension alone registers the whole catalog") {
+    GraftFunctions.builders.foreach { case (name, _) =>
+      assert(spark.catalog.functionExists(name), s"$name is not registered")
+    }
+    assert(GraftFunctions.kernels.map(_.name).toSet
+      .subsetOf(GraftFunctions.builders.map(_._1).toSet))
+    val r = spark.sql(
+      "SELECT nfc_normalize('e\u0301'), accent_strip('caf\u00e9')")
+      .collect()(0)
+    assert(r.getString(0) === "\u00e9")
+    assert(r.getString(1) === "cafe")
+    import spark.implicits._
+    // unaliased calls keep the built-in naming: literal ints are not
+    // part of the name, in SQL or through the DataFrame helper
+    val docs = Seq("the quick brown fox").toDF("text")
+    docs.createOrReplaceTempView("sh_docs")
+    assert(spark.sql("SELECT word_shingles(text, 3) FROM sh_docs")
+      .columns.toSeq === Seq("word_shingles(text)"))
+    assert(docs.select(graft.ops.TextAnalysis.wordShingles($"text", 3))
+      .columns.toSeq === Seq("word_shingles(text)"))
   }
 
   test("extensions class wires the same builders at session build time") {

@@ -24,6 +24,30 @@ class JdbcPipelineSpec extends SparkSpec {
       Map("driver" -> "d"))
     assert(spec.sourceConnection(spec.flows(1)).get.url === "jdbc:global")
     assert(spec.flows(0).inlineTo.isEmpty)
+
+    // a named connection resolves to its entry; an inline `from` on the
+    // same flow wins over the name
+    val named = PipelineSpec.parse(
+      """{"connections": {"from": {"url": "jdbc:global"},
+        |                 "erp": {"url": "jdbc:erp"}},
+        | "tables": [
+        |  {"flow": "a -> b", "connection": "erp"},
+        |  {"flow": "c -> d", "connection": "erp",
+        |   "connections": {"from": {"url": "jdbc:flow-local"}}}]}"""
+        .stripMargin)
+    assert(named.sourceConnection(named.flows(0)).get.url === "jdbc:erp")
+    assert(named.sourceConnection(named.flows(1)).get.url ===
+      "jdbc:flow-local")
+
+    // a misspelled name fails at parse time instead of reading the
+    // global source
+    val e = intercept[IllegalArgumentException](PipelineSpec.parse(
+      """{"connections": {"from": {"url": "jdbc:global"},
+        |                 "erp": {"url": "jdbc:erp"}},
+        | "tables": [{"flow": "a -> b", "connection": "epr"}]}"""
+        .stripMargin))
+    assert(e.getMessage.contains("a -> b") && e.getMessage.contains("epr"),
+      e.getMessage)
   }
 
   test("config with connections block drives a JDBC-source flow") {

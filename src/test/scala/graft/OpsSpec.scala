@@ -57,7 +57,6 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("expression evaluates through codegen inside a DataFrame") {
-    RollingHash.register(spark)
     val out = Seq("ab", "ba", "ab").toDF("s")
       .select(expr("rolling_hash(s)").as("h")).collect().map(_.getLong(0))
     assert(out(0) === 3105L)
@@ -98,8 +97,12 @@ class MinHashDedupSpec extends SparkSpec {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     object walk extends AdaptiveSparkPlanHelper
-    def hasSig(p: SparkPlan): Boolean =
-      p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.MinHashSig]))
+    def hasSig(p: SparkPlan): Boolean = p.expressions.exists(_.exists {
+      case s: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke =>
+        s.objectName == "graft.functions.MinHashSig" &&
+          s.functionName == "compute"
+      case _ => false
+    })
     def hashExchanges(p: SparkPlan): Int = walk.collect(p) {
       case e: ShuffleExchangeExec
           if e.outputPartitioning.isInstanceOf[HashPartitioning] => e

@@ -27,6 +27,21 @@ class OrchestratorSpec extends SparkSpec {
     assert(results(1) === Seq(160L))
   }
 
+  test("a failed job fails its stage only after its siblings finish") {
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val laterStage = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      Orchestrator.runStages(Seq(
+        Seq(
+          () => throw new IllegalStateException("first job fails"),
+          () => { Thread.sleep(300); siblingDone.set(true) }),
+        Seq(() => laterStage.set(true))))
+    }
+    assert(e.getMessage === "first job fails")
+    assert(siblingDone.get, "the stage ended before its sibling job did")
+    assert(!laterStage.get, "a later stage ran after a failed one")
+  }
+
   test("flows targeting the same destination stay ordered") {
     val spec = PipelineSpec.parse(
       """{"tables":[

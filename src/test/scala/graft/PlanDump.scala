@@ -143,8 +143,10 @@ object PlanDump {
               |at every scan, broadcast exchanges only on dimension/key-set
               |sides, partial+final HashAggregate pairs, equality-shaped joins
               |everywhere (no CartesianProduct / BroadcastNestedLoopJoin), and
-              |the engine's native codegen expressions (word_shingles,
-              |minhash_sig, lsh_bucket, fp_dot) sitting inside plain projects.
+              |the engine's native expressions sitting inside plain projects:
+              |row kernels as one static call each (`static_invoke(
+              |graft.functions.WordShingles.compute(…))`, likewise MinHashSig)
+              |and lsh_bucket and fp_dot with their own generated code.
               |Two sanctioned exceptions: n3_ann_ivf's centroid ASSIGNMENT is a
               |broadcast nested-loop join against the nCells(=16)-row centroid
               |set — K dots per vector is the inherent IVF assignment cost,

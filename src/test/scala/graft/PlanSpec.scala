@@ -80,8 +80,10 @@ class PlanSpec extends SparkSpec {
     val df = SparkEntry.queries("d2_minhash_lsh")(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("word_shingles"), s"fused shingles missing:\n$plan")
-    assert(plan.contains("minhash_sig"), s"fused signature missing:\n$plan")
+    assert(plan.contains("WordShingles.compute"),
+      s"fused shingles missing:\n$plan")
+    assert(plan.contains("MinHashSig.compute"),
+      s"fused signature missing:\n$plan")
     assert(plan.contains("*("), s"codegen missing around the sketch:\n$plan")
   }
 
@@ -182,12 +184,12 @@ class PlanSpec extends SparkSpec {
   }
 
   test("rolling hash expression participates in codegen") {
-    graft.functions.RollingHash.register(spark)
     val df = Tables.load(spark, sf, "documents")
       .select(expr("rolling_hash(text)").as("h"))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project [rolling_hash"),
+    assert(plan.contains("*(1) Project [static_invoke(" +
+        "graft.functions.RollingHash.hash"),
       s"rolling_hash fell out of codegen:\n$plan")
   }
 
@@ -716,7 +718,7 @@ class PlanSpec extends SparkSpec {
     val plan = planOf("d21_cdc_chunks")
     assert(!plan.contains("Join"), s"no join belongs here:\n" +
       plan.take(4000))
-    assert(plan.contains("cdc_chunks"),
+    assert(plan.contains("CdcChunks.compute"),
       s"native chunker must appear in the plan:\n${plan.take(4000)}")
   }
 

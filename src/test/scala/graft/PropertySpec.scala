@@ -89,7 +89,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("rolling_hash expression == reference arithmetic on arbitrary strings") {
-    RollingHash.register(spark)
     check(Prop.forAll(Gen.listOfN(8, Gen.asciiPrintableStr.map(_.take(30)))) {
       strs =>
         val viaExpr = strs.toDF("s")

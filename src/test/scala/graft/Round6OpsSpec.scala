@@ -70,7 +70,6 @@ class Round6OpsSpec extends SparkSpec {
     // strip_accents contract, probed directly)
     assert(UnicodeNorm.stripAccents("søß łódź") === "søß łodz")
     // codegen path agrees with the helper
-    UnicodeNorm.register(spark)
     val out = Seq((1L, nfd)).toDF("id", "t")
       .selectExpr("accent_strip(lower(nfc_normalize(t))) AS f")
       .collect()(0).getString(0)
@@ -330,7 +329,6 @@ class Round6OpsSpec extends SparkSpec {
     val unrelated = (1 to 300).map(i => ('a' + (i * 11) % 26).toChar).mkString
     val df = Seq((1L, base), (2L, nearDup), (3L, unrelated))
       .toDF("doc_id", "text")
-    graft.functions.DHash56.register(spark)
     val h = df.selectExpr("doc_id", "dhash56(text) AS h")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def dist(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)

@@ -53,7 +53,7 @@ class ZOrderSpec extends SparkSpec {
       .select(col("id"), expr("z_order(a, b)").as("z"))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("z_order"), s"expression missing:\n$plan")
+    assert(plan.contains("ZOrder2.interleave"), s"expression missing:\n$plan")
     assert(plan.contains("*(1) Project"), s"fell out of codegen:\n$plan")
   }
 }
